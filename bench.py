@@ -278,16 +278,8 @@ def main() -> None:
     # queries under Spark 4.1).  The warmed minimum is the reproducible
     # cost of the PLAN (what a capacity model needs); the cold first
     # run measures this JVM's compiler that minute
-    # with_global_rank's intermediate is an eager localCheckpoint
-    # whose blocks the ContextCleaner reclaims on GC (round 7 — no
-    # caller-owned registry anymore); release_rank_caches is kept as
-    # a compatibility no-op so this loop documents where the release
-    # USED to be load-bearing
-    from bitcoin_datawarehouse_spark.functions.ranking import (  # noqa: E402
-        release_rank_caches,
-    )
-    # Same discipline for the tracked kernel caches (packed shingle
-    # sets etc.): Spark's CacheManager dedups by logical plan, so two
+    # Tracked kernel caches (packed shingle sets etc.) are released
+    # between queries: Spark's CacheManager dedups by logical plan, so two
     # different queries sharing an identical intermediate would
     # otherwise make per-query numbers order-dependent (the second one
     # times a cache hit, not its plan) — measured at sf10:
@@ -334,7 +326,6 @@ def main() -> None:
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         warm_dt = time.time() - t0
-        release_rank_caches()
         release_tracked_caches()
         reps = 1 if warm_dt >= ADAPTIVE_CUTOFF_S else repeats
         best = None
@@ -343,7 +334,6 @@ def main() -> None:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             best = dt if best is None or dt < best else best
-            release_rank_caches()
             release_tracked_caches()
         timings[name] = round(best, 3)
 

@@ -15,7 +15,7 @@ Operators therefore register these caches here via
 memory (bench.py between queries, tools/check_oracle.py between
 oracle comparisons) call :func:`release_tracked_caches`.  Callers
 that WANT cross-query reuse (a notebook session) simply never
-release.  Companion of ``functions.ranking.release_rank_caches``.
+release.
 """
 
 from __future__ import annotations

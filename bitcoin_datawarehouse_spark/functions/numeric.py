@@ -96,8 +96,11 @@ def micro6(col: Column) -> Column:
     decimal-accumulation surface — while running in pure long
     arithmetic (measured ~2× the per-row aggregate throughput of the
     decimal sum on a 26M-row scoring join).  Only valid for columns
-    produced by ``ROUND(·, 6)``; overflow bound: |col| ≤ 9.2e12 per
-    row and Σ|k_i·w_i| ≤ 2⁶³ per group, far beyond any log-domain
+    produced by ``ROUND(·, 6)``.  Exactness needs ulp(col) < 10⁻⁶, i.e.
+    |col| < 2³³ ≈ 8.59e9 per row: above it neighbouring k·10⁻⁶ share a
+    double and k is lost (both sides of the boundary pinned by
+    ``test_micro6_exact_below_2_pow_33``).  Overflow bound:
+    Σ|k_i·w_i| ≤ 2⁶³ per group.  Both are far beyond any log-domain
     score."""
     return (col.cast(DEC) * F.lit(1_000_000)).cast("long")
 
@@ -115,12 +118,6 @@ def davg(col: Column, alias: str) -> Column:
     return str_round6(
         F.sum(col.cast(DEC)).cast("string").cast("double") / F.count(col)
     ).alias(alias)
-
-
-def dec_round2(col: Column, alias: str) -> Column:
-    """Expose an already-decimal expression (e.g. a windowed decimal
-    sum) as the engine-neutral 2-dp DOUBLE surface."""
-    return F.round(col, 2).cast("double").alias(alias)
 
 
 def SQL_DEC(expr: str) -> str:

@@ -34,19 +34,6 @@ _OFFSET = "_rk_offset"
 _TOTAL = "_rk_total"
 
 
-def release_rank_caches() -> int:
-    """Round-7 compatibility no-op.  :func:`with_global_rank` used to
-    park its load-bearing persist in a module-global registry that
-    callers had to remember to drain (bench, check_oracle, probes —
-    but never a library user, the r6 VERDICT nit).  The intermediate
-    is now an eager ``localCheckpoint``, whose blocks the
-    ContextCleaner drops automatically once the result plan is
-    garbage-collected — there is nothing left to release by hand
-    (pinned by test_global_rank_blocks_release_without_manual_call).
-    """
-    return 0
-
-
 def with_global_rank(
     df: DataFrame,
     order_cols: list[str],

@@ -63,6 +63,11 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark import registry as _registry
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    dim_ordered_dot_sq,
+    dim_ordered_norms,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
     IVF_N_CENTROIDS,
     IVF_NPROBE,
@@ -399,9 +404,6 @@ def similarity_chunk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import types as T
 
     from bitcoin_datawarehouse_spark.functions.numeric import str_round6
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
 
     idx, emb, queries = _build_chunk_index(spark, sf_dir)
     hits = idx.search(
@@ -414,9 +416,8 @@ def similarity_chunk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     qrows = sorted(queries.collect(), key=lambda r: r["query_id"])
     qids = np.array([int(r["query_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r["qe"]) for r in qrows], dtype=np.float64)
-    _, _, q_sq = dim_ordered_dot_sq(qmat[:0], qmat)
-    qn = np.sqrt(q_sq)
+    qmat = read_vectors(r["qe"] for r in qrows)
+    qn = dim_ordered_norms(qmat)
     qdoc = qids // CHUNK_VEC_MOD
 
     schema = T.StructType(
@@ -432,7 +433,7 @@ def similarity_chunk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pdf.empty:
                 continue
             cand = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cmat = np.array(list(pdf["e"]), dtype=np.float64)
+            cmat = read_vectors(pdf["e"])
             dot, cn, _ = dim_ordered_dot_sq(cmat, qmat)
             cos = dot / np.outer(np.sqrt(cn), qn)
             cdoc = cand // CHUNK_VEC_MOD

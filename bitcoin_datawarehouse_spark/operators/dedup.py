@@ -81,29 +81,6 @@ def tokens_col(text: Column) -> Column:
     )
 
 
-def shingles_col(tk: Column) -> Column:
-    """3-word shingles from a token array (empty when <3 tokens).
-
-    KEPT AS THE DOCUMENTED JVM BASELINE, not used in hot paths: the
-    higher-order-function transform here is interpreted (no codegen)
-    and measured 3-5x slower than the mapInPandas kernels that
-    replaced it — and projecting it through an extra select reopens
-    the CollapseProject quadratic trap described in doc_shingles.
-    """
-    make = F.transform(
-        F.sequence(F.lit(1), F.size(tk) - 2),
-        lambda i: F.concat_ws(
-            " ",
-            F.element_at(tk, i),
-            F.element_at(tk, i + 1),
-            F.element_at(tk, i + 2),
-        ),
-    )
-    return F.when(F.size(tk) >= 3, make).otherwise(
-        F.array().cast("array<string>")
-    )
-
-
 def doc_shingles(
     spark: SparkSession, sf_dir: str, docs_filter: Column | None = None
 ) -> DataFrame:

@@ -17,10 +17,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    cosine_row_blocks,
+    dim_ordered_dot_sq,
+    dim_ordered_norms,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
-    dim_ordered_dot_sq,
     dot_col,
     norm_col,
 )
@@ -150,12 +155,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
 
-    def _norms(mat: np.ndarray) -> np.ndarray:
-        n = np.zeros(mat.shape[0])
-        for j in range(mat.shape[1]):  # fold order identical to norm_col
-            n += mat[:, j] * mat[:, j]
-        return np.sqrt(n)
-
     def score_block_pair(pdf: pd.DataFrame) -> pd.DataFrame:
         a = pdf[pdf["role"] == 0]
         b = pdf[pdf["role"] == 1]
@@ -163,27 +162,31 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
         a_ids = a["vec_id"].to_numpy(dtype=np.int64)
         b_ids = b["vec_id"].to_numpy(dtype=np.int64)
-        a_mat = np.array(list(a["e"]), dtype=np.float64)
-        b_mat = np.array(list(b["e"]), dtype=np.float64)
-        a_nrm, b_nrm = _norms(a_mat), _norms(b_mat)
-        # dim-ordered accumulation, vectorized over the pair grid
-        acc = np.zeros((len(a_ids), len(b_ids)))
-        for j in range(a_mat.shape[1]):
-            acc += np.outer(a_mat[:, j], b_mat[:, j])
-        cosine = acc / np.outer(a_nrm, b_nrm)
-        mask = cosine >= COSINE_DUP_THRESHOLD
-        if pdf["pa"].iloc[0] == pdf["pb"].iloc[0]:
-            # diagonal block: both sides hold the same vectors, so each
-            # unordered pair appears twice in the grid — keep a < b
-            mask &= a_ids[:, None] < b_ids[None, :]
-        # off-diagonal blocks are disjoint: every grid cell is a distinct
-        # unordered pair; normalize id order on output (cosine is
-        # commutative, so min/max relabeling is bit-exact)
-        ai, bi = np.nonzero(mask)
-        lo = np.minimum(a_ids[ai], b_ids[bi])
-        hi = np.maximum(a_ids[ai], b_ids[bi])
+        a_mat, b_mat = read_vectors(a["e"]), read_vectors(b["e"])
+        diagonal = pdf["pa"].iloc[0] == pdf["pb"].iloc[0]
+        out_a, out_b, out_c = [], [], []
+        for s, cosine in cosine_row_blocks(
+            a_mat, dim_ordered_norms(a_mat), b_mat, dim_ordered_norms(b_mat)
+        ):
+            blk_ids = a_ids[s : s + len(cosine)]
+            mask = cosine >= COSINE_DUP_THRESHOLD
+            if diagonal:
+                # both sides hold the same vectors, so each unordered
+                # pair appears twice in the grid — keep a < b
+                mask &= blk_ids[:, None] < b_ids[None, :]
+            # off-diagonal blocks are disjoint: every grid cell is a
+            # distinct unordered pair; normalize id order on output
+            # (cosine is commutative, so min/max relabeling is exact)
+            ai, bi = np.nonzero(mask)
+            out_a.append(np.minimum(blk_ids[ai], b_ids[bi]))
+            out_b.append(np.maximum(blk_ids[ai], b_ids[bi]))
+            out_c.append(cosine[ai, bi])
         return pd.DataFrame(
-            {"vec_a": lo, "vec_b": hi, "cosine": cosine[ai, bi]}
+            {
+                "vec_a": np.concatenate(out_a),
+                "vec_b": np.concatenate(out_b),
+                "cosine": np.concatenate(out_c),
+            }
         )
 
     return fanned.groupBy("pa", "pb").applyInPandas(
@@ -374,7 +377,7 @@ def _lsh_dedup(
         ids = pdf["vec_id"].to_numpy(dtype=np.int64)
         order = np.lexsort((ids, buck))  # vec_a < vec_b within bucket
         buck, ids = buck[order], ids[order]
-        mat = np.array(list(pdf["e"]), dtype=np.float64)[order]
+        mat = read_vectors(pdf["e"])[order]
         starts = np.flatnonzero(np.r_[True, buck[1:] != buck[:-1]])
         ends = np.r_[starts[1:], len(buck)]
         out_a: list[np.ndarray] = []
@@ -386,19 +389,17 @@ def _lsh_dedup(
                 continue
             sub = mat[s:t]
             sid = ids[s:t]
-            nrm = np.zeros(n)
-            for j in range(sub.shape[1]):  # fold order = norm_col
-                nrm += sub[:, j] * sub[:, j]
-            nrm = np.sqrt(nrm)
-            acc = np.zeros((n, n))
-            for j in range(sub.shape[1]):  # dim-ordered, matches dot_col
-                acc += np.outer(sub[:, j], sub[:, j])
-            cos = acc / np.outer(nrm, nrm)
-            ai, bi = np.triu_indices(n, 1)
-            keep = cos[ai, bi] >= thr
-            out_a.append(sid[ai[keep]])
-            out_b.append(sid[bi[keep]])
-            out_c.append(cos[ai[keep], bi[keep]])
+            nrm = dim_ordered_norms(sub)
+            # upper triangle (vec_a < vec_b), row-blocked: a hot bucket
+            # never materializes its n×n grid
+            for r, cos in cosine_row_blocks(sub, nrm, sub, nrm):
+                rows = np.arange(r, r + len(cos))
+                ai, bi = np.nonzero(
+                    (cos >= thr) & (np.arange(n)[None, :] > rows[:, None])
+                )
+                out_a.append(sid[rows[ai]])
+                out_b.append(sid[bi])
+                out_c.append(cos[ai, bi])
         if not out_a:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cosine": []})
         return pd.DataFrame(
@@ -534,7 +535,7 @@ def collect_codebook(cent: DataFrame):
     frame, centroid_id-ascending — the ONE owner of the
     collect-to-numpy extraction every codebook consumer (assignment
     kernels, the persisted IVF index's search/probe path) shares, for
-    the same single-owner reason as ``dim_ordered_dot_sq``: the sort
+    the same single-owner reason as ``functions.vectors``: the sort
     key and dtype choices here are part of the tie-break contract."""
     import numpy as np
 
@@ -543,7 +544,7 @@ def collect_codebook(cent: DataFrame):
         key=lambda r: r["centroid_id"],
     )
     ids = np.array([r["centroid_id"] for r in rows], dtype=np.int64)
-    cmat = np.array([list(r["ce"]) for r in rows], dtype=np.float64)
+    cmat = read_vectors(r["ce"] for r in rows)
     cn = np.array([float(r["cn"]) for r in rows], dtype=np.float64)
     return ids, cmat, cn
 
@@ -557,7 +558,7 @@ def probe_assignments(
 
     The single owner of query-side probe selection (both
     ``similarity_ivf_topk`` and the persisted ``IvfIndex.search`` use
-    it): cosines accumulate through ``dim_ordered_dot_sq`` — bit-equal
+    it): cosines accumulate through ``functions.vectors`` — bit-equal
     to the JVM/DuckDB fold — and ties go to the smallest centroid_id,
     matching the SQL oracle's ROW_NUMBER pick exactly.  The query
     vector is carried through so the downstream rerank never needs a
@@ -568,10 +569,6 @@ def probe_assignments(
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
 
     schema = T.StructType(
         [
@@ -585,7 +582,7 @@ def probe_assignments(
         for pdf in batches:
             if pdf.empty:
                 continue
-            qmat = np.array(list(pdf["qe"]), dtype=np.float64)
+            qmat = read_vectors(pdf["qe"])
             dot, c_sq, q_sq = dim_ordered_dot_sq(cmat, qmat)
             cos = dot / np.outer(np.sqrt(c_sq), np.sqrt(q_sq))
             out_q, out_c, out_e = [], [], []
@@ -638,7 +635,7 @@ def _nearest_centroid_kernel_impl(
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
+            emat = read_vectors(pdf["e"])
             dot, e_sq, _ = dim_ordered_dot_sq(emat, cmat)
             cos = dot / np.outer(np.sqrt(e_sq), cn)
             best = np.argmax(cos, axis=1)  # first max → smallest id
@@ -818,7 +815,7 @@ def _ivf_topk_impl(
         qid = int(key[0])
         q = np.array(pdf["qe"].iloc[0], dtype=np.float64)
         cand_ids = pdf["cand_id"].to_numpy(dtype=np.int64)
-        cmat = np.array(list(pdf["ce2"]), dtype=np.float64)
+        cmat = read_vectors(pdf["ce2"])
         dot, cn, q_sq = dim_ordered_dot_sq(cmat, q[None, :])
         cos = dot[:, 0] / (np.sqrt(q_sq[0]) * np.sqrt(cn))
         order = np.lexsort((cand_ids, -cos))[:TOP_K]
@@ -957,10 +954,6 @@ def probe_ranks(queries: DataFrame, cids, cmat) -> DataFrame:
     import pandas as pd
     from pyspark.sql import types as T
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
     schema = T.StructType(
         [
             T.StructField("query_id", T.LongType()),
@@ -974,7 +967,7 @@ def probe_ranks(queries: DataFrame, cids, cmat) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            qmat = np.array(list(pdf["qe"]), dtype=np.float64)
+            qmat = read_vectors(pdf["qe"])
             dot, c_sq, q_sq = dim_ordered_dot_sq(cmat, qmat)
             cos = dot / np.outer(np.sqrt(c_sq), np.sqrt(q_sq))
             qid_arr = pdf["query_id"].to_numpy(dtype=np.int64)
@@ -1295,12 +1288,8 @@ def decontam_semantic_overlap(
     ev_rows = normed.filter(F.col("vec_id") % 97 == 0).collect()
     if not ev_rows:
         raise ValueError("empty eval slice (vec_id % 97) — no decontam set")
-    E = np.array([r["e"] for r in ev_rows], dtype=np.float64)
-    # dim-ordered norm fold, matching list_reduce(x*x) left-to-right
-    e_nrm = np.zeros(len(ev_rows), dtype=np.float64)
-    for d in range(E.shape[1]):
-        e_nrm += E[:, d] * E[:, d]
-    e_nrm = np.sqrt(e_nrm)
+    E = read_vectors(r["e"] for r in ev_rows)
+    e_nrm = dim_ordered_norms(E)
 
     schema = T.StructType(
         [
@@ -1316,21 +1305,19 @@ def decontam_semantic_overlap(
         for pdf in batches:
             if not len(pdf):
                 continue
-            C = np.array(list(pdf["e"]), dtype=np.float64)
+            C = read_vectors(pdf["e"])
             c_nrm = pdf["nrm"].to_numpy(dtype=np.float64)
-            # dimension-ordered accumulation across the corpus×eval
-            # grid: per pair this is the same left-to-right IEEE
-            # sequence as the oracle's list_reduce fold
-            acc = np.zeros((len(pdf), len(e_nrm)), dtype=np.float64)
-            for d in range(C.shape[1]):
-                acc += C[:, d : d + 1] * E[None, :, d][0]
-            cos = acc / (c_nrm[:, None] * e_nrm[None, :])
+            best = np.empty(len(C))
+            hits = np.empty(len(C), dtype=np.int64)
+            for s, cos in cosine_row_blocks(C, c_nrm, E, e_nrm):
+                best[s : s + len(cos)] = cos.max(axis=1)
+                hits[s : s + len(cos)] = (cos >= tau).sum(axis=1)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(),
-                    "max_eval_cosine": cos.max(axis=1),
-                    "n_eval_hits": (cos >= tau).sum(axis=1).astype("int64"),
-                    "contaminated": cos.max(axis=1) >= tau,
+                    "max_eval_cosine": best,
+                    "n_eval_hits": hits,
+                    "contaminated": best >= tau,
                 }
             )
 

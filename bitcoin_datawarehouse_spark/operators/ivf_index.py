@@ -50,6 +50,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    dim_ordered_dot_sq,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
     IVF_N_CENTROIDS,
     IVF_NPROBE,
@@ -62,7 +66,6 @@ from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
-    dim_ordered_dot_sq,
     norm_col,
 )
 from bitcoin_datawarehouse_spark.pipeline.catalog import Warehouse
@@ -602,7 +605,7 @@ class IvfIndex:
                 for qid, grp in pdf.groupby("query_id", sort=False):
                     q = np.array(grp["qe"].iloc[0], dtype=np.float64)
                     cand = grp["cand_id"].to_numpy(dtype=np.int64)
-                    gmat = np.array(list(grp["e"]), dtype=np.float64)
+                    gmat = read_vectors(grp["e"])
                     gdot, g_sq, qq = dim_ordered_dot_sq(gmat, q[None, :])
                     gcos = gdot[:, 0] / (np.sqrt(qq[0]) * np.sqrt(g_sq))
                     order = np.lexsort((cand, -gcos))[:top_k]

@@ -38,6 +38,10 @@ from bitcoin_datawarehouse_spark.functions.numeric import (
     SQL_STR_ROUND6,
     str_round6,
 )
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    dim_ordered_dot_sq,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
@@ -80,7 +84,7 @@ def _collect_subcodebooks(emb: DataFrame):
 
 def _sub_d2(xmat, cmat):
     """(len(x), len(c)) squared L2 grid accumulated DIMENSION BY
-    DIMENSION — the cross-engine IEEE contract (dim_ordered_dot_sq's
+    DIMENSION — the cross-engine IEEE contract (``functions.vectors``'
     argument, for the subtract-square fold)."""
     import numpy as np
 
@@ -111,7 +115,7 @@ def pq_encode(emb: DataFrame, cb) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
+            emat = read_vectors(pdf["e"])
             packed = np.zeros(len(emat), dtype=np.int64)
             for m in range(PQ_M):
                 sub = emat[:, m * PQ_SUB_DIM : (m + 1) * PQ_SUB_DIM]
@@ -334,9 +338,6 @@ def _assign_and_encode(
     from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
         collect_codebook,
     )
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
 
     # codebook pass-through (r12): a caller that already collected
     # this cent frame for its probe side hands the triple in, saving
@@ -356,7 +357,7 @@ def _assign_and_encode(
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
+            emat = read_vectors(pdf["e"])
             dot, e_sq, _ = dim_ordered_dot_sq(emat, cmat)
             cos = dot / np.outer(np.sqrt(e_sq), cn)
             best = np.argmax(cos, axis=1)  # first max → smallest id

@@ -20,7 +20,7 @@ SURVEY §2.12 north-star family).
 
 Engine-parity contract (same as every cosine kernel in the repo):
 all dot/norm accumulation runs dimension-by-dimension through
-``dim_ordered_dot_sq`` — bit-equal to the JVM ``zip_with`` fold and
+``functions.vectors`` — bit-equal to the JVM ``zip_with`` fold and
 DuckDB's ``list_reduce`` — so the keep/drop comparisons (pair cosine
 vs τ, centroid-cosine orderings) decide identically in the kernel
 and the SQL oracle.  The exposed ``cos_centroid`` goes through the
@@ -36,6 +36,11 @@ from pyspark.sql import functions as F
 from bitcoin_datawarehouse_spark.functions.numeric import (
     SQL_STR_ROUND6,
     str_round6,
+)
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    cosine_row_blocks,
+    dim_ordered_dot_sq,
+    read_vectors,
 )
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
     _SQL_COS,
@@ -87,10 +92,6 @@ def _cluster_flags(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
     schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),
@@ -100,59 +101,54 @@ def _cluster_flags(
         ]
     )
 
-    # per-task peak memory is capped by evaluating the pair grid in
-    # ROW BLOCKS of ~2^23 cells (a few hundred MB of temporaries)
-    # instead of materializing the full m×m grid: at sf100 the auto-K
-    # rule yields clusters of ~11k members, where a full grid is
-    # ~1 GB and its boolean/temp copies would stack several GB per
-    # concurrent task.  Blocking changes neither values nor order —
-    # each pair's dot still accumulates dimension-by-dimension.
-    BLOCK_CELLS = 1 << 23
-
     def cluster_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         cid = int(pdf["centroid_id"].iloc[0])
         ci = int(np.searchsorted(ids, cid))
         vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        emat = np.array(list(pdf["e"]), dtype=np.float64)
-        m = len(vids)
-        # member → own-centroid cosine; a_sq is the dim-ordered sum of
+        emat = read_vectors(pdf["e"])
+        # member → own-centroid cosine; e_sq is the dim-ordered sum of
         # squares, so nrm is bit-equal to norm_col's fold
         cdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[ci : ci + 1, :])
         nrm = np.sqrt(e_sq)
         cos_c = cdot[:, 0] / (nrm * cn[ci])
-        # j precedes i in the keep order iff (cos_c, vec_id) is
-        # strictly smaller — the paper keeps the member FARTHEST from
-        # the centroid, ties to the smallest vec_id.  (cos_c, vec_id)
-        # is unique per member, so the lexsort rank encodes the whole
-        # precedence relation and the block test is one comparison.
-        order = np.lexsort((vids, cos_c))
-        rank = np.empty(m, dtype=np.int64)
-        rank[order] = np.arange(m)
-        keep = np.ones(m, dtype=bool)
-        for s in range(0, m, max(1, BLOCK_CELLS // m)):
-            blk = emat[s : s + max(1, BLOCK_CELLS // m)]
-            b = blk.shape[0]
-            acc = np.zeros((b, m))
-            for j in range(emat.shape[1]):
-                acc += np.outer(blk[:, j], emat[:, j])
-            pair = acc / np.outer(nrm[s : s + b], nrm)
-            dup = pair >= tau
-            rows = np.arange(s, s + b)
-            dup[np.arange(b), rows] = False  # self-pairs
-            precede = rank[None, :] < rank[rows][:, None]
-            keep[rows] = ~np.any(dup & precede, axis=1)
         return pd.DataFrame(
             {
                 "vec_id": vids,
-                "centroid_id": np.full(m, cid, dtype=np.int64),
+                "centroid_id": np.full(len(vids), cid, dtype=np.int64),
                 "cos_c": cos_c,
-                "keep": keep,
+                "keep": _keep_farthest(emat, nrm, vids, cos_c, tau),
             }
         )
 
     return assigned.groupBy("centroid_id").applyInPandas(
         cluster_kernel, schema
     )
+
+
+def _keep_farthest(emat, nrm, vids, cos_c, tau: float):
+    """Keep flags for ONE cluster's members (rows of ``emat``): a
+    member is dropped iff some other member with a cosine ≥ ``tau`` to
+    it precedes it in the keep order.  j precedes i iff (cos_c,
+    vec_id) is strictly smaller — the paper keeps the member FARTHEST
+    from the centroid, ties to the smallest vec_id.  (cos_c, vec_id)
+    is unique per member, so the lexsort rank encodes the whole
+    precedence relation and the block test is one comparison.  The
+    pair grid is evaluated in row blocks (``cosine_row_blocks``), so
+    a cluster never materializes its m×m grid."""
+    import numpy as np
+
+    m = len(vids)
+    rank = np.empty(m, dtype=np.int64)
+    rank[np.lexsort((vids, cos_c))] = np.arange(m)
+    keep = np.ones(m, dtype=bool)
+    for s, pair in cosine_row_blocks(emat, nrm, emat, nrm):
+        b = len(pair)
+        rows = np.arange(s, s + b)
+        dup = pair >= tau
+        dup[np.arange(b), rows] = False  # self-pairs
+        precede = rank[None, :] < rank[rows][:, None]
+        keep[rows] = ~np.any(dup & precede, axis=1)
+    return keep
 
 
 def _semdedup_oracle(k_expr: str) -> str:
@@ -411,10 +407,6 @@ def _fine_to_coarse(cent: DataFrame, coarse: DataFrame, codebooks=None):
     both engines, so every vector lands in a non-empty cell."""
     import numpy as np
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
     # ``codebooks``: pre-collected ((ids, cmat, cn), (cids, ccmat,
     # ccn)) — the auto query's head TakeOrdered already shipped the
     # vectors, so the two per-frame collect jobs are skipped (r12)
@@ -433,65 +425,17 @@ def _fine_to_coarse(cent: DataFrame, coarse: DataFrame, codebooks=None):
     return ids, cmat, cn, occupied, ccmat[occupied], ccn[occupied], cell_fines
 
 
-def two_level_assign(
-    emb: DataFrame, cent: DataFrame, coarse: DataFrame, codebooks=None
-) -> DataFrame:
-    """(vec_id, centroid_id, e): hierarchical coarse→fine assignment —
-    the standalone surface (the registered query path fuses the fine
-    stage into the per-cell kernel instead, see
-    :func:`semdedup_flags_two_level`).  Cosines accumulate through
-    ``dim_ordered_dot_sq``; tie-breaks are first-max-on-id-ascending,
-    mirroring the oracle's ROW_NUMBER picks."""
+def _route_cells(e, occupied, occ_cc, occ_ccn):
+    """The occupied coarse cell of each vector in the column ``e``:
+    nearest by cosine, first max → smallest OCCUPIED coarse id (the
+    columns of ``occ_cc`` ascend) — the routing stage both two-level
+    variants share, so their cells agree row for row."""
     import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
-    ids, cmat, cn, occupied, occ_cc, occ_ccn, cell_fines = _fine_to_coarse(
-        cent, coarse, codebooks=codebooks
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("vec_id", T.LongType()),
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("e", T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def gen(batches):
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
-            xdot, x_sq, _ = dim_ordered_dot_sq(emat, occ_cc)
-            nrm = np.sqrt(x_sq)
-            xcos = xdot / np.outer(nrm, occ_ccn)
-            # first max → smallest OCCUPIED coarse id (columns ascend)
-            xcell = occupied[np.argmax(xcos, axis=1)]
-            out_cid = np.empty(len(emat), dtype=np.int64)
-            for ci in np.unique(xcell):
-                rows = np.where(xcell == ci)[0]
-                fidx = cell_fines[int(ci)]
-                d, _, _ = dim_ordered_dot_sq(emat[rows], cmat[fidx])
-                cos = d / np.outer(nrm[rows], cn[fidx])
-                out_cid[rows] = ids[fidx[np.argmax(cos, axis=1)]]
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "centroid_id": out_cid,
-                    "e": pdf["e"],
-                }
-            )
-
-    spark = emb.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    return (
-        emb.select("vec_id", "e").repartition(par).mapInPandas(gen, schema)
-    )
+    emat = read_vectors(e)
+    xdot, x_sq, _ = dim_ordered_dot_sq(emat, occ_cc)
+    xcos = xdot / np.outer(np.sqrt(x_sq), occ_ccn)
+    return occupied[np.argmax(xcos, axis=1)]
 
 
 def semdedup_flags_two_level_split(
@@ -523,10 +467,6 @@ def semdedup_flags_two_level_split(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
     ids, cmat, cn, occupied, occ_cc, occ_ccn, cell_fines = _fine_to_coarse(
         cent, coarse, codebooks=codebooks
     )
@@ -546,14 +486,13 @@ def semdedup_flags_two_level_split(
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
-            xdot, x_sq, _ = dim_ordered_dot_sq(emat, occ_cc)
-            xcos = xdot / np.outer(np.sqrt(x_sq), occ_ccn)
             vids = pdf["vec_id"].to_numpy(dtype=np.int64)
             yield pd.DataFrame(
                 {
                     "vec_id": vids,
-                    "cell_id": occupied[np.argmax(xcos, axis=1)],
+                    "cell_id": _route_cells(
+                        pdf["e"], occupied, occ_cc, occ_ccn
+                    ),
                     "salt": (vids % par).astype(np.int32),
                     "e": pdf["e"],
                 }
@@ -569,7 +508,7 @@ def semdedup_flags_two_level_split(
 
     def fine_assign(pdf: pd.DataFrame) -> pd.DataFrame:
         fidx = cell_fines[int(pdf["cell_id"].iloc[0])]
-        emat = np.array(list(pdf["e"]), dtype=np.float64)
+        emat = read_vectors(pdf["e"])
         fdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[fidx])
         fcos = fdot / np.outer(np.sqrt(e_sq), cn[fidx])
         fa = np.argmax(fcos, axis=1)  # first max → smallest fine id
@@ -630,10 +569,6 @@ def semdedup_flags_two_level(
     import pandas as pd
     from pyspark.sql import types as T
 
-    from bitcoin_datawarehouse_spark.operators.similarity import (
-        dim_ordered_dot_sq,
-    )
-
     ids, cmat, cn, occupied, occ_cc, occ_ccn, cell_fines = _fine_to_coarse(
         cent, coarse, codebooks=codebooks
     )
@@ -650,13 +585,12 @@ def semdedup_flags_two_level(
         for pdf in batches:
             if pdf.empty:
                 continue
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
-            xdot, x_sq, _ = dim_ordered_dot_sq(emat, occ_cc)
-            xcos = xdot / np.outer(np.sqrt(x_sq), occ_ccn)
             yield pd.DataFrame(
                 {
                     "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
-                    "cell_id": occupied[np.argmax(xcos, axis=1)],
+                    "cell_id": _route_cells(
+                        pdf["e"], occupied, occ_cc, occ_ccn
+                    ),
                     "e": pdf["e"],
                 }
             )
@@ -670,50 +604,29 @@ def semdedup_flags_two_level(
         ]
     )
 
-    BLOCK_CELLS = 1 << 23  # same per-task grid-memory cap as the flat path
-
     def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         ci = int(pdf["cell_id"].iloc[0])
         fidx = cell_fines[ci]
         vids = pdf["vec_id"].to_numpy(dtype=np.int64)
-        emat = np.array(list(pdf["e"]), dtype=np.float64)
+        emat = read_vectors(pdf["e"])
         # fine assignment: ONE (rows × cell fines) dim-ordered grid
         fdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[fidx])
         nrm = np.sqrt(e_sq)
         fcos = fdot / np.outer(nrm, cn[fidx])
         fa = np.argmax(fcos, axis=1)  # first max → smallest fine id
-        assigned = ids[fidx[fa]]
         # member → own-centroid cosine, straight from the grid column
         cos_c = fcos[np.arange(len(vids)), fa]
         out_v, out_c, out_cosc, out_keep = [], [], [], []
         for fj in np.unique(fa):
             rows = np.where(fa == fj)[0]
-            m = len(rows)
-            sub_cos_c = cos_c[rows]
-            svids = vids[rows]
-            semat = emat[rows]
-            snrm = nrm[rows]
-            order = np.lexsort((svids, sub_cos_c))
-            rank = np.empty(m, dtype=np.int64)
-            rank[order] = np.arange(m)
-            keep = np.ones(m, dtype=bool)
-            step = max(1, BLOCK_CELLS // m)
-            for s in range(0, m, step):
-                blk = semat[s : s + step]
-                b = blk.shape[0]
-                acc = np.zeros((b, m))
-                for j in range(semat.shape[1]):
-                    acc += np.outer(blk[:, j], semat[:, j])
-                pair = acc / np.outer(snrm[s : s + b], snrm)
-                dup = pair >= tau
-                rr = np.arange(s, s + b)
-                dup[np.arange(b), rr] = False  # self-pairs
-                precede = rank[None, :] < rank[rr][:, None]
-                keep[rr] = ~np.any(dup & precede, axis=1)
-            out_v.append(svids)
-            out_c.append(np.full(m, ids[fidx[fj]], dtype=np.int64))
-            out_cosc.append(sub_cos_c)
-            out_keep.append(keep)
+            out_v.append(vids[rows])
+            out_c.append(np.full(len(rows), ids[fidx[fj]], dtype=np.int64))
+            out_cosc.append(cos_c[rows])
+            out_keep.append(
+                _keep_farthest(
+                    emat[rows], nrm[rows], vids[rows], cos_c[rows], tau
+                )
+            )
         return pd.DataFrame(
             {
                 "vec_id": np.concatenate(out_v),

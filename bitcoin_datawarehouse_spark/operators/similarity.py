@@ -27,6 +27,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    dim_ordered_dot,
+    dim_ordered_dot_sq,
+    dim_ordered_norms,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.registry import query
 from bitcoin_datawarehouse_spark.tables import load_table
 
@@ -45,34 +51,6 @@ def _fold_sum(arr: Column) -> Column:
     """Left-to-right double fold — deterministic op sequence, mirrored
     by DuckDB's list_reduce."""
     return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dim_ordered_dot_sq(cmat, qmat):
-    """(dot n×m, c_sq n, q_sq m) accumulated DIMENSION BY DIMENSION —
-    the identical left-to-right IEEE sequence the JVM ``zip_with``
-    fold and DuckDB's ``list_reduce`` produce, so cosines built from
-    these terms are bit-equal to the SQL oracles'.
-
-    Every numpy cosine kernel in the repo (brute-force partial top-k,
-    IVF coarse assignment, per-query rerank) MUST accumulate through
-    this helper: the cross-engine parity contract lives in this loop
-    order, and a "faster" formulation (``cmat @ qmat.T`` / einsum)
-    changes summation order and silently breaks the value hash for
-    just that query.  The three accumulators are independent, so
-    fusing them into one pass is value-identical to separate loops.
-    """
-    import numpy as np
-
-    n = len(cmat)
-    m = len(qmat)
-    dot = np.zeros((n, m))
-    c_sq = np.zeros(n)
-    q_sq = np.zeros(m)
-    for j in range(cmat.shape[1]):
-        c_sq += cmat[:, j] * cmat[:, j]
-        q_sq += qmat[:, j] * qmat[:, j]
-        dot += np.outer(cmat[:, j], qmat[:, j])
-    return dot, c_sq, q_sq
 
 
 def dot_col(a: Column, b: Column) -> Column:
@@ -150,9 +128,8 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         key=lambda r: r["vec_id"],
     )
     qids = np.array([int(r["vec_id"]) for r in qrows], dtype=np.int64)
-    qmat = np.array([list(r["e"]) for r in qrows], dtype=np.float64)
-    _, _, q_sq = dim_ordered_dot_sq(qmat[:0], qmat)
-    qn = np.sqrt(q_sq)
+    qmat = read_vectors(r["e"] for r in qrows)
+    qn = dim_ordered_norms(qmat)
 
     schema = T.StructType(
         [
@@ -167,7 +144,7 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             if pdf.empty:
                 continue
             cand = pdf["vec_id"].to_numpy(dtype=np.int64)
-            cmat = np.array(list(pdf["e"]), dtype=np.float64)
+            cmat = read_vectors(pdf["e"])
             dot, cn, _ = dim_ordered_dot_sq(cmat, qmat)
             cos = dot / np.outer(np.sqrt(cn), qn)
             out_q, out_c, out_s = [], [], []
@@ -337,7 +314,7 @@ def lsh_bucket_assignments(
         for pdf in batches:
             if pdf.empty:
                 continue
-            mat = np.array(list(pdf["e"]), dtype=np.float64)
+            mat = read_vectors(pdf["e"])
             n, d = mat.shape
             if S is None or S.shape[1] != d:
                 S = np.array(
@@ -345,10 +322,8 @@ def lsh_bucket_assignments(
                      for j in range(nbits)],
                     dtype=np.float64,
                 )
-            acc = np.zeros((n, nbits))
-            for i in range(d):  # dim-ordered fold, matches list_reduce
-                acc += np.outer(mat[:, i], S[:, i])
-            pos = (acc > 0).astype(np.int64)
+            # dim-ordered fold, matches list_reduce
+            pos = (dim_ordered_dot(mat, S) > 0).astype(np.int64)
             ids = pdf["vec_id"].to_numpy(dtype=np.int64)
             frames = []
             for t in range(tables):

@@ -63,6 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.functions.cachereg import cache_tracked
+from bitcoin_datawarehouse_spark.functions.vectors import read_vectors
 from bitcoin_datawarehouse_spark.operators.curation import (
     gopher_keep_col,
     gopher_metrics_frame,
@@ -377,7 +378,7 @@ def run_curation_stream(
         )
 
         def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-            emat = np.array(list(pdf["e"]), dtype=np.float64)
+            emat = read_vectors(pdf["e"])
             nrm = np.sqrt((emat * emat).sum(axis=1))
             is_st = pdf["_st"].to_numpy(dtype=bool)
             ids = pdf["doc_id"].to_numpy(dtype=np.int64)

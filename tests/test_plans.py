@@ -543,7 +543,8 @@ def test_no_bare_cache_or_persist_outside_sanctioned_modules():
     harnesses can release it between queries (CacheManager plan-dedup
     otherwise makes per-query numbers order-dependent — measured 10×
     at sf10).  Sanctioned: cachereg itself, functions/ranking.py (its
-    persist has its own release_rank_caches registry), and tables.py
+    intermediate is an eager localCheckpoint the ContextCleaner
+    reclaims), and tables.py
     (the session table cache with its own uncache_tables registry)."""
     import re
     from pathlib import Path
@@ -589,6 +590,34 @@ def test_no_bare_crossjoin_outside_scalars():
     assert not offenders, (
         "bare .crossJoin() without an inline F.broadcast hint "
         "(use functions.scalars.scalar_cross):\n" + "\n".join(offenders)
+    )
+
+
+def test_vector_kernels_live_only_in_functions_vectors():
+    """Every oracle-bound numpy cosine is bit-equal to the SQL fold only
+    because it accumulates dimension by dimension, and
+    functions/vectors.py is the one owner of that loop and of the
+    vector-column reader.  A hand-rolled ``+= np.outer(`` fold or an
+    ``np.array(list(`` reader anywhere else in the package is a copy
+    that can drift from the contract (and, for pair grids, skip the
+    row-block memory cap)."""
+    import re
+    from pathlib import Path
+
+    pkg = Path(__file__).resolve().parents[1] / "bitcoin_datawarehouse_spark"
+    owner = pkg / "functions" / "vectors.py"
+    pat = re.compile(r"np\.array\(list\(|\+=\s*np\.outer\(")
+    offenders = []
+    for py in pkg.rglob("*.py"):
+        if py == owner:
+            continue
+        for i, line in enumerate(py.read_text().splitlines(), 1):
+            if pat.search(line.split("#", 1)[0]):
+                offenders.append(f"{py.relative_to(pkg)}:{i}: {line.strip()}")
+    assert not offenders, (
+        "vector reader / dim-ordered fold outside functions/vectors.py "
+        "(use read_vectors / dim_ordered_dot_sq / cosine_row_blocks):\n"
+        + "\n".join(offenders)
     )
 
 

@@ -563,6 +563,68 @@ def test_two_level_assignment_matches_independent_reference(spark):
     assert got == expected
 
 
+@pytest.mark.parametrize(
+    "n,m,d", [(5, 3, 4), (1, 3, 4), (2, 2, 4), (7, 3, 1), (9, 40, 3)]
+)
+def test_cosine_row_blocks_bit_equal_to_untiled_fold(monkeypatch, n, m, d):
+    """The tiler changes no cell: concatenating its row blocks gives
+    the bytes of the untiled dimension-ordered grid, on shapes whose
+    row count is not a multiple of the block rows (n=5 over 2-row
+    blocks), a single row, two rows, one column, and a b side wider
+    than the whole cap (1-row blocks)."""
+    import numpy as np
+
+    from bitcoin_datawarehouse_spark.functions import vectors
+
+    monkeypatch.setattr(vectors, "BLOCK_CELLS", 7)
+    rng = np.random.default_rng(n * 100 + m * 10 + d)
+    a, b = rng.normal(size=(n, d)), rng.normal(size=(m, d))
+    an = np.sqrt((a * a).sum(axis=1))
+    bn = np.sqrt((b * b).sum(axis=1))
+    ref = np.zeros((n, m))
+    for j in range(d):
+        ref += np.outer(a[:, j], b[:, j])
+    ref /= np.outer(an, bn)
+    blocks = list(vectors.cosine_row_blocks(a, an, b, bn))
+    assert [s for s, _ in blocks] == list(
+        range(0, n, max(1, 7 // m))
+    )
+    tiled = np.concatenate([c for _, c in blocks])
+    assert tiled.shape == (n, m)
+    assert tiled.tobytes() == ref.tobytes()
+
+
+def test_cosine_row_blocks_bound_a_hot_bucket(monkeypatch):
+    """A planted one-bucket pin: a 6 000-vector self-grid is 288 MB as
+    one n×n grid (the old LSH-bucket allocation).  Under a small cell
+    cap the tiler's tracemalloc peak stays a few MB while its blocks
+    still cover every row of the grid."""
+    import tracemalloc
+
+    import numpy as np
+
+    from bitcoin_datawarehouse_spark.functions import vectors
+
+    n = 6000
+    rng = np.random.default_rng(6000)
+    mat = rng.normal(size=(n, 4))
+    nrm = vectors.dim_ordered_norms(mat)
+    full_bytes = n * n * 8
+    monkeypatch.setattr(vectors, "BLOCK_CELLS", 1 << 16)
+    tracemalloc.start()
+    try:
+        covered = 0
+        for s, cos in vectors.cosine_row_blocks(mat, nrm, mat, nrm):
+            assert s == covered and cos.shape[1] == n
+            covered += len(cos)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert covered == n
+    assert full_bytes == 288_000_000
+    assert peak < full_bytes // 50, peak
+
+
 def test_two_level_split_variant_bit_equal_to_fused(spark):
     """The cap-regime 3-exchange variant (separate fine-assign and
     decision shuffles) must produce the IDENTICAL flag frame as the
@@ -1552,9 +1614,6 @@ def test_lm_quality_approx_mode_matches_exact_on_fixture(spark):
     lower bucket while NTILE splits it by doc_id rank) and well under
     the sketch accuracy, so the discrete percentile IS the NTILE
     boundary element."""
-    from bitcoin_datawarehouse_spark.functions.ranking import (
-        release_rank_caches,
-    )
     from bitcoin_datawarehouse_spark.operators.lm_quality import (
         text_lm_quality_buckets,
     )
@@ -1565,7 +1624,6 @@ def test_lm_quality_approx_mode_matches_exact_on_fixture(spark):
             spark, SF_SMALL, mode="exact"
         ).collect()
     }
-    release_rank_caches()
     approx = {
         r["doc_id"]: tuple(r)
         for r in text_lm_quality_buckets(
@@ -2857,17 +2915,10 @@ def test_equidepth_hist_is_equal_depth_with_monotone_edges(spark):
     from bitcoin_datawarehouse_spark.tables import load_table
     from tests.conftest import SF_SMALL
 
-    from bitcoin_datawarehouse_spark.functions.ranking import (
-        release_rank_caches,
+    rows = sorted(
+        profile_equidepth_hist(spark, SF_SMALL).collect(),
+        key=lambda r: r["bin"],
     )
-
-    try:
-        rows = sorted(
-            profile_equidepth_hist(spark, SF_SMALL).collect(),
-            key=lambda r: r["bin"],
-        )
-    finally:
-        release_rank_caches()
     n = load_table(spark, SF_SMALL, "orders").count()
     assert [r["bin"] for r in rows] == list(range(1, EQUIDEPTH_BINS + 1))
     sizes = [r["n_rows"] for r in rows]

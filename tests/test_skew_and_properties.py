@@ -503,6 +503,33 @@ def test_str_round6_matches_duckdb_exactly(spark, vals):
     assert got == want, (got, want, vals)
 
 
+def test_micro6_exact_below_2_pow_33(spark):
+    """micro6's documented bound, on Spark's own double→decimal cast:
+    every 6-dp value k·10⁻⁶ with |k·10⁻⁶| < 2³³ comes back as exactly
+    k (random draws, the run of k just under the edge, negatives),
+    while just above 2³³ — where ulp = 2⁻¹⁹ > 10⁻⁶ — consecutive k
+    collide on one double and some come back wrong."""
+    import random
+
+    from bitcoin_datawarehouse_spark.functions.numeric import micro6
+
+    def n_wrong(ks):
+        df = spark.createDataFrame(
+            [(k, float(f"{k}e-6")) for k in ks], "k long, d double"
+        )
+        return df.filter(
+            micro6(F.round(F.col("d"), 6)) != F.col("k")
+        ).count()
+
+    rng = random.Random(33)
+    lo, hi = 2**32 * 10**6, 2**33 * 10**6
+    below = [rng.randrange(lo, hi) for _ in range(5000)]
+    below += list(range(hi - 5000, hi))
+    below += [-k for k in below[:2000]]
+    assert n_wrong(below) == 0
+    assert n_wrong(list(range(hi, hi + 2000))) > 0
+
+
 # ---------------------------------------------------------------------------
 # ntile_bucket exactness at 2^53+ ranks (functions/ranking.py)
 # ---------------------------------------------------------------------------
@@ -580,7 +607,6 @@ def test_global_rank_splits_heavy_score_ties(spark):
 
     from bitcoin_datawarehouse_spark.functions.ranking import (
         ntile_bucket,
-        release_rank_caches,
         with_global_rank,
     )
 
@@ -612,7 +638,6 @@ def test_global_rank_splits_heavy_score_ties(spark):
             "b", ntile_bucket(F.col("rk"), F.col("tot"), 3)
         ).collect()
     }
-    release_rank_caches()
     w = W.orderBy("score", "doc_id")
     want = {
         r["doc_id"]: (r["rk"], r["b"])
@@ -630,14 +655,12 @@ def test_global_rank_blocks_release_without_manual_call(spark):
     queries must NOT accrete storage once its result frames are
     dropped — the localCheckpoint blocks are RDD-owned and the
     ContextCleaner reclaims them on garbage collection, with no
-    release protocol for library callers (release_rank_caches is a
-    compatibility no-op).  Cleanup is asynchronous (weak-reference
+    release protocol for library callers.  Cleanup is asynchronous (weak-reference
     queue), so the assertion polls under GC nudges."""
     import gc
     import time
 
     from bitcoin_datawarehouse_spark.functions.ranking import (
-        release_rank_caches,
         with_global_rank,
     )
 
@@ -660,7 +683,6 @@ def test_global_rank_blocks_release_without_manual_call(spark):
         assert r.count() == 50_000
         del r
         gc.collect()
-    assert release_rank_caches() == 0  # nothing registered anywhere
     deadline = time.time() + 60
     while time.time() < deadline:
         gc.collect()

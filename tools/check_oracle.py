@@ -98,15 +98,11 @@ def main() -> int:
     from bitcoin_datawarehouse_spark.functions.cachereg import (
         release_tracked_caches,
     )
-    from bitcoin_datawarehouse_spark.functions.ranking import (
-        release_rank_caches,
-    )
 
     run = {n: f for n, f in qmap.items() if not only or n in only}
     failures = []
     for name, fn in sorted(run.items()):
         release_tracked_caches()
-        release_rank_caches()
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)

@@ -30,9 +30,6 @@ from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
 from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
     release_tracked_caches,
 )
-from bitcoin_datawarehouse_spark.functions.ranking import (  # noqa: E402
-    release_rank_caches,
-)
 
 
 def main() -> int:
@@ -75,7 +72,6 @@ def main() -> int:
             df._jdf.queryExecution(), "formatted"
         )
         (out_dir / f"{name}_{args.suffix}.txt").write_text(txt)
-        release_rank_caches()
         release_tracked_caches()
         print(f"wrote {name}_{args.suffix}.txt", file=sys.stderr)
     return 0

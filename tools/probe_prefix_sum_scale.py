@@ -35,7 +35,6 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from bitcoin_datawarehouse_spark.functions.ranking import (  # noqa: E402
-    release_rank_caches,
     with_global_prefix_sum,
 )
 from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
@@ -92,7 +91,6 @@ def main() -> int:
             total_alias="_tot",
         )
         df.write.format("noop").mode("overwrite").save()
-        release_rank_caches()
         # the scan's eager localCheckpoint blocks are RDD-owned and
         # reclaimed by the ContextCleaner only once the py4j reference
         # dies (CLAUDE.md) — drop it explicitly or run 2 measures the

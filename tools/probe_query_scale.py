@@ -27,9 +27,6 @@ from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
 from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
     release_tracked_caches,
 )
-from bitcoin_datawarehouse_spark.functions.ranking import (  # noqa: E402
-    release_rank_caches,
-)
 
 
 def main() -> int:
@@ -43,7 +40,6 @@ def main() -> int:
 
     # warm codegen/JIT/Arrow against the first (smallest) dir
     fn(spark, dirs[0]).write.format("noop").mode("overwrite").save()
-    release_rank_caches()
     release_tracked_caches()
 
     for d in dirs:
@@ -54,10 +50,8 @@ def main() -> int:
             df = fn(spark, d)
             df.write.format("noop").mode("overwrite").save()
             runs.append(round(time.time() - t0, 1))
-            release_rank_caches()
             release_tracked_caches()
         rows = fn(spark, d).count()
-        release_rank_caches()
         release_tracked_caches()
         print(
             json.dumps(

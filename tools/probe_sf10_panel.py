@@ -34,9 +34,6 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
     release_tracked_caches,
 )
-from bitcoin_datawarehouse_spark.functions.ranking import (  # noqa: E402
-    release_rank_caches,
-)
 from bitcoin_datawarehouse_spark.registry import (  # noqa: E402
     QUERIES,
     load_all_operators,
@@ -125,7 +122,6 @@ def main() -> int:
     QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    release_rank_caches()
     release_tracked_caches()
 
     timings: dict[str, float] = {}
@@ -139,7 +135,6 @@ def main() -> int:
         t0 = time.time()
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         warm = time.time() - t0
-        release_rank_caches()
         release_tracked_caches()
         reps = 1 if warm >= ADAPTIVE_CUTOFF_S else 2
         best = None
@@ -148,7 +143,6 @@ def main() -> int:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             dt = time.time() - t0
             best = dt if best is None or dt < best else best
-            release_rank_caches()
             release_tracked_caches()
         timings[name] = round(best, 2)
         print(f"{name}: {timings[name]}s (warm {warm:.2f}s)", file=sys.stderr)
