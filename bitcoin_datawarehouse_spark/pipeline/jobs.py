@@ -16,13 +16,17 @@ sentinel; a single ``run_job`` composing fetch→transform→load; and
 ``error_message``/status actually recorded on failure (the reference
 declares the column but never writes it).
 
-The control table is a small parquet managed read-modify-overwrite —
-metadata-scale data (one row per job), so driver-side mutation is
-correct; the *data* path stays fully distributed.
+The control table is a small parquet ledger (one row per job), so
+driver-side mutation is correct; the *data* path stays fully
+distributed.  A run reads the ledger once (``tables_to_sync``) and
+holds its rows; each start/end/fail mark edits the held rows and
+overwrites the table from them — one write, no re-read.  The job's
+row count is the one the load observed on its own write.
 """
 
 from __future__ import annotations
 
+import datetime as dt
 import enum
 import logging
 import traceback
@@ -31,6 +35,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession, functions as F
 
+from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 from bitcoin_datawarehouse_spark.pipeline.catalog import Warehouse
 from bitcoin_datawarehouse_spark.pipeline.loader import Loader
 from bitcoin_datawarehouse_spark.pipeline.source import fetch_as_df
@@ -49,6 +54,10 @@ JOB_TABLE = "etl_job"
 STATUS_RUNNING = -1
 STATUS_DONE = 1
 STATUS_FAILED = 2  # extension: the reference never records failure
+
+#: "the current instant" in a control-row update (a sentinel object, so
+#: no value a caller passes — an error text included — can mean it)
+NOW = object()
 
 
 class LoadStrategy(enum.Enum):
@@ -96,6 +105,9 @@ class JobControl:
     def __init__(self, spark: SparkSession, wh: Warehouse) -> None:
         self.spark = spark
         self.wh = wh
+        #: (schema, rows) of the whole ledger, held from
+        #: ``tables_to_sync`` until ``release`` (the length of a run)
+        self._held: tuple[Any, list[dict[str, Any]]] | None = None
 
     def seed(self, rows: list[dict[str, Any]]) -> None:
         """Seed the registry (reference load_metadata.ipynb: CSV →
@@ -105,52 +117,58 @@ class JobControl:
         # infer differently, e.g. None-bearing ints to float); runs
         # once per deployment, so the slice tax is irrelevant
         df = self.spark.createDataFrame(rows)  # type: ignore[arg-type]
+        self._seed_df(df)
+
+    def seed_from_csv(self, csv_path: str) -> None:
+        self._seed_df(self.spark.read.csv(csv_path, header=True, inferSchema=True))
+
+    def _seed_df(self, df) -> None:
+        self._held = None
         df = _ensure_ledger_columns(with_audit_stamp(lowercase_columns(df)))
         self.wh.write_atomic(df, ETL_SCHEMA, JOB_TABLE, coalesce=1)
 
-    def seed_from_csv(self, csv_path: str) -> None:
-        df = self.spark.read.csv(csv_path, header=True, inferSchema=True)
-        df = _ensure_ledger_columns(with_audit_stamp(lowercase_columns(df)))
-        self.wh.write_atomic(df, ETL_SCHEMA, JOB_TABLE, coalesce=1)
+    def _read_ledger(self) -> tuple[Any, list[dict[str, Any]]]:
+        df = _ensure_ledger_columns(self.wh.read(ETL_SCHEMA, JOB_TABLE))
+        return df.schema, [r.asDict() for r in df.collect()]
 
     def tables_to_sync(self, select: list[str] | None = None):
         """Active-job scan (reference pull_raw/utils.py:18-63) with the
-        CLI ``--select`` subsetting (reference arguments.py:26-33)."""
-        rows = (
-            self.wh.read(ETL_SCHEMA, JOB_TABLE)
-            .filter(F.col("active") == 1)
-            .collect()
-        )
-        out = [r.asDict() for r in rows]
+        CLI ``--select`` subsetting (reference arguments.py:26-33).
+        The ledger it reads is held for the start/end/fail marks that
+        follow, until :meth:`release`."""
+        self._held = self._read_ledger()
+        out = [dict(r) for r in self._held[1] if r["active"] == 1]
         if select:
             out = [r for r in out if r["job_name"] in select]
         return out
 
+    def release(self) -> None:
+        """Drop the held ledger; a later mark re-reads the table."""
+        self._held = None
+
     def _update_job(self, job_name: str, **sets: Any) -> None:
-        df = self.wh.read(ETL_SCHEMA, JOB_TABLE)
-        cond = F.col("job_name") == job_name
-        for col, val in sets.items():
-            if val == "NOW()":
-                df = df.withColumn(
-                    col, F.when(cond, F.current_timestamp()).otherwise(F.col(col))
-                )
-            else:
-                df = df.withColumn(
-                    col, F.when(cond, F.lit(val)).otherwise(F.col(col))
-                )
+        """Set ``sets`` on ``job_name``'s row and overwrite the ledger
+        (``NOW`` → the driver clock's current instant)."""
+        schema, rows = self._held or self._read_ledger()
+        now = dt.datetime.now(dt.timezone.utc)
+        for r in rows:
+            if r["job_name"] == job_name:
+                r.update({c: now if v is NOW else v for c, v in sets.items()})
+        names = schema.fieldNames()
+        df = local_rows_df(self.spark, [[r[c] for c in names] for r in rows], schema)
         self.wh.write_atomic(df, ETL_SCHEMA, JOB_TABLE, coalesce=1)
 
     def start_job(self, job_name: str) -> None:
         """status=-1, start_ts=NOW() (reference utils.py:80-85)."""
-        self._update_job(job_name, status=STATUS_RUNNING, start_ts="NOW()")
+        self._update_job(job_name, status=STATUS_RUNNING, start_ts=NOW)
 
     def end_job(self, job_name: str) -> None:
         """status=1, end_ts=NOW() (reference utils.py:120-125)."""
-        self._update_job(job_name, status=STATUS_DONE, end_ts="NOW()")
+        self._update_job(job_name, status=STATUS_DONE, end_ts=NOW)
 
     def fail_job(self, job_name: str, error: str) -> None:
         self._update_job(
-            job_name, status=STATUS_FAILED, end_ts="NOW()", error_message=error[:2000]
+            job_name, status=STATUS_FAILED, end_ts=NOW, error_message=error[:2000]
         )
 
     def job_status(self, job_name: str) -> dict[str, Any] | None:
@@ -267,10 +285,9 @@ class Pipeline:
                 df = spec.apply(df)
             df = with_audit_column(df)
             if effective is LoadStrategy.FULL_REFRESH or not keys:
-                loader.load_full_refresh(df)
+                n = loader.load_full_refresh(df)
             else:
-                loader.load_incremental(df, keys)
-            n = loader.get_record_count()
+                n = loader.load_incremental(df, keys)
             self.control.end_job(name)
             return JobResult(name, True, n)
         except Exception as e:  # noqa: BLE001 — continue-on-error per table
@@ -289,18 +306,22 @@ class Pipeline:
         continues (``:173-177``).
 
         The whole run holds the warehouse's advisory lock: the control
-        table and targets are mutated read-modify-overwrite, so two
-        concurrent pipelines over one warehouse would corrupt each
-        other (the reference leaned on Postgres transactions here).
+        table is overwritten from the ledger read at the start of the
+        run and the targets are merged by overwrite, so two concurrent
+        pipelines over one warehouse would corrupt each other (the
+        reference leaned on Postgres transactions here).
         """
         with self.wh.lock("pipeline"):
-            results = []
-            for job in self.control.tables_to_sync(select):
-                results.append(
-                    self.run_job(
-                        job, strategy, incremental_column, incremental_value
+            try:
+                results = []
+                for job in self.control.tables_to_sync(select):
+                    results.append(
+                        self.run_job(
+                            job, strategy, incremental_column, incremental_value
+                        )
                     )
-                )
+            finally:
+                self.control.release()
             self._maybe_refresh_models(results)
             return results
 

@@ -8,7 +8,10 @@ Reference parity (SURVEY.md §2.2): this is the Spark rebuild of
   (``:165-270``) → dropDuplicates + left-anti join + unionByName;
 * delete         — ``DELETE … WHERE`` (``:272-294``) → filter-rewrite;
 * MAX probe      — watermark read (``:296-318``);
-* COUNT probe    — post-load verification (``:320-339``).
+* COUNT probe    — post-load verification (``:320-339``); a load
+  returns the count of rows it wrote, observed on the write itself
+  (``DataFrame.observe``), so the pipeline needs no second scan.
+  ``get_record_count`` stays as a standalone probe.
 
 Merge semantics preserved exactly: new row wins on key conflict and
 ALL non-key columns are replaced (``pg_loader.py:246-259``).  Two
@@ -30,7 +33,7 @@ from __future__ import annotations
 
 from contextlib import contextmanager
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.window import Window
 
 from bitcoin_datawarehouse_spark.functions.cachereg import cache_tracked
@@ -50,9 +53,21 @@ class Loader:
         self.table = table
 
     # -- strategies --------------------------------------------------------
-    def load_full_refresh(self, df: DataFrame) -> None:
-        """Atomic replace (reference truncate+insert, pg_loader.py:126-163)."""
-        self.wh.write_atomic(df, self.schema, self.table)
+    def load_full_refresh(self, df: DataFrame) -> int:
+        """Atomic replace (reference truncate+insert, pg_loader.py:126-163);
+        returns the rows written."""
+        return self._write_counted(df)
+
+    def _write_counted(self, df: DataFrame) -> int:
+        """Replace the target with ``df``; the row count is observed on
+        the write, so it costs no extra Spark job."""
+        obs = Observation()
+        self.wh.write_atomic(
+            df.observe(obs, F.count(F.lit(1)).alias("rows")),
+            self.schema,
+            self.table,
+        )
+        return obs.get["rows"]
 
     def load_incremental(
         self,
@@ -60,8 +75,9 @@ class Loader:
         unique_keys: list[str] | None,
         order_col: str | None = None,
         strict_schema: bool = False,
-    ) -> None:
-        """Merge ``df`` into the target on ``unique_keys``.
+    ) -> int:
+        """Merge ``df`` into the target on ``unique_keys``; returns the
+        target's row count after the merge (the rows written).
 
         Reference dispatch preserved (pg_loader.py:165-217): no keys →
         full refresh; target missing → create+insert; else upsert.
@@ -72,8 +88,7 @@ class Loader:
         the default tolerates drift by null-filling either side.
         """
         if not unique_keys:
-            self.load_full_refresh(df)
-            return
+            return self.load_full_refresh(df)
         # cache the deduped batch: it is read three times below (count
         # probe, anti-join build side, union) and its upstream plan may
         # be arbitrarily expensive — without the cache every merge
@@ -81,8 +96,7 @@ class Loader:
         batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
         try:
             if not self.wh.table_exists(self.schema, self.table):
-                self.wh.write_atomic(batch, self.schema, self.table)
-                return
+                return self._write_counted(batch)
             old = self.wh.read(self.schema, self.table)
             if strict_schema and set(batch.columns) != set(old.columns):
                 raise ValueError(
@@ -95,7 +109,7 @@ class Loader:
             else:
                 keep = old.join(batch, unique_keys, "left_anti")
             merged = keep.unionByName(batch, allowMissingColumns=True)
-            self.wh.write_atomic(merged, self.schema, self.table)
+            return self._write_counted(merged)
         finally:
             batch.unpersist()
 

@@ -21,6 +21,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
+
 #: the reference's fallback order, pg_loader.py:59-68
 _LATTICE = ["boolean", "long", "double", "timestamp", "string"]
 
@@ -80,11 +82,13 @@ def rows_to_df(
 ) -> DataFrame:
     """Materialize source rows as a typed DataFrame (reference
     ``dune_to_pg_worker.py:93 pd.DataFrame(data)``) with explicit
-    schema — no sampling inference."""
+    schema — no sampling inference.  Built through Arrow
+    (``local_rows_df``): a JVM LocalTableScan, no Python-worker task
+    per batch; naive datetimes stay driver-local wall time."""
     schema = infer_schema(rows)
     coerced = []
     for r in rows:
-        out = {}
+        out = []
         for f in schema.fields:
             v = r.get(f.name)
             if v is not None:
@@ -94,11 +98,11 @@ def rows_to_df(
                     isinstance(v, dt.date) and not isinstance(v, dt.datetime)
                 ):
                     # bare dates infer as Timestamp (the reference's
-                    # datetime64 bucket); createDataFrame rejects
-                    # date-for-timestamp, so widen to midnight
+                    # datetime64 bucket); a timestamp column rejects
+                    # date values, so widen to midnight
                     v = dt.datetime(v.year, v.month, v.day)
                 elif isinstance(f.dataType, T.StringType) and not isinstance(v, str):
                     v = str(v)
-            out[f.name] = v
+            out.append(v)
         coerced.append(out)
-    return spark.createDataFrame(coerced, schema)
+    return local_rows_df(spark, coerced, schema)
