@@ -287,6 +287,8 @@ def refresh_manifest_sidecar(
     import shutil
     import uuid
 
+    from bitcoin_datawarehouse_spark.pipeline.catalog import swap_in
+
     base = pathlib.Path(table_path)
     for stale in base.glob("manifest.__tmp_*"):
         shutil.rmtree(stale)
@@ -295,13 +297,7 @@ def refresh_manifest_sidecar(
     fresh = sync_manifest(spark, old, str(base / "data"), cols)
     tmp = base / f"manifest.__tmp_{uuid.uuid4().hex[:8]}"
     fresh.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    if mdir.exists():
-        aside = base / f"manifest.__tmp_old_{uuid.uuid4().hex[:8]}"
-        mdir.rename(aside)
-        tmp.rename(mdir)
-        shutil.rmtree(aside)
-    else:
-        tmp.rename(mdir)
+    swap_in(tmp, mdir)
     return spark.read.parquet(str(mdir))
 
 

@@ -8,7 +8,8 @@ prefix of their Morton z-key (functions/zorder.py), so
 
 * **ingest** appends only to the blocks the batch touches (cost ∝
   batch, file creation bounded by touched blocks × shuffle partitions
-  — the `_write_day_partitioned` clustering rule applied to z-space);
+  — the clustered-partitionBy rule of `Warehouse.overwrite_partitions`
+  applied to z-space);
 * **compact** rewrites only blocks whose file count crossed a
   threshold, sorting by the full z-key inside the block (tight
   row-group stats); untouched block directories stay byte-identical;
@@ -33,10 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.zorder import bucketize, zorder2
-
-from bitcoin_datawarehouse_spark.pipeline.loader import (
+from bitcoin_datawarehouse_spark.pipeline.catalog import (
     dynamic_partition_overwrite,
 )
+
 Z_TOTAL_BITS = 32  # two 16-bit interleaved dimensions
 
 
@@ -103,7 +104,7 @@ class ZOrderedTable:
 
     # -- verbs ---------------------------------------------------------------
     def _write(self, df: DataFrame, mode: str) -> None:
-        # cluster on the partition value (the _write_day_partitioned
+        # cluster on the partition value (the overwrite_partitions
         # rule: one file per touched block per write, not per task);
         # the secondary zblock sort keeps the writer on ONE open file
         # at a time when several blocks hash to a task, with zkey
@@ -134,8 +135,8 @@ class ZOrderedTable:
         threshold, as ONE Spark job: read only the over-threshold
         block directories (basePath keeps ``zblock``), re-cluster, and
         land them under dynamic partition-overwrite — exactly the
-        loader's partition-scoped merge mechanics
-        (pipeline/loader.py:184): the repartition shuffle fully
+        mechanics of ``Warehouse.overwrite_partitions`` (keeping its
+        own zkey sort inside each block): the repartition shuffle fully
         materializes the old files' rows before the commit replaces
         their directories, and dynamic mode leaves every other block's
         files untouched bytes.  (A per-block job loop was 50× slower

@@ -9,13 +9,21 @@ reference's dynamic ``CREATE TABLE`` from DataFrame dtypes — reference
 ``pg_loader.py:70-105`` — needs no separate DDL step here).
 
 Atomicity: every table write goes to a fresh ``{table}.__tmp_*``
-sibling directory and is swapped in with a rename, so readers never
-observe a half-written or truncated table (strictly stronger than the
-reference's TRUNCATE→INSERT window, ``pg_loader.py:144-155``).  On
-HDFS and POSIX filesystems the rename is atomic; on object stores the
-swap degrades to copy-then-delete and a manifest-based table format
-(Delta/Iceberg) is the production answer — the loader API is format-
-agnostic so that swap is a storage-layer change only.
+sibling directory and is swapped in with a rename (:func:`swap_in`),
+so readers never observe a half-written or truncated table (strictly
+stronger than the reference's TRUNCATE→INSERT window,
+``pg_loader.py:144-155``).  On HDFS and POSIX filesystems the rename
+is atomic; on object stores the swap degrades to copy-then-delete and
+a manifest-based table format (Delta/Iceberg) is the production
+answer — the loader API is format-agnostic so that swap is a
+storage-layer change only.
+
+Physical layout is decided here and nowhere else: the Hive
+``col=value`` partition directories (:meth:`Warehouse.partition_dirs`,
+:meth:`Warehouse.read_partitions`), the clustered partition rewrite
+(:meth:`Warehouse.overwrite_partitions`) and the directory swap.  The
+loader and the materialized views call these; they hold merge and
+view semantics only.
 """
 
 from __future__ import annotations
@@ -26,8 +34,43 @@ import shutil
 import time
 import uuid
 from pathlib import Path
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
+
+#: Hive's sentinel directory for NULL partition values
+_HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
+
+
+@contextlib.contextmanager
+def dynamic_partition_overwrite(spark: SparkSession):
+    """Scoped ``partitionOverwriteMode=dynamic`` (save/set/restore).
+
+    The one copy of the conf juggling, shared by
+    :meth:`Warehouse.overwrite_partitions` and z-table compaction."""
+    prev = spark.conf.get(
+        "spark.sql.sources.partitionOverwriteMode", "STATIC"
+    )
+    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    try:
+        yield
+    finally:
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+
+
+def swap_in(tmp: Path, final: Path) -> None:
+    """Replace directory ``final`` with the finished ``tmp``: rename
+    the live directory aside, rename ``tmp`` into place, delete the
+    old one.  The gap without a ``final`` is one rename to the next,
+    and the aside name ``{final}.__tmp_old_*`` matches the
+    ``{final}.__tmp_*`` pattern a crashed swap's leftovers are swept
+    by."""
+    aside = final.with_name(f"{final.name}.__tmp_old_{uuid.uuid4().hex[:8]}")
+    if final.exists():
+        final.rename(aside)
+    tmp.rename(final)
+    if aside.exists():
+        shutil.rmtree(aside)
 
 
 def hadoop_fs(spark: SparkSession, loc: str):
@@ -64,13 +107,14 @@ def _bucket_clustered(
     A bucketed ``saveAsTable`` never shuffles: every write task opens
     one file per bucket value it holds, so an unclustered input
     produces up to tasks×buckets files (the same failure mode as an
-    unclustered partitionBy write — CLAUDE.md's
-    ``_write_day_partitioned`` rule).  Repartitioning on the bucket
-    columns into P = k·n_buckets partitions aligns tasks with buckets
-    exactly — ``pmod(h, n_buckets) = pmod(pmod(h, k·n_buckets),
-    n_buckets)`` for Spark's Murmur3 column hash, so each task holds
-    rows of precisely ONE bucket and writes k files per bucket total
-    (k = 1 when the cluster's parallelism fits inside n_buckets).
+    unclustered partitionBy write, see
+    :meth:`Warehouse.overwrite_partitions`).  Repartitioning on
+    the bucket columns into P = k·n_buckets partitions aligns tasks
+    with buckets exactly — ``pmod(h, n_buckets) = pmod(pmod(h,
+    k·n_buckets), n_buckets)`` for Spark's Murmur3 column hash, so
+    each task holds rows of precisely ONE bucket and writes k files
+    per bucket total (k = 1 when the cluster's parallelism fits
+    inside n_buckets).
     Guide §6: output files in the fewer-and-larger regime; probed-
     bucket searches open k files instead of ~tasks per bucket."""
     par = df.sparkSession.sparkContext.defaultParallelism
@@ -182,8 +226,8 @@ class Warehouse:
         p = self.root / schema
         if not p.exists():
             return []
-        # exclude in-flight tmp/old swap directories (named
-        # ``{table}.__tmp_*`` / ``{table}.__old_*`` by write_atomic)
+        # exclude in-flight swap directories (``{table}.__tmp_*``,
+        # see swap_in) and snapshots/sidecars (all ``.__`` names)
         return sorted(
             d.name
             for d in p.iterdir()
@@ -313,16 +357,16 @@ class Warehouse:
         the only Spark action; the swap is metadata-only.  ``coalesce``
         caps output files for small control tables (avoids the
         many-tiny-files problem when a 32-way shuffle writes 5 rows).
-        ``partition_by`` preserves a Hive-partitioned layout through
-        the swap (used by :meth:`compact` on partitioned tables).
+        ``partition_by`` writes a Hive-partitioned layout through the
+        swap, hash-clustered on the partition columns (into
+        ``coalesce`` partitions when given) so each partition value
+        lands in one task → one file per partition directory.
         """
         self.create_schema(schema)
         final = self.table_path(schema, table)
         tmp = final.with_name(f"{table}.__tmp_{uuid.uuid4().hex[:8]}")
-        if coalesce and partition_by:
-            # hash-cluster on the partition cols so each partition value
-            # lands in one task → one file per partition directory
-            df = df.repartition(coalesce, *partition_by)
+        if partition_by:
+            df = df.repartition(*([coalesce] if coalesce else []), *partition_by)
         elif coalesce:
             df = df.coalesce(coalesce)
         writer = df.write.mode("overwrite")
@@ -337,12 +381,7 @@ class Warehouse:
             tmp.rename(final)
             self._prune_versions(schema, table)
         else:
-            old = final.with_name(f"{table}.__old_{uuid.uuid4().hex[:8]}")
-            if final.exists():
-                final.rename(old)
-            tmp.rename(final)
-            if old.exists():
-                shutil.rmtree(old)
+            swap_in(tmp, final)
 
     # -- snapshots ---------------------------------------------------------
     def _version_dirs(self, schema: str, table: str) -> list[Path]:
@@ -478,22 +517,105 @@ class Warehouse:
         )
         return len(files), after
 
-    # -- storage layout (the 100 TB levers) --------------------------------
-    def write_partitioned(
-        self, df: DataFrame, schema: str, table: str, partition_cols: list[str]
-    ) -> None:
-        """Hive-style partitioned layout (``.../col=value/``): queries
-        filtering on the partition columns prune whole directories at
-        planning time — the at-rest form of the reference's
-        date-parameterized extraction (every fact table in a 100 TB
-        warehouse is date-partitioned)."""
-        self.create_schema(schema)
-        (
-            df.write.mode("overwrite")
-            .partitionBy(*partition_cols)
-            .parquet(str(self.table_path(schema, table)))
+    # -- Hive partition layout --------------------------------------------
+    def partition_dirs(
+        self, schema: str, table: str, col: str, values
+    ) -> list[str]:
+        """The existing ``col=value`` directories of ``schema.table``
+        for ``values`` (sorted; values without a directory skipped).
+
+        A NAMES-ONLY scandir of the table root (no per-file stat, no
+        Spark file index) matched on the UNESCAPED directory name,
+        never ``path / f"{col}={v}"`` string building: Spark
+        %XX-escapes special characters in partition directory names
+        (a ':' in a timestamp-like value, a literal '%'), and a
+        raw-value probe would treat such an EXISTING partition as new
+        — a dynamic overwrite then drops its history.  Hive escaping
+        is exactly %XX on the reserved set, so ``unquote`` inverts
+        it; a value's key is its string form, NULL's is Hive's
+        sentinel."""
+        root = self.table_path(schema, table)
+        if not root.exists():
+            return []
+        prefix = f"{col}="
+        with os.scandir(root) as entries:
+            by_value = {
+                unquote(e.name[len(prefix):]): e.path
+                for e in entries
+                if e.is_dir() and e.name.startswith(prefix)
+            }
+        keys = {_HIVE_NULL_PART if v is None else str(v) for v in values}
+        return sorted(by_value[k] for k in keys if k in by_value)
+
+    def read_partitions(
+        self,
+        schema: str,
+        table: str,
+        col: str,
+        values,
+        session: SparkSession | None = None,
+    ) -> DataFrame | None:
+        """Read ONLY the partition directories of ``values``, or None
+        when none of them exists (genuinely-new values have no
+        directory yet).
+
+        A read of the table root builds a file index over EVERY
+        partition before pruning — a ~2 s constant on local NVMe
+        (tools/probe_loader_scale.py), minutes at 100k partitions —
+        so touched-partition reads list only their own directories;
+        ``basePath`` keeps ``col`` in the schema.  ``session`` builds
+        the frame on the caller's session (a foreachBatch
+        micro-batch's), default the warehouse's."""
+        dirs = self.partition_dirs(schema, table, col, values)
+        if not dirs:
+            return None
+        return (
+            (session or self.spark)
+            .read.option("basePath", str(self.table_path(schema, table)))
+            .parquet(*dirs)
         )
 
+    def overwrite_partitions(
+        self,
+        df: DataFrame,
+        schema: str,
+        table: str,
+        col: str,
+        max_records_per_file: int | None = None,
+    ) -> None:
+        """Replace exactly the ``col=value`` directories present in
+        ``df`` (dynamic partition overwrite; every other partition's
+        files stay byte-untouched), creating the table if missing.
+
+        The partitionBy write is CLUSTERED on ``col`` first.  Without
+        the repartition every upstream task holds rows of ~every
+        partition value and opens one file per (task, value): a
+        2 499-day fact seeded through 32 tasks wrote ~80 000 files
+        (measured — tools/probe_loader_scale.py; 169 s at 600 k rows,
+        dominated by file creation, and every later reader pays the
+        open/footer cost again).  Hash-clustering by the partition
+        value writes ONE file per touched partition per non-empty
+        shuffle partition — 2 499 files for the same seed, 21× faster
+        (8 s).
+
+        ``max_records_per_file`` is the hot-partition lever: one
+        cluster key means ONE task writes a whole partition, and at
+        100 TB a hot day can exceed a single comfortable file.  The
+        writer option rolls a task's output to a new file every N
+        records — no extra shuffle, and a salted repartition would be
+        undone by AQE coalescing anyway (measured: the salted variant
+        still wrote one file per day at fixture scale).
+        """
+        self.create_schema(schema)
+        writer = df.repartition(col).write.mode("overwrite")
+        if max_records_per_file:
+            writer = writer.option("maxRecordsPerFile", max_records_per_file)
+        with dynamic_partition_overwrite(df.sparkSession):
+            writer.partitionBy(col).parquet(
+                str(self.table_path(schema, table))
+            )
+
+    # -- storage layout (the 100 TB levers) --------------------------------
     def write_zordered(
         self,
         df: DataFrame,
@@ -582,8 +704,7 @@ class Warehouse:
         writes up to tasks×buckets files (measured: 329–351 files per
         128-bucket IVF lists table at sf0.1; ≤128 after).  The same
         partitionBy rule CLAUDE.md records for
-        ``loader._write_day_partitioned``, applied to the bucket
-        layout.
+        :meth:`overwrite_partitions`, applied to the bucket layout.
 
         Registered through the session catalog (``saveAsTable``) since
         bucketing metadata lives there; the files land under
@@ -781,12 +902,7 @@ class Warehouse:
             .sortWithinPartitions("__shard", key_col)
             .foreachPartition(write_partition)
         )
-        old = final.with_name(f"{table}.__old_{uuid.uuid4().hex[:8]}")
-        if final.exists():
-            final.rename(old)
-        tmp.rename(final)
-        if old.exists():
-            shutil.rmtree(old)
+        swap_in(tmp, final)
 
     def read_tar_shards(
         self, schema: str, table: str, meta_schema: str | None = None

@@ -124,7 +124,7 @@ class JobControl:
 
     def _seed_df(self, df) -> None:
         self._held = None
-        df = _ensure_ledger_columns(with_audit_stamp(lowercase_columns(df)))
+        df = _ensure_ledger_columns(with_audit_column(lowercase_columns(df)))
         self.wh.write_atomic(df, ETL_SCHEMA, JOB_TABLE, coalesce=1)
 
     def _read_ledger(self) -> tuple[Any, list[dict[str, Any]]]:
@@ -178,10 +178,6 @@ class JobControl:
             .collect()
         )
         return rows[0].asDict() if rows else None
-
-
-def with_audit_stamp(df):
-    return with_audit_column(df)
 
 
 #: run-ledger columns the reference declares in etl_job.csv:1 (typed

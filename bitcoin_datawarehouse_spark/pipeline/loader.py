@@ -27,11 +27,13 @@ Scale notes: the merge reads the target once and writes it once —
 one shuffle on the merge keys for the anti-join (broadcast when the
 batch is small, which is the common incremental case — batches are
 "rows since last watermark").  No driver-side row handling anywhere.
+
+This module holds merge semantics only.  Where rows physically land
+(partition directories, the clustered partition rewrite, the
+tmp→live directory swap) is :class:`Warehouse`'s decision.
 """
 
 from __future__ import annotations
-
-from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 from pyspark.sql.window import Window
@@ -104,12 +106,7 @@ class Loader:
                     f"(batch-only: {sorted(set(batch.columns) - set(old.columns))}, "
                     f"target-only: {sorted(set(old.columns) - set(batch.columns))})"
                 )
-            if batch.count() <= BROADCAST_BATCH_MAX_ROWS:
-                keep = old.join(F.broadcast(batch), unique_keys, "left_anti")
-            else:
-                keep = old.join(batch, unique_keys, "left_anti")
-            merged = keep.unionByName(batch, allowMissingColumns=True)
-            return self._write_counted(merged)
+            return self._write_counted(_upsert(old, batch, unique_keys))
         finally:
             batch.unpersist()
 
@@ -131,11 +128,11 @@ class Loader:
         O(history).  Mechanics:
 
         1. the batch's distinct partition values prune the target read
-           (PartitionFilters — only touched directories are scanned);
+           to the touched directories (:meth:`Warehouse.read_partitions`);
         2. the usual key-dedupe + anti-join + union on that slice;
-        3. a partitionBy write under dynamic partition-overwrite mode
-           replaces exactly the touched partition directories, leaving
-           every other partition's files physically untouched.
+        3. :meth:`Warehouse.overwrite_partitions` replaces exactly the
+           touched partition directories, leaving every other
+           partition's files physically untouched.
 
         The merge key set should include (or functionally determine)
         the partition column — a row whose partition value CHANGES
@@ -148,59 +145,22 @@ class Loader:
         """
         batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
         try:
-            path = str(self.wh.table_path(self.schema, self.table))
-            if not self.wh.table_exists_partitioned(self.schema, self.table):
-                self.wh.create_schema(self.schema)
-                _write_day_partitioned(
-                    batch, partition_col, path, max_records_per_file
+            merged = batch
+            if self.wh.table_exists_partitioned(self.schema, self.table):
+                touched = [
+                    r[0]
+                    for r in batch.select(partition_col).distinct().collect()
+                ]
+                old_slice = self.wh.read_partitions(
+                    self.schema, self.table, partition_col, touched,
+                    session=batch.sparkSession,
                 )
-                return
-            touched = [
-                r[0] for r in batch.select(partition_col).distinct().collect()
-            ]
-            # read ONLY the touched partition directories: a Spark
-            # read of the table root builds a file index over EVERY
-            # partition before pruning.  On the local-NVMe probe that
-            # listing was a ~2 s constant (tools/probe_loader_scale.py
-            # — NOT the dominant term there; a probe artifact was),
-            # but at 100k partitions it is the difference between
-            # seconds and minutes, so the pruned read stays.  The dir
-            # lookup goes through a NAMES-ONLY scandir + Hive
-            # unescape, never `tp / f"{col}={v}"` string building —
-            # Spark %XX-escapes special chars in partition dir names
-            # (a ':' in a timestamp day, a literal '%'), and a raw-
-            # value existence probe would silently treat such an
-            # EXISTING partition as new, dropping its history in the
-            # dynamic overwrite (review-caught).  basePath keeps the
-            # partition column in the schema; genuinely-new partition
-            # values have no dir yet and merge as pure inserts.
-            tp = self.wh.table_path(self.schema, self.table)
-            spark = batch.sparkSession
-            by_value = _partition_dirs(tp, partition_col)
-            existing = [
-                by_value[_part_key(v)]
-                for v in touched
-                if _part_key(v) in by_value
-            ]
-            if existing:
-                old_slice = spark.read.option(
-                    "basePath", str(tp)
-                ).parquet(*existing)
-            else:
-                old_slice = batch.limit(0)
-            # same broadcast guard as load_incremental: a backfill-sized
-            # batch must not be force-broadcast into the anti-join
-            if batch.count() <= BROADCAST_BATCH_MAX_ROWS:
-                keep = old_slice.join(
-                    F.broadcast(batch), unique_keys, "left_anti"
-                )
-            else:
-                keep = old_slice.join(batch, unique_keys, "left_anti")
-            merged = keep.unionByName(batch, allowMissingColumns=True)
-            with dynamic_partition_overwrite(merged.sparkSession):
-                _write_day_partitioned(
-                    merged, partition_col, path, max_records_per_file
-                )
+                if old_slice is not None:
+                    merged = _upsert(old_slice, batch, unique_keys)
+            self.wh.overwrite_partitions(
+                merged, self.schema, self.table, partition_col,
+                max_records_per_file,
+            )
         finally:
             batch.unpersist()
 
@@ -254,7 +214,7 @@ class Loader:
             if not self.wh.table_exists(self.schema, self.table):
                 self.wh.write_atomic(stamped, self.schema, self.table)
                 return
-            # the target feeds FIVE subtrees of this load (max_from
+            # the target feeds FIVE subtrees of this load (time-order
             # probe + hist/closed/kept_cur/new_keys legs of the one
             # write action) — cache it or each re-scans the parquet
             # (CLAUDE.md shared-subgraph rule; review-caught: the
@@ -263,16 +223,16 @@ class Loader:
             old.count()  # eager fill — concurrent subtrees of one action
             cur = old.filter(F.col("is_current"))
             hist = old.filter(~F.col("is_current"))
-            max_from = cur.agg(F.max("valid_from")).first()[0]
-            import datetime as _dt
-
-            if max_from is not None and _dt.datetime.fromisoformat(
-                batch_ts
-            ) < max_from.replace(tzinfo=None):
+            # compared inside Spark, in the session zone that also
+            # parses batch_ts — a collected valid_from is driver-local
+            late = cur.filter(F.col("valid_from") > ts).agg(
+                F.max("valid_from")
+            ).first()[0]
+            if late is not None:
                 raise ValueError(
                     f"{self.schema}.{self.table}: SCD2 batch_ts "
                     f"{batch_ts!r} precedes current valid_from "
-                    f"{max_from} — loads must be time-ordered"
+                    f"{late} — loads must be time-ordered"
                 )
             cmp_cols = compare_cols or [
                 c for c in batch.columns if c not in unique_keys
@@ -363,81 +323,16 @@ class Loader:
         return self.wh.read(self.schema, self.table).count()
 
 
-#: Hive's sentinel directory for NULL partition values
-_HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
-
-
-@contextmanager
-def dynamic_partition_overwrite(spark):
-    """Scoped ``partitionOverwriteMode=dynamic`` (save/set/restore).
-
-    One shared implementation for every partition-scoped rewrite site
-    (loader merge, matview bucket/day maintenance, z-table compaction)
-    so the conf juggling cannot drift between copies."""
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-
-
-def _part_key(value) -> str:
-    """The comparable string form of a partition value (Spark writes
-    the value's string form, Hive-escaped, into the dir name; NULL
-    becomes the Hive sentinel)."""
-    return _HIVE_NULL_PART if value is None else str(value)
-
-
-def _partition_dirs(table_path, partition_col: str) -> dict[str, str]:
-    """{unescaped partition value -> partition dir path} from a
-    NAMES-ONLY scandir of the table root (no per-file stat, no Spark
-    file index).  Dir names unescape with urllib's unquote — Hive
-    escaping is exactly %XX on the reserved character set."""
-    import os
-    from urllib.parse import unquote
-
-    prefix = f"{partition_col}="
-    out: dict[str, str] = {}
-    if not table_path.exists():
-        return out
-    for entry in os.scandir(table_path):
-        if entry.is_dir() and entry.name.startswith(prefix):
-            out[unquote(entry.name[len(prefix):])] = entry.path
-    return out
-
-
-def _write_day_partitioned(
-    df: DataFrame,
-    partition_col: str,
-    path: str,
-    max_records_per_file: int | None = None,
-) -> None:
-    """PartitionBy write CLUSTERED on the partition column first.
-
-    Without the repartition every upstream task holds rows of ~every
-    partition value and opens one file per (task, value): a 2 499-day
-    fact seeded through 32 tasks wrote ~80 000 files (measured —
-    tools/probe_loader_scale.py; 169 s at 600 k rows, dominated by
-    file creation, and every later reader pays the open/footer cost
-    again).  Hash-clustering by the partition value writes ONE file
-    per touched partition per non-empty shuffle partition — 2 499
-    files for the same seed, 21× faster (8 s).
-
-    ``max_records_per_file`` is the hot-partition lever: one cluster
-    key means ONE task writes a whole partition, and at 100 TB a hot
-    day can exceed a single comfortable file.  The writer option
-    rolls a task's output to a new file every N records — no extra
-    shuffle, and a salted repartition would be undone by AQE
-    coalescing anyway (measured: the salted variant still wrote one
-    file per day at fixture scale).
-    """
-    writer = df.repartition(F.col(partition_col)).write.mode("overwrite")
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.partitionBy(partition_col).parquet(path)
+def _upsert(old: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
+    """Last write wins: the ``old`` rows whose key the batch does not
+    carry, plus the whole batch (missing columns null-filled either
+    side).  The batch is broadcast into the anti-join unless it is
+    backfill-sized."""
+    if batch.count() <= BROADCAST_BATCH_MAX_ROWS:
+        keep = old.join(F.broadcast(batch), keys, "left_anti")
+    else:
+        keep = old.join(batch, keys, "left_anti")
+    return keep.unionByName(batch, allowMissingColumns=True)
 
 
 def _all_equal(cols: list[str]) -> Column:

@@ -33,7 +33,9 @@ FLAT state swaps ride :meth:`Warehouse.write_atomic`, so readers see
 old-state-or-new-state, never a torn view, and snapshots/rollback work
 on the view like any other table.  The PARTITIONED layouts
 (``state_buckets`` / ``state_partition_key``) trade that for
-partition-local rewrites — the same contract as
+partition-local rewrites through the catalog's partition verbs
+(``Warehouse.read_partitions`` / ``overwrite_partitions``, which
+also serve the partitioned-base reads) — the same contract as
 ``Loader.load_incremental_partitioned``: a reader concurrent with
 maintenance can see bucket A post-batch and bucket B pre-batch, and
 there is no whole-view snapshot to roll back to.  Run partitioned
@@ -63,13 +65,7 @@ from bitcoin_datawarehouse_spark.functions.numeric import DEC, str_round6
 from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 
 from .catalog import Warehouse
-from .loader import (
-    BROADCAST_BATCH_MAX_ROWS,
-    _part_key,
-    _partition_dirs,
-    _write_day_partitioned,
-    dynamic_partition_overwrite,
-)
+from .loader import BROADCAST_BATCH_MAX_ROWS
 
 _NROWS = "__nrows"
 _BUCKET = "__bucket"
@@ -449,31 +445,22 @@ class MaterializedAggView:
         return self.rebucket()
 
     def _overwrite_buckets(self, content: DataFrame) -> None:
-        """Dynamic partition overwrite: replace exactly the bucket
-        directories present in ``content``, byte-untouched elsewhere."""
-        path = str(self.wh.table_path(self.schema, self.table))
-        with dynamic_partition_overwrite(content.sparkSession):
-            _write_day_partitioned(content, self._part, path)
+        """Replace exactly the bucket directories present in
+        ``content``, byte-untouched elsewhere."""
+        self.wh.overwrite_partitions(
+            content, self.schema, self.table, self._part
+        )
 
     def _touched_bucket_slice(
         self, sess, touched_keys: DataFrame
     ) -> tuple[DataFrame | None, list[int]]:
         """(old rows of the touched buckets, touched bucket ids).
-        The bucket list prunes the state read to its directories —
-        names-only scandir, same discipline as the partitioned merge."""
+        The bucket list prunes the state read to its directories."""
         tk = self._partify(touched_keys)
         buckets = [r[0] for r in tk.select(self._part).distinct().collect()]
-        tp = self.wh.table_path(self.schema, self.table)
-        by_value = _partition_dirs(tp, self._part)
-        existing = [
-            by_value[_part_key(b)]
-            for b in buckets
-            if _part_key(b) in by_value
-        ]
-        if existing:
-            old = sess.read.option("basePath", str(tp)).parquet(*existing)
-        else:
-            old = None
+        old = self.wh.read_partitions(
+            self.schema, self.table, self._part, buckets, session=sess
+        )
         return old, buckets
 
     def _drop_emptied_buckets(
@@ -482,11 +469,11 @@ class MaterializedAggView:
         """Dynamic partition overwrite cannot write an EMPTY partition:
         a touched bucket whose every group vanished keeps its stale
         directory after the write — drop those dirs explicitly."""
-        tp = self.wh.table_path(self.schema, self.table)
-        by_value = _partition_dirs(tp, self._part)
-        for b in touched_buckets:
-            if b not in content_buckets and _part_key(b) in by_value:
-                shutil.rmtree(by_value[_part_key(b)], ignore_errors=True)
+        emptied = [b for b in touched_buckets if b not in content_buckets]
+        for d in self.wh.partition_dirs(
+            self.schema, self.table, self._part, emptied
+        ):
+            shutil.rmtree(d, ignore_errors=True)
 
     def exists(self) -> bool:
         if self._part:
@@ -637,27 +624,6 @@ class MaterializedAggView:
         self.apply_changes(base_after, deleted_rows.select(*self.keys))
 
     # -- partitioned-base maintenance ---------------------------------------
-    def _pruned_base_read(
-        self, sess, base_schema: str, base_table: str,
-        partition_col: str, touched: DataFrame,
-    ) -> DataFrame:
-        """Read ONLY the base partition directories the touched groups
-        live in (names-only scandir + basePath — the
-        load_incremental_partitioned discipline).  Sound because the
-        base is partitioned by a view GROUP KEY: every row of a
-        touched group sits in that group's partition directory."""
-        vals = [
-            r[0] for r in touched.select(partition_col).distinct().collect()
-        ]
-        tp = self.wh.table_path(base_schema, base_table)
-        by_value = _partition_dirs(tp, partition_col)
-        dirs = [
-            by_value[_part_key(v)] for v in vals if _part_key(v) in by_value
-        ]
-        if not dirs:
-            return None
-        return sess.read.option("basePath", str(tp)).parquet(*dirs)
-
     def apply_changes_partitioned(
         self,
         base_schema: str,
@@ -704,8 +670,10 @@ class MaterializedAggView:
         touched = cache_tracked(touched_keys.select(*self.keys).distinct())
         try:
             touched.count()
-            pruned = self._pruned_base_read(
-                sess, base_schema, base_table, base_partition_col, touched
+            vals = touched.select(base_partition_col).distinct().collect()
+            pruned = self.wh.read_partitions(
+                base_schema, base_table, base_partition_col,
+                [r[0] for r in vals],
             )
             if pruned is None:
                 # every touched partition vanished: recompute finds no
@@ -738,13 +706,13 @@ class MaterializedAggView:
         partition column, so a replaced row lives in the batch's own
         partitions and the pruned read sees it.
         """
-        sess = self.wh.spark
         touched = batch.select(*self.keys)
         before = None
         if self.wh.table_exists_partitioned(base_schema, base_table):
-            before = self._pruned_base_read(
-                sess, base_schema, base_table, base_partition_col,
-                batch.select(*self.keys),
+            vals = touched.select(base_partition_col).distinct().collect()
+            before = self.wh.read_partitions(
+                base_schema, base_table, base_partition_col,
+                [r[0] for r in vals],
             )
         if before is not None:
             replaced = before.join(
@@ -919,19 +887,12 @@ def sync_views_through_partitioned_merge(
     vals = touched[0].select(partition_col)
     for t in touched[1:]:
         vals = vals.unionByName(t.select(partition_col))
-    by_value = _partition_dirs(tp, partition_col)
-    dirs = sorted(
-        {
-            by_value[_part_key(r[0])]
-            for r in vals.distinct().collect()
-            if _part_key(r[0]) in by_value
-        }
+    pruned = loader.wh.read_partitions(
+        loader.schema, loader.table, partition_col,
+        [r[0] for r in vals.distinct().collect()], session=sess,
     )
-    pruned = (
-        sess.read.option("basePath", str(tp)).parquet(*dirs)
-        if dirs
-        else full_base.limit(0)
-    )
+    if pruned is None:
+        pruned = full_base.limit(0)
     _apply_views_one_pass(pruned, full_base, views, touched)
 
 

@@ -12,6 +12,7 @@ polling source state machine (timeout / failure).
 from __future__ import annotations
 
 import datetime as dt
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -157,6 +158,42 @@ def test_scd2_history_change_new_null_replay_and_slices(spark, wh):
         r["valid_from"] <= dt.datetime(2024, 1, 15)
         for r in ld.as_of("2024-01-15").collect()
     )
+
+
+@pytest.mark.parametrize(
+    "zone, first_ts, second_ts, refused",
+    [
+        # replaying the current batch_ts is a no-op on a driver whose
+        # wall clock runs ahead of UTC
+        ("Asia/Tokyo", "2024-01-02 00:00", "2024-01-02 00:00", False),
+        # a batch four hours older than the current version is refused
+        # on a driver whose wall clock runs behind UTC
+        ("America/New_York", "2024-01-02 00:00", "2024-01-01 20:00", True),
+    ],
+)
+def test_scd2_time_order_guard_ignores_driver_zone(
+    spark, wh, monkeypatch, zone, first_ts, second_ts, refused
+):
+    """batch_ts and valid_from are compared in the session zone (UTC)
+    that parses batch_ts, whatever the driver's local zone is."""
+    monkeypatch.setenv("TZ", zone)
+    time.tzset()
+    try:
+        ld = Loader(wh, "dim", "tz")
+        ld.load_scd2(
+            rows_df(spark, [{"id": 1, "seg": "A"}]), ["id"], batch_ts=first_ts
+        )
+        again = rows_df(spark, [{"id": 1, "seg": "B" if refused else "A"}])
+        if refused:
+            with pytest.raises(ValueError, match="time-ordered"):
+                ld.load_scd2(again, ["id"], batch_ts=second_ts)
+        else:
+            ld.load_scd2(again, ["id"], batch_ts=second_ts)
+        rows = wh.read("dim", "tz").collect()
+        assert [(r["seg"], r["is_current"]) for r in rows] == [("A", True)]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_incremental_intra_batch_dupes_resolved(spark, wh):
@@ -749,6 +786,31 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
         assert got[10 * i + 1]["v"] == 1.0  # pre-existing row survived
         assert got[10 * i + 7]["v"] == 7.0
         assert got[10 * i]["part"] == p
+
+    # the matview read paths resolve the same escaped directories: a
+    # state_partition_key view over the escaped key, maintained through
+    # the partitioned merge (pruned base reads before and after the
+    # merge, touched-state read, partition overwrite of the state)
+    from bitcoin_datawarehouse_spark.pipeline.matview import (
+        MaterializedAggView,
+        Measure,
+        sync_views_through_partitioned_merge,
+    )
+
+    view = MaterializedAggView(
+        wh, "mv", "esc_roll", ["part"],
+        [Measure("total", "sum", "v"), Measure("n", "count", None)],
+        state_partition_key="part",
+    )
+    base = Loader(wh, "bitcoin", "esc_mv")
+    for rows in (seed, batch):
+        sync_views_through_partitioned_merge(
+            base, [view], rows_df(spark, rows), ["id"], "part"
+        )
+    names = os.listdir(wh.table_path("mv", "esc_roll"))
+    assert any("%3A" in n for n in names), names
+    rolled = {r["part"]: (r["total"], r["n"]) for r in view.read().collect()}
+    assert rolled == {p: (99.0 + 1.0 + 2.0 + 7.0, 4) for p in weird}
 
 
 def test_partitioned_write_hot_partition_split(spark, wh):

@@ -621,6 +621,57 @@ def test_vector_kernels_live_only_in_functions_vectors():
     )
 
 
+def test_physical_layout_lives_only_in_catalog():
+    """pipeline/catalog.py is the one owner of the warehouse's physical
+    layout.  The dynamic partition-overwrite conf and the ``basePath``
+    partition read appear nowhere else in the package, and nothing
+    reaches for partition helpers in the loader, which holds merge
+    semantics only.  One sanctioned exception: ZOrderedTable's own
+    z-block reads (operators/ztable.py), whose block directories live
+    under the z-table's path, not under a warehouse table."""
+    import re
+    from pathlib import Path
+
+    from bitcoin_datawarehouse_spark.pipeline import loader
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = root / "bitcoin_datawarehouse_spark"
+    owner = pkg / "pipeline" / "catalog.py"
+    rules = [
+        (re.compile(r"partitionOverwriteMode"), {owner}),
+        (
+            re.compile(r"option\(\s*[\"']basePath[\"']"),
+            {owner, pkg / "operators" / "ztable.py"},
+        ),
+    ]
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        code = "\n".join(
+            line.split("#", 1)[0] for line in py.read_text().splitlines()
+        )
+        for pat, allowed in rules:
+            if py in allowed:
+                continue
+            for m in pat.finditer(code):
+                line_no = code.count("\n", 0, m.start()) + 1
+                offenders.append(f"{py.relative_to(root)}:{line_no}: {m.group()}")
+    moved = {"_partition_dirs", "_part_key", "_write_day_partitioned"}
+    imports = re.compile(r"from\s+[\w.]*loader\s+import\s+(\([^)]*\)|.*)")
+    scanned = [pkg, root / "tests", root / "tools", root / "examples"]
+    for py in sorted(p for d in scanned for p in d.rglob("*.py")):
+        text = py.read_text()
+        for m in imports.finditer(text):
+            if moved & set(re.findall(r"\w+", m.group(1))):
+                line_no = text.count("\n", 0, m.start()) + 1
+                offenders.append(f"{py.relative_to(root)}:{line_no}: {m.group()}")
+    assert not offenders, (
+        "physical-layout code outside pipeline/catalog.py (use "
+        "Warehouse.read_partitions / overwrite_partitions / "
+        "dynamic_partition_overwrite):\n" + "\n".join(offenders)
+    )
+    assert not moved & set(vars(loader)), "partition helpers back in loader"
+
+
 def test_key_skew_scalar_attach_is_broadcast(plan_of):
     """The plan test the round-11 blemish should have had: every
     scalar attach in profile_key_skew must be a broadcast nested-loop

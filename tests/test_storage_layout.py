@@ -17,7 +17,7 @@ def test_partitioned_write_prunes(spark, tmp_warehouse):
     orders = load_table(spark, SF_SMALL, "orders").withColumn(
         "order_year", F.year("o_orderdate")
     )
-    wh.write_partitioned(orders, "bitcoin", "orders_part", ["order_year"])
+    wh.write_atomic(orders, "bitcoin", "orders_part", partition_by=["order_year"])
 
     df = wh.read("bitcoin", "orders_part").filter(F.col("order_year") == 1995)
     plan = df_plan(df)
@@ -26,6 +26,19 @@ def test_partitioned_write_prunes(spark, tmp_warehouse):
     # pruned read returns exactly the matching rows
     expect = orders.filter(F.col("order_year") == 1995).count()
     assert df.count() == expect
+
+
+def test_partitioned_write_is_clustered(spark, tmp_warehouse):
+    """A partitionBy write hash-clusters on the partition column first:
+    an 8-task input with 5 values writes ONE file per value directory,
+    not one per (task, value)."""
+    wh = Warehouse(spark, tmp_warehouse)
+    df = spark.range(0, 400, numPartitions=8).withColumn("c", F.col("id") % 5)
+    wh.write_atomic(df, "lab", "clustered", partition_by=["c"])
+    root = wh.table_path("lab", "clustered")
+    per_dir = {d.name: len(list(d.glob("*.parquet"))) for d in root.glob("c=*")}
+    assert per_dir == {f"c={v}": 1 for v in range(5)}
+    assert wh.read("lab", "clustered").count() == 400
 
 
 def test_bucketed_join_has_no_shuffle(spark, tmp_warehouse):
