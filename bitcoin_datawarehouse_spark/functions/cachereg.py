@@ -15,14 +15,18 @@ Operators therefore register these caches here via
 memory (bench.py between queries, tools/check_oracle.py between
 oracle comparisons) call :func:`release_tracked_caches`.  Callers
 that WANT cross-query reuse (a notebook session) simply never
-release.
+release.  The registry is thread-safe: a pipeline's lanes register
+from several driver threads at once.
 """
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 
 _TRACKED: list[DataFrame] = []
+_LOCK = threading.Lock()
 
 
 def _still_cached(df: DataFrame) -> bool:
@@ -43,16 +47,19 @@ def cache_tracked(df: DataFrame) -> DataFrame:
     :func:`release_tracked_caches` would otherwise accrete one
     logical-plan tree per trigger in driver memory.  The probe is a
     driver-local storageLevel read, no job."""
-    _TRACKED[:] = [d for d in _TRACKED if _still_cached(d)]
     cached = df.cache()
-    _TRACKED.append(cached)
+    with _LOCK:
+        _TRACKED[:] = [d for d in _TRACKED if _still_cached(d)]
+        _TRACKED.append(cached)
     return cached
 
 
 def release_tracked_caches() -> None:
     """Unpersist every tracked cache (idempotent, never raises)."""
-    while _TRACKED:
-        df = _TRACKED.pop()
+    with _LOCK:
+        held = _TRACKED[:]
+        _TRACKED.clear()
+    for df in reversed(held):
         try:
             df.unpersist()
         except Exception:  # session already stopped — nothing to free

@@ -345,7 +345,8 @@ def _save_dsir_parts(
     """Write the three part tables: target+raw overlapped from a
     2-thread driver pool (guide §2.6: actions are only sequential
     because the driver calls them sequentially; write_atomic is
-    path-based, so no catalog contention), consts strictly LAST —
+    path-based, so no catalog contention; the pool threads inherit the
+    caller's job group), consts strictly LAST —
     for the fixed-name (non-registry) path consts is the de-facto
     pointer: ``ensure_dsir_model``'s exists-all-three probe can only
     see a complete model once consts lands, so a crash mid-save never
@@ -354,10 +355,12 @@ def _save_dsir_parts(
     generation+pointer protocol from ``pipeline.model_registry``."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark.util import inheritable_thread_target
+
     with ThreadPoolExecutor(max_workers=2) as pool:
         futs = [
             pool.submit(
-                warehouse.write_atomic,
+                inheritable_thread_target(warehouse.spark)(warehouse.write_atomic),
                 parts[part],
                 DSIR_MODEL_SCHEMA,
                 f"{name}_{part}",

@@ -181,10 +181,13 @@ class IvfIndex:
         # returns, so reader-visible ordering is unchanged.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        # each pool task inherits the caller's job group and tags
         with ThreadPoolExecutor(max_workers=1) as pool:
             model_futs = [
                 pool.submit(
-                    self.wh.write_atomic,
+                    inheritable_thread_target(self.wh.spark)(self.wh.write_atomic),
                     cent,
                     self.schema,
                     self.centroids_table,
@@ -209,7 +212,11 @@ class IvfIndex:
                 )
                 model_futs.append(
                     pool.submit(
-                        self._write_pq_codebooks, emb.sparkSession, cb
+                        inheritable_thread_target(self.wh.spark)(
+                            self._write_pq_codebooks
+                        ),
+                        emb.sparkSession,
+                        cb,
                     )
                 )
                 lists = _assign_and_encode(emb, cent, cb)

@@ -34,9 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.zorder import bucketize, zorder2
-from bitcoin_datawarehouse_spark.pipeline.catalog import (
-    dynamic_partition_overwrite,
-)
+from bitcoin_datawarehouse_spark.pipeline.catalog import dynamic_overwrite
 
 Z_TOTAL_BITS = 32  # two 16-bit interleaved dimensions
 
@@ -155,10 +153,9 @@ class ZOrderedTable:
             .repartition(F.col("zblock"))
             .sortWithinPartitions("zblock", "zkey")
         )
-        with dynamic_partition_overwrite(self.spark):
-            frame.write.mode("overwrite").partitionBy("zblock").parquet(
-                str(self.path / "data")
-            )
+        dynamic_overwrite(frame.write).partitionBy("zblock").parquet(
+            str(self.path / "data")
+        )
         return [d.name for d in over]
 
     # -- read path -----------------------------------------------------------

@@ -29,6 +29,7 @@ view semantics only.
 from __future__ import annotations
 
 import contextlib
+import hashlib
 import os
 import shutil
 import time
@@ -36,26 +37,21 @@ import uuid
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 
 #: Hive's sentinel directory for NULL partition values
 _HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
 
 
-@contextlib.contextmanager
-def dynamic_partition_overwrite(spark: SparkSession):
-    """Scoped ``partitionOverwriteMode=dynamic`` (save/set/restore).
+def dynamic_overwrite(writer: DataFrameWriter) -> DataFrameWriter:
+    """``writer`` in overwrite mode that replaces only the partition
+    directories its rows land in (dynamic partition overwrite).
 
-    The one copy of the conf juggling, shared by
+    A per-write option, never the session conf: concurrent writes share
+    one session (a pipeline's lanes), and a save/set/restore of the conf
+    would race between them.  Shared by
     :meth:`Warehouse.overwrite_partitions` and z-table compaction."""
-    prev = spark.conf.get(
-        "spark.sql.sources.partitionOverwriteMode", "STATIC"
-    )
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    return writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
 
 
 def swap_in(tmp: Path, final: Path) -> None:
@@ -167,8 +163,6 @@ def scratch_root(prefix: str, sf_dir: str) -> str:
       by another user is the classic /tmp squatting hazard — hence
       user + pid + fixture digest in the key."""
     import getpass
-    import hashlib
-    import os
     import tempfile
 
     return os.path.join(
@@ -221,6 +215,18 @@ class Warehouse:
         relies on to avoid silently flattening them)."""
         p = self.table_path(schema, table)
         return p.exists() and any(p.glob("*/**/*.parquet"))
+
+    def file_token(self, schema: str, table: str) -> str | None:
+        """Digest of the names of ``schema.table``'s data files, None
+        when it has none.  Every write names its files afresh (Spark puts
+        the write job's uuid in each name), so another write, an append,
+        a delete or a rollback changes the token, while a byte copy of
+        the warehouse keeps it: names, not inodes."""
+        root = self.table_path(schema, table)
+        names = sorted(str(p.relative_to(root)) for p in root.rglob("*.parquet"))
+        if not names:
+            return None
+        return hashlib.md5("\n".join(names).encode()).hexdigest()
 
     def list_tables(self, schema: str) -> list[str]:
         p = self.root / schema
@@ -291,9 +297,7 @@ class Warehouse:
         silently pruning on stats it does not have.  The ``.__``
         infix keeps it out of ``list_tables`` and clear of the
         atomic-swap temp namespaces."""
-        import hashlib as _hl
-
-        digest = _hl.md5(
+        digest = hashlib.md5(
             "|".join(sorted(cols)).encode()
         ).hexdigest()[:8]
         return f"{table}.__manifest_{digest}"
@@ -607,13 +611,10 @@ class Warehouse:
         still wrote one file per day at fixture scale).
         """
         self.create_schema(schema)
-        writer = df.repartition(col).write.mode("overwrite")
+        writer = dynamic_overwrite(df.repartition(col).write)
         if max_records_per_file:
             writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        with dynamic_partition_overwrite(df.sparkSession):
-            writer.partitionBy(col).parquet(
-                str(self.table_path(schema, table))
-            )
+        writer.partitionBy(col).parquet(str(self.table_path(schema, table)))
 
     # -- storage layout (the 100 TB levers) --------------------------------
     def write_zordered(

@@ -19,9 +19,34 @@ declares the column but never writes it).
 The control table is a small parquet ledger (one row per job), so
 driver-side mutation is correct; the *data* path stays fully
 distributed.  A run reads the ledger once (``tables_to_sync``) and
-holds its rows; each start/end/fail mark edits the held rows and
-overwrites the table from them — one write, no re-read.  The job's
-row count is the one the load observed on its own write.
+holds its rows until ``release``.  While the ledger is held, a
+start/end/fail mark edits the held rows only, and ``flush`` overwrites
+the table from them; a mark outside a run reads the ledger and writes
+it at once.  :meth:`Pipeline.run` writes the ledger twice: once with
+every selected job at status -1 before any job starts, once with every
+end/fail mark (error text included) after the last job finishes.
+
+Lanes: :meth:`Pipeline.run` groups its jobs by target table.  One lane
+runs the jobs of one target in ledger order, so two loads of a target
+never overlap; the lanes run concurrently from a driver thread pool, so
+independent targets overlap their source waits and their small Spark
+jobs.  Each lane inherits the caller's Spark local properties (job
+group, description) and session tags.
+
+Watermark: a load observes MAX(incremental_column) on its own write, in
+the observation that also counts its rows, and ``run_job`` keeps it in
+the ledger (``watermark``) with a token of the target's data-file names
+taken right after the swap (``watermark_token``).  The next run uses
+that value while the target's file names still match the token.  Any
+other writer (an append, a delete, a rollback, a direct load) renames
+the files, and the run falls back to the exact MAX probe.  The token is
+built from names, not inodes, so a copied warehouse keeps it valid.
+
+Crash semantics: a crash mid-run leaves the selected jobs at status -1
+(the second ledger write never happened).  A job whose load finished
+before the crash re-runs on the next run: its target's files no longer
+match the ledger's token, so it probes the watermark and merges
+idempotently (a keyless job replaces its target again).
 """
 
 from __future__ import annotations
@@ -29,11 +54,14 @@ from __future__ import annotations
 import datetime as dt
 import enum
 import logging
+import threading
 import traceback
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import SparkSession, functions as F
+from pyspark.util import inheritable_thread_target
 
 from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 from bitcoin_datawarehouse_spark.pipeline.catalog import Warehouse
@@ -108,6 +136,8 @@ class JobControl:
         #: (schema, rows) of the whole ledger, held from
         #: ``tables_to_sync`` until ``release`` (the length of a run)
         self._held: tuple[Any, list[dict[str, Any]]] | None = None
+        #: marks come from every lane of a run
+        self._lock = threading.Lock()
 
     def seed(self, rows: list[dict[str, Any]]) -> None:
         """Seed the registry (reference load_metadata.ipynb: CSV →
@@ -135,7 +165,7 @@ class JobControl:
         """Active-job scan (reference pull_raw/utils.py:18-63) with the
         CLI ``--select`` subsetting (reference arguments.py:26-33).
         The ledger it reads is held for the start/end/fail marks that
-        follow, until :meth:`release`."""
+        follow, which :meth:`flush` writes, until :meth:`release`."""
         self._held = self._read_ledger()
         out = [dict(r) for r in self._held[1] if r["active"] == 1]
         if select:
@@ -143,32 +173,47 @@ class JobControl:
         return out
 
     def release(self) -> None:
-        """Drop the held ledger; a later mark re-reads the table."""
+        """Drop the held ledger (and any mark not yet flushed); a later
+        mark re-reads the table."""
         self._held = None
 
-    def _update_job(self, job_name: str, **sets: Any) -> None:
-        """Set ``sets`` on ``job_name``'s row and overwrite the ledger
-        (``NOW`` → the driver clock's current instant)."""
-        schema, rows = self._held or self._read_ledger()
-        now = dt.datetime.now(dt.timezone.utc)
-        for r in rows:
-            if r["job_name"] == job_name:
-                r.update({c: now if v is NOW else v for c, v in sets.items()})
+    def flush(self) -> None:
+        """Overwrite the ledger from the held rows."""
+        with self._lock:
+            self._write(*self._held)
+
+    def _write(self, schema, rows: list[dict[str, Any]]) -> None:
         names = schema.fieldNames()
         df = local_rows_df(self.spark, [[r[c] for c in names] for r in rows], schema)
         self.wh.write_atomic(df, ETL_SCHEMA, JOB_TABLE, coalesce=1)
 
-    def start_job(self, job_name: str) -> None:
-        """status=-1, start_ts=NOW() (reference utils.py:80-85)."""
-        self._update_job(job_name, status=STATUS_RUNNING, start_ts=NOW)
+    def _update_job(self, job_names: tuple[str, ...], **sets: Any) -> None:
+        """Set ``sets`` on the rows of ``job_names`` (``NOW`` → the
+        driver clock's current instant).  A held ledger keeps the edit
+        until :meth:`flush`; otherwise the ledger is read and
+        overwritten at once."""
+        with self._lock:
+            schema, rows = self._held or self._read_ledger()
+            now = dt.datetime.now(dt.timezone.utc)
+            for r in rows:
+                if r["job_name"] in job_names:
+                    r.update({c: now if v is NOW else v for c, v in sets.items()})
+            if self._held is None:
+                self._write(schema, rows)
 
-    def end_job(self, job_name: str) -> None:
-        """status=1, end_ts=NOW() (reference utils.py:120-125)."""
-        self._update_job(job_name, status=STATUS_DONE, end_ts=NOW)
+    def start_job(self, *job_names: str) -> None:
+        """status=-1, start_ts=NOW() (reference utils.py:80-85)."""
+        self._update_job(job_names, status=STATUS_RUNNING, start_ts=NOW)
+
+    def end_job(self, job_name: str, **watermark: Any) -> None:
+        """status=1, end_ts=NOW() (reference utils.py:120-125);
+        ``watermark``/``watermark_token`` keyword values are stored with
+        it."""
+        self._update_job((job_name,), status=STATUS_DONE, end_ts=NOW, **watermark)
 
     def fail_job(self, job_name: str, error: str) -> None:
         self._update_job(
-            job_name, status=STATUS_FAILED, end_ts=NOW, error_message=error[:2000]
+            (job_name,), status=STATUS_FAILED, end_ts=NOW, error_message=error[:2000]
         )
 
     def job_status(self, job_name: str) -> dict[str, Any] | None:
@@ -180,13 +225,16 @@ class JobControl:
         return rows[0].asDict() if rows else None
 
 
-#: run-ledger columns the reference declares in etl_job.csv:1 (typed
-#: null when the seed omits them, so start/end/fail updates resolve)
+#: run-ledger columns the reference declares in etl_job.csv:1, plus the
+#: watermark kept from the last load (typed null when the seed or an
+#: older ledger omits them, so start/end/fail updates resolve)
 _LEDGER_COLUMNS = {
     "status": "bigint",
     "start_ts": "timestamp",
     "end_ts": "timestamp",
     "error_message": "string",
+    "watermark": "string",
+    "watermark_token": "string",
 }
 
 
@@ -197,8 +245,19 @@ def _ensure_ledger_columns(df):
     return df
 
 
+def _watermark_token(loader: Loader, inc_col: str | None) -> str | None:
+    """The incremental column plus the target's data-file token: a
+    stored watermark is valid for this column over exactly these
+    files."""
+    files = loader.wh.file_token(loader.schema, loader.table)
+    if not inc_col or files is None:
+        return None
+    return f"{inc_col}:{files}"
+
+
 class Pipeline:
-    """fetch → transform → load per job; continue-on-error across jobs."""
+    """fetch → transform → load per job, concurrent across target
+    tables; continue-on-error across jobs."""
 
     def __init__(
         self,
@@ -237,12 +296,14 @@ class Pipeline:
                 for k in str(job.get("p_key") or "").split(",")
                 if k.strip()
             ]
+            inc_col = incremental_column or job.get("incremental_column")
+            # ledger marks for a batch that leaves the target as it is
+            probed: dict[str, Any] = {}
             # watermark pushdown is only safe when the load can MERGE:
             # without merge keys the load is a full replace, and
             # replacing the table with a delta-only fetch would destroy
             # history — so keyless jobs always fetch everything
             if strategy is LoadStrategy.INCREMENTAL and keys:
-                inc_col = incremental_column or job.get("incremental_column")
                 if incremental_value is not None and not inc_col:
                     # a watermark override for a job with NO incremental
                     # column would silently turn its full fetch into a
@@ -263,7 +324,7 @@ class Pipeline:
                     # would otherwise force a full refresh
                     parameters = incremental_value
                 else:
-                    last = loader.get_max_value(inc_col) if inc_col else None
+                    last, probed = self._watermark(job, loader, inc_col)
                     if last is None:
                         # first-sync fallback (reference __main__.py:105-112)
                         effective = LoadStrategy.FULL_REFRESH
@@ -274,21 +335,48 @@ class Pipeline:
             )
             if df is None:
                 # empty-batch short-circuit (dune_to_pg_worker.py:87-89)
-                self.control.end_job(name)
+                self.control.end_job(name, **probed)
                 return JobResult(name, True, 0)
             spec = self.specs.get(name)
             if spec is not None:
                 df = spec.apply(df)
             df = with_audit_column(df)
             if effective is LoadStrategy.FULL_REFRESH or not keys:
-                n = loader.load_full_refresh(df)
+                n = loader.load_full_refresh(df, watermark_col=inc_col)
             else:
-                n = loader.load_incremental(df, keys)
-            self.control.end_job(name)
+                n = loader.load_incremental(df, keys, watermark_col=inc_col)
+            written = loader.written_max
+            self.control.end_job(
+                name,
+                watermark=None if written is None else str(written),
+                watermark_token=_watermark_token(loader, inc_col),
+            )
             return JobResult(name, True, n)
         except Exception as e:  # noqa: BLE001 — continue-on-error per table
             self.control.fail_job(name, f"{e}\n{traceback.format_exc()}")
             return JobResult(name, False, 0, str(e))
+
+    @staticmethod
+    def _watermark(
+        job: dict[str, Any], loader: Loader, inc_col: str | None
+    ) -> tuple[Any, dict[str, Any]]:
+        """(the target's MAX(``inc_col``), the ledger marks that keep a
+        probed value): the ledger's value while the target's files still
+        match the token stored with it, else the exact probe."""
+        if not inc_col:
+            return None, {}
+        token = _watermark_token(loader, inc_col)
+        if (
+            token is not None
+            and job.get("watermark") is not None
+            and job.get("watermark_token") == token
+        ):
+            return job["watermark"], {}
+        last = loader.get_max_value(inc_col)
+        return last, {
+            "watermark": None if last is None else str(last),
+            "watermark_token": token,
+        }
 
     def run(
         self,
@@ -298,8 +386,16 @@ class Pipeline:
         incremental_value: str | None = None,
     ) -> list[JobResult]:
         """Sync every active job (reference run_pipeline,
-        __main__.py:132-184); a failed table logs and the loop
-        continues (``:173-177``).
+        __main__.py:132-184); a failed table logs and the other jobs
+        continue (``:173-177``).  Results come back in ledger order.
+
+        The jobs run in concurrent lanes, one per target table; the
+        jobs of one target run in ledger order inside its lane (module
+        docstring).  The ledger is written twice: every selected job at
+        status -1 before the lanes start, every end/fail mark after they
+        finish (with each job's ``start_ts`` as its lane started it).  A
+        crash in between leaves the selected jobs at -1, and the next
+        run redoes them idempotently.
 
         The whole run holds the warehouse's advisory lock: the control
         table is overwritten from the ledger read at the start of the
@@ -308,18 +404,46 @@ class Pipeline:
         reference leaned on Postgres transactions here).
         """
         with self.wh.lock("pipeline"):
+            results: list[JobResult] = []
             try:
-                results = []
-                for job in self.control.tables_to_sync(select):
-                    results.append(
-                        self.run_job(
-                            job, strategy, incremental_column, incremental_value
-                        )
+                jobs = self.control.tables_to_sync(select)
+                if jobs:
+                    self.control.start_job(*(j["job_name"] for j in jobs))
+                    self.control.flush()
+                    results = self._run_lanes(
+                        jobs, strategy, incremental_column, incremental_value
                     )
+                    self.control.flush()
             finally:
                 self.control.release()
             self._maybe_refresh_models(results)
             return results
+
+    def _run_lanes(self, jobs: list[dict[str, Any]], *args: Any) -> list[JobResult]:
+        """``run_job(job, *args)`` over ``jobs``: one lane per target,
+        in ledger order inside a lane, lanes concurrent on
+        ``min(lanes, defaultParallelism)`` driver threads.  Returns the
+        results in ``jobs`` order."""
+        lanes: dict[tuple[str, str], list[int]] = {}
+        for i, job in enumerate(jobs):
+            lanes.setdefault((self.target_schema, job["target_table"]), []).append(i)
+        results: list[Any] = [None] * len(jobs)
+
+        def lane(indices: list[int]) -> None:
+            for i in indices:
+                results[i] = self.run_job(jobs[i], *args)
+
+        threads = min(len(lanes), self.spark.sparkContext.defaultParallelism)
+        with ThreadPoolExecutor(max_workers=threads) as pool:
+            # wrapped per lane: each lane gets its own copy of the
+            # caller's local properties (job group, description) + tags
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(lane), idx)
+                for idx in lanes.values()
+            ]
+            for f in futures:
+                f.result()
+        return results
 
     def _maybe_refresh_models(self, results: list[JobResult]) -> None:
         """Consult every attached :class:`ModelRefreshSpec` after the

@@ -11,7 +11,10 @@ Reference parity (SURVEY.md §2.2): this is the Spark rebuild of
 * COUNT probe    — post-load verification (``:320-339``); a load
   returns the count of rows it wrote, observed on the write itself
   (``DataFrame.observe``), so the pipeline needs no second scan.
-  ``get_record_count`` stays as a standalone probe.
+  ``get_record_count`` stays as a standalone probe.  The same
+  observation takes the written table's MAX of a ``watermark_col``
+  (:attr:`Loader.written_max`), so the pipeline needs no MAX probe
+  after its own loads either.
 
 Merge semantics preserved exactly: new row wins on key conflict and
 ALL non-key columns are replaced (``pg_loader.py:246-259``).  Two
@@ -53,23 +56,30 @@ class Loader:
         self.wh = wh
         self.schema = schema
         self.table = table
+        #: MAX(watermark_col) of the table the last load wrote (None
+        #: before a load, or when the written table lacks the column)
+        self.written_max = None
 
     # -- strategies --------------------------------------------------------
-    def load_full_refresh(self, df: DataFrame) -> int:
+    def load_full_refresh(
+        self, df: DataFrame, watermark_col: str | None = None
+    ) -> int:
         """Atomic replace (reference truncate+insert, pg_loader.py:126-163);
         returns the rows written."""
-        return self._write_counted(df)
+        return self._write_counted(df, watermark_col)
 
-    def _write_counted(self, df: DataFrame) -> int:
-        """Replace the target with ``df``; the row count is observed on
-        the write, so it costs no extra Spark job."""
+    def _write_counted(self, df: DataFrame, watermark_col: str | None) -> int:
+        """Replace the target with ``df``; the row count and the MAX of
+        ``watermark_col`` are observed on the write, so they cost no
+        extra Spark job."""
         obs = Observation()
-        self.wh.write_atomic(
-            df.observe(obs, F.count(F.lit(1)).alias("rows")),
-            self.schema,
-            self.table,
-        )
-        return obs.get["rows"]
+        aggs = [F.count(F.lit(1)).alias("rows")]
+        if watermark_col in df.columns:
+            aggs.append(F.max(watermark_col).alias("max"))
+        self.wh.write_atomic(df.observe(obs, *aggs), self.schema, self.table)
+        got = obs.get
+        self.written_max = got.get("max")
+        return got["rows"]
 
     def load_incremental(
         self,
@@ -77,9 +87,12 @@ class Loader:
         unique_keys: list[str] | None,
         order_col: str | None = None,
         strict_schema: bool = False,
+        watermark_col: str | None = None,
     ) -> int:
         """Merge ``df`` into the target on ``unique_keys``; returns the
-        target's row count after the merge (the rows written).
+        target's row count after the merge (the rows written), and
+        leaves the merged table's MAX(``watermark_col``) in
+        :attr:`written_max`.
 
         Reference dispatch preserved (pg_loader.py:165-217): no keys →
         full refresh; target missing → create+insert; else upsert.
@@ -90,7 +103,7 @@ class Loader:
         the default tolerates drift by null-filling either side.
         """
         if not unique_keys:
-            return self.load_full_refresh(df)
+            return self.load_full_refresh(df, watermark_col)
         # cache the deduped batch: it is read three times below (count
         # probe, anti-join build side, union) and its upstream plan may
         # be arbitrarily expensive — without the cache every merge
@@ -98,7 +111,7 @@ class Loader:
         batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
         try:
             if not self.wh.table_exists(self.schema, self.table):
-                return self._write_counted(batch)
+                return self._write_counted(batch, watermark_col)
             old = self.wh.read(self.schema, self.table)
             if strict_schema and set(batch.columns) != set(old.columns):
                 raise ValueError(
@@ -106,7 +119,9 @@ class Loader:
                     f"(batch-only: {sorted(set(batch.columns) - set(old.columns))}, "
                     f"target-only: {sorted(set(old.columns) - set(batch.columns))})"
                 )
-            return self._write_counted(_upsert(old, batch, unique_keys))
+            return self._write_counted(
+                _upsert(old, batch, unique_keys), watermark_col
+            )
         finally:
             batch.unpersist()
 
@@ -134,6 +149,11 @@ class Loader:
            touched partition directories, leaving every other
            partition's files physically untouched.
 
+        A target that holds a FLAT table (files at its root) is refused
+        with a ``ValueError``: a dynamic partition overwrite would leave
+        those files orphaned beside the new ``col=value`` directories,
+        and reads would return only the batch.
+
         The merge key set should include (or functionally determine)
         the partition column — a row whose partition value CHANGES
         between loads would otherwise survive in its old partition.
@@ -143,6 +163,13 @@ class Loader:
         footer; read such tables with ``mergeSchema`` or keep
         partitioned facts on ``strict_schema`` discipline.
         """
+        if self.wh.table_exists(self.schema, self.table):
+            raise ValueError(
+                f"{self.schema}.{self.table} has a flat layout; "
+                "load_incremental_partitioned would orphan its rows — "
+                "merge it with load_incremental, or rewrite it "
+                "partitioned first"
+            )
         batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
         try:
             merged = batch

@@ -746,6 +746,19 @@ def test_partitioned_merge_new_and_mixed_partition_batches(spark, wh):
     assert got[1]["v"] == 1.0 and got[2]["v"] == 2.0  # untouched rows
 
 
+def test_partitioned_merge_refuses_flat_target(spark, wh):
+    """A partitioned merge into a FLAT table would orphan the flat files
+    beside its new ``col=value`` directories, and reads would return the
+    batch alone.  It must refuse and leave the table as it was."""
+    ld = Loader(wh, "bitcoin", "flat")
+    ld.load_full_refresh(spark.range(10))
+    with pytest.raises(ValueError, match="flat layout"):
+        ld.load_incremental_partitioned(
+            spark.range(5, 8).withColumn("d", F.col("id") % 2), ["id"], "d"
+        )
+    assert ld.get_record_count() == 10
+
+
 def test_partitioned_merge_survives_hive_escaped_partition_values(
     spark, wh
 ):

@@ -667,9 +667,28 @@ def test_physical_layout_lives_only_in_catalog():
     assert not offenders, (
         "physical-layout code outside pipeline/catalog.py (use "
         "Warehouse.read_partitions / overwrite_partitions / "
-        "dynamic_partition_overwrite):\n" + "\n".join(offenders)
+        "dynamic_overwrite):\n" + "\n".join(offenders)
     )
     assert not moved & set(vars(loader)), "partition helpers back in loader"
+
+
+def test_pipeline_never_sets_session_conf():
+    """A pipeline run's lanes share one SparkSession, so a conf set by
+    one lane would leak into (or be restored under) another lane's
+    write.  Per-write options carry such settings instead (for example
+    ``catalog.dynamic_overwrite``); nothing under pipeline/ calls
+    ``conf.set(``."""
+    import re
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pat = re.compile(r"conf\.set\(")
+    offenders = []
+    for py in sorted((root / "bitcoin_datawarehouse_spark" / "pipeline").rglob("*.py")):
+        for no, line in enumerate(py.read_text().splitlines(), 1):
+            if pat.search(line.split("#", 1)[0]):
+                offenders.append(f"{py.relative_to(root)}:{no}: {line.strip()}")
+    assert not offenders, "session conf set under pipeline/:\n" + "\n".join(offenders)
 
 
 def test_key_skew_scalar_attach_is_broadcast(plan_of):
@@ -698,6 +717,56 @@ def test_cache_tracked_self_prunes_released_handles(spark):
         assert any(d is b for d in cachereg._TRACKED)
     finally:
         cachereg.release_tracked_caches()
+
+
+def test_cache_registry_keeps_every_handle_across_threads():
+    """A pipeline's lanes register caches from several driver threads at
+    once; no registration may be lost to a concurrent one (the prune
+    pass rewrites the whole list).  Stand-in frames keep the stress on
+    the registry itself: always cached, ``cache()`` returns the frame."""
+    import sys
+    import threading
+
+    from pyspark import StorageLevel
+
+    from bitcoin_datawarehouse_spark.functions import cachereg
+
+    class Frame:
+        storageLevel = StorageLevel.MEMORY_ONLY
+
+        def cache(self):
+            return self
+
+        def unpersist(self):
+            return self
+
+    cachereg.release_tracked_caches()
+    frames = [[Frame() for _ in range(300)] for _ in range(8)]
+    start = threading.Barrier(8)
+
+    def register(mine):
+        start.wait()
+        for f in mine:
+            cachereg.cache_tracked(f)
+
+    threads = [threading.Thread(target=register, args=(m,)) for m in frames]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(120)
+    finally:
+        sys.setswitchinterval(interval)
+    try:
+        assert not any(t.is_alive() for t in threads)
+        tracked = {id(d) for d in cachereg._TRACKED}
+        assert tracked == {id(f) for m in frames for f in m}
+        assert len(cachereg._TRACKED) == 8 * 300
+    finally:
+        cachereg.release_tracked_caches()
+    assert cachereg._TRACKED == []
 
 
 def test_tpch_q6_all_predicates_reach_scan(plan_of):

@@ -3,8 +3,8 @@ observed on the load's own write, and the Arrow-built batch frame.
 
 Pins the ledger's timestamps as instants on a non-UTC driver, the
 verbatim error text of a failed job, the loader's returned count on
-every load path ``run_job`` takes, and the Spark-job budget of one
-incremental sync.
+every load path ``run_job`` takes, and the Spark-job budgets of a one-
+and a five-job incremental sync.
 """
 
 from __future__ import annotations
@@ -153,9 +153,31 @@ def test_load_full_refresh_empty_frame_returns_zero(spark, wh):
 
 
 #: Spark jobs of one incremental one-table Pipeline.run (merge path):
-#: measured 14 on Spark 4.1.2 local[8]; with a control-table re-read
-#: per mark and a post-load COUNT probe the same run took 19
-INCREMENTAL_SYNC_JOB_CAP = 14
+#: measured 11 on Spark 4.1.2 local[8] (two ledger writes, watermark
+#: from the ledger); 14 with one ledger write per mark and a MAX probe
+#: per run, 19 with a ledger re-read per mark and a COUNT probe
+INCREMENTAL_SYNC_JOB_CAP = 11
+#: the same for a run of five jobs on five targets: measured 39; 62
+#: with one ledger write per mark and a MAX probe per job
+INCREMENTAL_SYNC_5_JOB_CAP = 39
+#: Spark jobs a run starts from the calling thread (the ledger read and
+#: its two writes); the budgets' lower bound: only jobs run in the lane
+#: threads can lift a count above it
+CALLER_THREAD_JOBS = 4
+
+
+def _grouped_jobs(spark, run):
+    """(run's result, ids of the Spark jobs it ran), found by a job
+    group set on the calling thread."""
+    sc = spark.sparkContext
+    group = f"sync-budget-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "incremental sync")
+    try:
+        res = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return res, sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_incremental_sync_job_budget(spark, wh):
@@ -164,14 +186,25 @@ def test_incremental_sync_job_budget(spark, wh):
     JobControl(spark, wh).seed([_job("j", 1, "tj")])
     pipe = Pipeline(spark, wh, src)
     assert pipe.run()[0].ok  # first sync: full refresh
-    sc = spark.sparkContext
-    group = f"sync-budget-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, "incremental sync")
-    try:
-        res = pipe.run()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
+    res, jobs = _grouped_jobs(spark, pipe.run)
     assert res[0].ok and res[0].rows_loaded == 21
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    assert len(jobs) <= INCREMENTAL_SYNC_JOB_CAP, sorted(jobs)
+    assert CALLER_THREAD_JOBS < len(jobs) <= INCREMENTAL_SYNC_JOB_CAP, jobs
+
+
+def test_five_job_incremental_sync_job_budget(spark, wh):
+    def rows(q):
+        # distinct per job: identical batches would share one cache
+        # entry across lanes, and the first unpersist would drop it
+        # under the others
+        out = [{"id": i, "v": float(i * 10 + q)} for i in range(20)]
+        return lambda p: out if p is None else out[-3:] + [{"id": 99, "v": q / 2}]
+
+    src = StaticSource({q: rows(q) for q in range(1, 6)})
+    JobControl(spark, wh).seed([_job(f"j{q}", q, f"t{q}") for q in range(1, 6)])
+    pipe = Pipeline(spark, wh, src)
+    assert all(r.ok for r in pipe.run())  # first sync: full refresh
+    res, jobs = _grouped_jobs(spark, pipe.run)
+    assert [(r.job_name, r.ok, r.rows_loaded) for r in res] == [
+        (f"j{q}", True, 21) for q in range(1, 6)
+    ]
+    assert CALLER_THREAD_JOBS < len(jobs) <= INCREMENTAL_SYNC_5_JOB_CAP, jobs
