@@ -275,29 +275,20 @@ def refresh_manifest_sidecar(
     old sidecar still exists; the swap then touches directories only
     via atomic renames.
 
-    Crash windows (r8, per ADVICE): stale ``manifest.__tmp_*`` dirs
-    from crashed prior runs are swept on entry; the old sidecar is
-    renamed ASIDE (atomic) rather than rmtree'd before the new one
-    lands, so the manifest-less window is one rename-to-rename gap
-    (microseconds) instead of a whole-directory delete — and either
-    crash outcome self-heals: the aside dir matches the tmp sweep
-    pattern, and a missing sidecar triggers a full rebuild.
+    Crashes: the sidecar is published by the catalog's ``swap_in``
+    and recovered by its ``restore_missing`` on entry — see there.
     """
     import pathlib
-    import shutil
-    import uuid
 
-    from bitcoin_datawarehouse_spark.pipeline.catalog import swap_in
+    from bitcoin_datawarehouse_spark.pipeline import catalog
 
-    base = pathlib.Path(table_path)
-    for stale in base.glob("manifest.__tmp_*"):
-        shutil.rmtree(stale)
-    mdir = base / "manifest"
+    mdir = pathlib.Path(table_path) / "manifest"
+    catalog.restore_missing(mdir)
     old = spark.read.parquet(str(mdir)) if mdir.exists() else None
-    fresh = sync_manifest(spark, old, str(base / "data"), cols)
-    tmp = base / f"manifest.__tmp_{uuid.uuid4().hex[:8]}"
+    fresh = sync_manifest(spark, old, str(mdir.parent / "data"), cols)
+    tmp = catalog.staging_dir(mdir)
     fresh.coalesce(1).write.mode("overwrite").parquet(str(tmp))
-    swap_in(tmp, mdir)
+    catalog.swap_in(tmp, mdir)
     return spark.read.parquet(str(mdir))
 
 

@@ -8,15 +8,17 @@ holding parquet, with the schema carried by the parquet footer (so the
 reference's dynamic ``CREATE TABLE`` from DataFrame dtypes — reference
 ``pg_loader.py:70-105`` — needs no separate DDL step here).
 
-Atomicity: every table write goes to a fresh ``{table}.__tmp_*``
-sibling directory and is swapped in with a rename (:func:`swap_in`),
-so readers never observe a half-written or truncated table (strictly
-stronger than the reference's TRUNCATE→INSERT window,
-``pg_loader.py:144-155``).  On HDFS and POSIX filesystems the rename
-is atomic; on object stores the swap degrades to copy-then-delete and
-a manifest-based table format (Delta/Iceberg) is the production
-answer — the loader API is format-agnostic so that swap is a
-storage-layer change only.
+Atomicity: every table write goes to a fresh staging sibling and is
+published by :func:`swap_in`, which renames the live directory aside as
+the table's newest snapshot and the new one into place.  The snapshot is
+the recovery point: opening a :class:`Warehouse` renames it back where a
+kill between the two renames left no live table (:func:`restore_missing`),
+so a reader sees the old table or the new one — the reference's
+TRUNCATE→INSERT in one Postgres transaction (``pg_loader.py:126-163``).
+Generations commit through a 1-row pointer flipped last
+(:meth:`Warehouse.flip_pointer`).  On HDFS and POSIX filesystems a rename
+is atomic; on object stores the swap degrades to copy-then-delete and a
+manifest-based table format (Delta/Iceberg) is the production answer.
 
 Physical layout is decided here and nowhere else: the Hive
 ``col=value`` partition directories (:meth:`Warehouse.partition_dirs`,
@@ -37,7 +39,9 @@ import uuid
 from pathlib import Path
 from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, Row, SparkSession
+
+from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 
 #: Hive's sentinel directory for NULL partition values
 _HIVE_NULL_PART = "__HIVE_DEFAULT_PARTITION__"
@@ -54,19 +58,62 @@ def dynamic_overwrite(writer: DataFrameWriter) -> DataFrameWriter:
     return writer.mode("overwrite").option("partitionOverwriteMode", "dynamic")
 
 
-def swap_in(tmp: Path, final: Path) -> None:
-    """Replace directory ``final`` with the finished ``tmp``: rename
-    the live directory aside, rename ``tmp`` into place, delete the
-    old one.  The gap without a ``final`` is one rename to the next,
-    and the aside name ``{final}.__tmp_old_*`` matches the
-    ``{final}.__tmp_*`` pattern a crashed swap's leftovers are swept
-    by."""
-    aside = final.with_name(f"{final.name}.__tmp_old_{uuid.uuid4().hex[:8]}")
+def _snapshots(final: Path) -> list[Path]:
+    return sorted(final.parent.glob(f"{final.name}.__v_*"))
+
+
+def _drop_unfinished(final: Path) -> None:
+    for orphan in final.parent.glob(f"{final.name}.__tmp_*"):
+        shutil.rmtree(orphan)
+
+
+def staging_dir(final: Path) -> Path:
+    """A fresh sibling to write ``final``'s replacement into, after
+    deleting the ones killed writes left: one writer per table at a
+    time (a pipeline runs one lane per target under its lock)."""
+    _drop_unfinished(final)
+    return final.with_name(f"{final.name}.__tmp_{uuid.uuid4().hex[:8]}")
+
+
+def drop_snapshots(final: Path, keep: int = 0) -> int:
+    """Delete all but ``final``'s newest ``keep`` snapshots; returns
+    how many it deleted."""
+    snaps = _snapshots(final)
+    drop = snaps[: max(0, len(snaps) - keep)]
+    for p in drop:
+        shutil.rmtree(p)
+    return len(drop)
+
+
+def swap_in(tmp: Path, final: Path, keep: int | None = 0) -> None:
+    """Publish the finished directory ``tmp`` as ``final``: rename the
+    live directory aside as ``final``'s newest snapshot, then ``tmp``
+    into place (undoing the first rename if the second raises), then
+    delete snapshots beyond the newest ``keep`` (``None`` keeps all).
+    A kill between the renames leaves the old table as the newest
+    snapshot for :func:`restore_missing`."""
+    snap = None
     if final.exists():
-        final.rename(aside)
-    tmp.rename(final)
-    if aside.exists():
-        shutil.rmtree(aside)
+        stamps = [int(p.name.rsplit("_", 1)[1]) for p in _snapshots(final)]
+        ms = max([int(time.time() * 1000), *(s + 1 for s in stamps)])
+        snap = final.with_name(f"{final.name}.__v_{ms:015d}")
+        final.rename(snap)
+    try:
+        tmp.rename(final)
+    except OSError:
+        if snap is not None:
+            snap.rename(final)
+        raise
+    if keep is not None:
+        drop_snapshots(final, keep)
+
+
+def restore_missing(final: Path) -> None:
+    """The recovery step: rename ``final``'s newest snapshot back when
+    it has no live directory."""
+    snaps = [] if final.exists() else _snapshots(final)
+    if snaps:
+        snaps[-1].rename(final)
 
 
 def hadoop_fs(spark: SparkSession, loc: str):
@@ -179,12 +226,14 @@ def scratch_root(prefix: str, sf_dir: str) -> str:
 class Warehouse:
     """Directory-backed catalog with ``schema.table`` addressing.
 
-    ``keep_versions > 0`` turns every atomic replace into a snapshot:
-    the previous table directory is retained as
-    ``{table}.__v_{millis}`` (newest ``keep_versions`` kept), giving
-    the incremental pipeline a bad-batch recovery path — ``rollback``
-    swaps the latest snapshot back in; ``vacuum`` reclaims space.
-    A directory rename per write is the whole cost.
+    Every atomic replace keeps the previous table directory as a
+    snapshot ``{table}.__v_{millis}`` until the new one is live, then
+    keeps the newest ``keep_versions`` (:func:`swap_in`).  Retained
+    snapshots give the incremental pipeline a bad-batch recovery path —
+    ``rollback`` swaps the latest back in; ``vacuum`` reclaims space.
+    Opening a handle restores the newest snapshot of any table whose
+    live directory a killed write left missing; reads have no side
+    effects.
     """
 
     def __init__(
@@ -194,6 +243,10 @@ class Warehouse:
         self.root = Path(root)
         self.keep_versions = keep_versions
         self.root.mkdir(parents=True, exist_ok=True)
+        for schema in filter(Path.is_dir, self.root.iterdir()):
+            names = {p.name for p in schema.iterdir()}
+            for t in {n.rpartition(".__v_")[0] for n in names if ".__v_" in n} - names:
+                restore_missing(schema / t)
 
     # -- namespace ---------------------------------------------------------
     def create_schema(self, schema: str) -> None:
@@ -232,8 +285,7 @@ class Warehouse:
         p = self.root / schema
         if not p.exists():
             return []
-        # exclude in-flight swap directories (``{table}.__tmp_*``,
-        # see swap_in) and snapshots/sidecars (all ``.__`` names)
+        # staging dirs, snapshots and sidecars all carry a ``.__`` infix
         return sorted(
             d.name
             for d in p.iterdir()
@@ -241,7 +293,11 @@ class Warehouse:
         )
 
     def drop_table(self, schema: str, table: str) -> None:
+        """Delete ``schema.table`` with its snapshots and unfinished
+        writes (a snapshot left behind would come back on next open)."""
         p = self.table_path(schema, table)
+        drop_snapshots(p)
+        _drop_unfinished(p)
         if p.exists():
             shutil.rmtree(p)
 
@@ -260,22 +316,14 @@ class Warehouse:
         stats intersect every range are OPENED (identical rows, fewer
         files; the functions-level ``manifest_pruned_read`` wired into
         the catalog read path, r8 VERDICT item 7)."""
-        if ranges is None:
-            return self.spark.read.parquet(
-                str(self.table_path(schema, table))
-            )
-        if not use_manifest:
-            from pyspark.sql import functions as F
+        if ranges is not None and use_manifest:
+            return self.read_pruned(schema, table, ranges)[0]
+        from pyspark.sql import functions as F
 
-            df = self.spark.read.parquet(
-                str(self.table_path(schema, table))
-            )
-            for c, (lo, hi) in ranges.items():
-                df = df.filter(
-                    (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-                )
-            return df
-        return self.read_pruned(schema, table, ranges)[0]
+        df = self.read_with(self.spark, schema, table)
+        for c, (lo, hi) in (ranges or {}).items():
+            df = df.filter((F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi)))
+        return df
 
     def read_with(
         self, session: SparkSession, schema: str, table: str
@@ -368,7 +416,7 @@ class Warehouse:
         """
         self.create_schema(schema)
         final = self.table_path(schema, table)
-        tmp = final.with_name(f"{table}.__tmp_{uuid.uuid4().hex[:8]}")
+        tmp = staging_dir(final)
         if partition_by:
             df = df.repartition(*([coalesce] if coalesce else []), *partition_by)
         elif coalesce:
@@ -377,24 +425,14 @@ class Warehouse:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(str(tmp))
-        if self.keep_versions > 0 and final.exists():
-            snap = final.with_name(
-                f"{table}.__v_{int(time.time() * 1000):015d}"
-            )
-            final.rename(snap)
-            tmp.rename(final)
-            self._prune_versions(schema, table)
-        else:
-            swap_in(tmp, final)
+        swap_in(tmp, final, self.keep_versions)
 
     # -- snapshots ---------------------------------------------------------
-    def _version_dirs(self, schema: str, table: str) -> list[Path]:
-        return sorted((self.root / schema).glob(f"{table}.__v_*"))
-
     def list_versions(self, schema: str, table: str) -> list[int]:
         """Snapshot timestamps (ms), oldest first."""
         return [
-            int(p.name.rsplit("_", 1)[1]) for p in self._version_dirs(schema, table)
+            int(p.name.rsplit("_", 1)[1])
+            for p in _snapshots(self.table_path(schema, table))
         ]
 
     def read_version(self, schema: str, table: str, version_ms: int) -> DataFrame:
@@ -412,30 +450,43 @@ class Warehouse:
         just rolled away from — as a side effect of recovering.
         Reclaiming snapshot space is ``vacuum``'s explicit job.
         """
-        versions = self._version_dirs(schema, table)
+        final = self.table_path(schema, table)
+        versions = _snapshots(final)
         if not versions:
             raise FileNotFoundError(f"{schema}.{table}: no snapshots")
-        newest = versions[-1]
-        final = self.table_path(schema, table)
-        bad = final.with_name(f"{table}.__v_{int(time.time() * 1000):015d}")
-        if final.exists():
-            final.rename(bad)
-        newest.rename(final)
-        return int(newest.name.rsplit("_", 1)[1])
+        swap_in(versions[-1], final, keep=None)
+        return int(versions[-1].name.rsplit("_", 1)[1])
 
     def vacuum(self, schema: str, table: str, keep: int = 0) -> int:
         """Delete all but the newest ``keep`` snapshots; returns the
         number removed."""
-        versions = self._version_dirs(schema, table)
-        drop = versions[: len(versions) - keep] if keep else versions
-        for p in drop:
-            shutil.rmtree(p)
-        return len(drop)
+        return drop_snapshots(self.table_path(schema, table), keep)
 
-    def _prune_versions(self, schema: str, table: str) -> None:
-        versions = self._version_dirs(schema, table)
-        for p in versions[: max(0, len(versions) - self.keep_versions)]:
-            shutil.rmtree(p)
+    # -- generation pointers -----------------------------------------------
+    def read_pointer(self, sess: SparkSession, schema: str, table: str) -> Row | None:
+        """The row of 1-row pointer table ``schema.table`` read through
+        ``sess``, or None before its first flip."""
+        if not self.table_exists(schema, table):
+            return None
+        return self.read_with(sess, schema, table).collect()[0]
+
+    def flip_pointer(
+        self, sess: SparkSession, schema: str, table: str, ddl: str, *values
+    ) -> None:
+        """Commit a generation, after writing every table it names:
+        replace the pointer's row with ``values`` (typed by ``ddl``).
+        Readers resolve the pointer first: old generation or new."""
+        self.write_atomic(
+            local_rows_df(sess, [values], ddl), schema, table, coalesce=1
+        )
+
+    def drop_generations(self, schema: str, prefix: str, below: int) -> None:
+        """Drop the tables ``{prefix}{k}`` and ``{prefix}{k}__*`` with
+        integer ``k < below`` (``{prefix}raph`` is no generation)."""
+        for t in self.list_tables(schema):
+            k = t[len(prefix):].split("__", 1)[0]
+            if t.startswith(prefix) and k.isdigit() and int(k) < below:
+                self.drop_table(schema, t)
 
     def append(self, df: DataFrame, schema: str, table: str) -> None:
         """Append-only load (reference pg_loader.py:148-155 ``to_sql
@@ -652,10 +703,7 @@ class Warehouse:
         if lo_a is None or lo_b is None:
             # empty input (min/max aggregate to NULL): write the empty
             # table rather than TypeError-ing on None arithmetic below
-            self.create_schema(schema)
-            df.write.mode("overwrite").parquet(
-                str(self.table_path(schema, table))
-            )
+            self.write_atomic(df, schema, table)
             return
         top = (1 << bits) - 1
 
@@ -676,14 +724,13 @@ class Warehouse:
                 + F.shiftleft(F.shiftright(qa, i).bitwiseAND(1), 2 * i + 1)
                 + F.shiftleft(F.shiftright(qb, i).bitwiseAND(1), 2 * i)
             )
-        self.create_schema(schema)
-        (
+        self.write_atomic(
             df.withColumn("__z", z)
             .repartitionByRange(n_files, "__z")
             .sortWithinPartitions("__z")
-            .drop("__z")
-            .write.mode("overwrite")
-            .parquet(str(self.table_path(schema, table)))
+            .drop("__z"),
+            schema,
+            table,
         )
 
     def write_bucketed(
@@ -800,11 +847,10 @@ class Warehouse:
         out = df.repartition(n_shards)
         if order_col:
             out = out.sortWithinPartitions(order_col)
-        (
-            out.write.mode("overwrite")
-            .option("compression", compression)
-            .json(str(self.table_path(schema, table)))
-        )
+        final = self.table_path(schema, table)
+        tmp = staging_dir(final)
+        out.write.mode("overwrite").option("compression", compression).json(str(tmp))
+        swap_in(tmp, final, self.keep_versions)
 
     def read_jsonl(
         self, schema: str, table: str, read_schema: str | None = None
@@ -843,11 +889,11 @@ class Warehouse:
         every row of a shard and streams it into a single tar (the
         shard id each row carries is the ONE source of truth — tasks
         never recompute it, so no two tasks can open the same tar).
-        Shards land in a ``__tmp_*`` sibling and are swapped in at the
-        end, preserving the module's never-see-a-half-written-table
-        invariant.  The warehouse root must be visible to executors
-        (local FS here; a shared filesystem or an object-store upload
-        in the same iterator at production scale).
+        Shards land in a staging sibling published by :func:`swap_in`
+        at the end, so no reader sees a half-written export.  The
+        warehouse root must be visible to executors (local FS here; a
+        shared filesystem or an object-store upload in the same
+        iterator at production scale).
         """
         import io
         import json
@@ -856,8 +902,8 @@ class Warehouse:
         meta_cols = list(meta_cols or [])
         self.create_schema(schema)
         final = self.table_path(schema, table)
-        tmp = final.with_name(f"{table}.__tmp_{uuid.uuid4().hex[:8]}")
-        tmp.mkdir(parents=True)
+        tmp = staging_dir(final)
+        tmp.mkdir()
         tmp_s = str(tmp)
 
         cols = [key_col, payload_col, *meta_cols]
@@ -903,7 +949,7 @@ class Warehouse:
             .sortWithinPartitions("__shard", key_col)
             .foreachPartition(write_partition)
         )
-        swap_in(tmp, final)
+        swap_in(tmp, final, self.keep_versions)
 
     def read_tar_shards(
         self, schema: str, table: str, meta_schema: str | None = None

@@ -62,7 +62,6 @@ from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.cachereg import cache_tracked
 from bitcoin_datawarehouse_spark.functions.numeric import DEC, str_round6
-from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 
 from .catalog import Warehouse
 from .loader import BROADCAST_BATCH_MAX_ROWS
@@ -906,8 +905,8 @@ class StreamingMatView:
     are therefore ONE atomic step: each absorbed batch writes a NEW
     state generation ``{table}__g{k}`` and then flips the 1-row
     pointer ``{table}__ptr`` carrying BOTH the generation and the
-    batch_id (``write_atomic`` = tmp dir + rename).  A crash anywhere
-    leaves the pointer naming a complete pre-crash state whose
+    batch_id (``Warehouse.flip_pointer``).  A crash anywhere leaves
+    the pointer naming a complete pre-crash state whose
     batch_id forces the replayed trigger to re-absorb — there is no
     window where the state counted a batch the pointer doesn't know
     about (the model_registry pointer-flip pattern, with the ledger
@@ -952,10 +951,8 @@ class StreamingMatView:
         return f"{self.table}__g{k}"
 
     def _pointer(self, sess) -> tuple[int, int] | None:
-        if not self.wh.table_exists(self.schema, self._ptr()):
-            return None
-        row = self.wh.read_with(sess, self.schema, self._ptr()).collect()[0]
-        return int(row["gen"]), int(row["batch_id"])
+        row = self.wh.read_pointer(sess, self.schema, self._ptr())
+        return None if row is None else (int(row["gen"]), int(row["batch_id"]))
 
     def absorb(self, batch_df: DataFrame, batch_id: int) -> bool:
         """foreachBatch body.  Returns False when ``batch_id`` was
@@ -973,22 +970,14 @@ class StreamingMatView:
             old = self.wh.read_with(sess, self.schema, self._gen(ptr[0]))
             state = combine_states(old, delta, self.keys, self.measures)
         self.wh.write_atomic(state, self.schema, self._gen(gen), coalesce=4)
-        self.wh.write_atomic(
-            local_rows_df(sess, 
-                [(gen, batch_id)], "gen long, batch_id long"
-            ),
-            self.schema,
-            self._ptr(),
-            coalesce=1,
+        self.wh.flip_pointer(
+            sess, self.schema, self._ptr(), "gen long, batch_id long",
+            gen, batch_id,
         )
         # vacuum generations beyond the in-flight-reader grace window
-        for t in self.wh.list_tables(self.schema):
-            if t.startswith(f"{self.table}__g"):
-                suffix = t.rsplit("__g", 1)[1]
-                if not suffix.isdigit():
-                    continue  # a sibling like '{table}__graph', not a gen
-                if int(suffix) < gen - self.keep_back:
-                    self.wh.drop_table(self.schema, t)
+        self.wh.drop_generations(
+            self.schema, f"{self.table}__g", gen - self.keep_back
+        )
         return True
 
     def read(self, sess) -> DataFrame:
@@ -1062,26 +1051,14 @@ class DeltaStreamingMatView:
         return f"{self.table}__d{k}"
 
     def _pointer(self, sess) -> dict | None:
-        if not self.wh.table_exists(self.schema, self._ptr_t()):
-            return None
-        row = self.wh.read_with(sess, self.schema, self._ptr_t()).collect()[0]
-        return {
-            "base_gen": int(row["base_gen"]),
-            "n_absorbed": int(row["n_absorbed"]),
-            "batch_id": int(row["batch_id"]),
-            "delta_floor": int(row["delta_floor"]),
-        }
+        row = self.wh.read_pointer(sess, self.schema, self._ptr_t())
+        return None if row is None else {k: int(v) for k, v in row.asDict().items()}
 
     def _flip(self, sess, base_gen, n_absorbed, batch_id, delta_floor):
-        self.wh.write_atomic(
-            local_rows_df(sess, 
-                [(base_gen, n_absorbed, batch_id, delta_floor)],
-                "base_gen long, n_absorbed long, batch_id long, "
-                "delta_floor long",
-            ),
-            self.schema,
-            self._ptr_t(),
-            coalesce=1,
+        self.wh.flip_pointer(
+            sess, self.schema, self._ptr_t(),
+            "base_gen long, n_absorbed long, batch_id long, delta_floor long",
+            base_gen, n_absorbed, batch_id, delta_floor,
         )
 
     # -- streaming ---------------------------------------------------------
@@ -1166,13 +1143,8 @@ class DeltaStreamingMatView:
         # and the deltas above ITS floor — deltas ≤ old_floor were
         # already folded into the previous base, and bases older than
         # keep_back flips have no pinned readers left
-        for t in self.wh.list_tables(self.schema):
-            if t.startswith(f"{self.table}__b"):
-                suffix = t.rsplit("__b", 1)[1]
-                if suffix.isdigit() and int(suffix) < new_gen - self.keep_back:
-                    self.wh.drop_table(self.schema, t)
-            if t.startswith(f"{self.table}__d"):
-                suffix = t.rsplit("__d", 1)[1]
-                if suffix.isdigit() and int(suffix) <= old_floor:
-                    self.wh.drop_table(self.schema, t)
+        self.wh.drop_generations(
+            self.schema, f"{self.table}__b", new_gen - self.keep_back
+        )
+        self.wh.drop_generations(self.schema, f"{self.table}__d", old_floor + 1)
         return folded

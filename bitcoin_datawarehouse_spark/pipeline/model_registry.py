@@ -12,9 +12,8 @@ the whole-model swap atomic with one level of indirection:
 * every part of generation ``k`` is written to its own table
   ``{name}__g{k}__{part}`` — generations never share a table;
 * a 1-row POINTER table ``{name}__ptr`` names the current generation
-  and its part list, flipped LAST via one ``write_atomic`` (tmp dir +
-  rename — readers see the old pointer or the new one, never a torn
-  state);
+  and its part list, flipped LAST via ``Warehouse.flip_pointer`` —
+  readers see the old pointer or the new one, never a torn state;
 * :meth:`ModelRegistry.resolve` reads the pointer first, then opens
   exactly that generation's part tables — all reads are PATH-based
   parquet (``Warehouse.read_with``: fresh file listing per frame, no
@@ -47,7 +46,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 
 MODEL_SCHEMA = "models"
 
@@ -160,21 +158,18 @@ class ModelRegistry:
     def current_generation(
         self, sess: SparkSession, name: str
     ) -> int | None:
-        if not self.wh.table_exists(self.schema, self._ptr_table(name)):
-            return None
-        row = self.wh.read_with(
-            sess, self.schema, self._ptr_table(name)
-        ).collect()[0]
-        return int(row["gen"])
+        ptr = self.wh.read_pointer(sess, self.schema, self._ptr_table(name))
+        return None if ptr is None else int(ptr["gen"])
 
     def resolve(self, sess: SparkSession, name: str) -> ResolvedModel:
         """Open the CURRENT generation: pointer first (one atomic
         1-row read), then exactly that generation's part tables —
-        complete old or complete new, never mixed."""
+        complete old or complete new, never mixed.  Raises
+        ``FileNotFoundError`` for a model never published."""
         self._check(name)
-        ptr = self.wh.read_with(
-            sess, self.schema, self._ptr_table(name)
-        ).collect()[0]
+        ptr = self.wh.read_pointer(sess, self.schema, self._ptr_table(name))
+        if ptr is None:
+            raise FileNotFoundError(f"{self.schema}.{name}: model was never published")
         gen = int(ptr["gen"])
         parts = {
             p: self.wh.read_with(
@@ -223,19 +218,13 @@ class ModelRegistry:
             self.wh.write_atomic(
                 df, self.schema, self._part_table(name, gen, p)
             )
-        ptr = local_rows_df(sess, 
-            [(gen, ",".join(sorted(all_parts)))], "gen long, parts string"
-        )
-        self.wh.write_atomic(
-            ptr, self.schema, self._ptr_table(name), coalesce=1
+        self.wh.flip_pointer(
+            sess, self.schema, self._ptr_table(name),
+            "gen long, parts string", gen, ",".join(sorted(all_parts)),
         )
         # vacuum: anything older than gen - keep_back is beyond the
         # in-flight-reader grace window
-        for old in self.generations(name):
-            if old < gen - keep_back:
-                for t in self.wh.list_tables(self.schema):
-                    if t.startswith(f"{name}__g{old}__"):
-                        self.wh.drop_table(self.schema, t)
+        self.wh.drop_generations(self.schema, f"{name}__g", gen - keep_back)
         return gen
 
     def refresh_if_needed(

@@ -174,7 +174,7 @@ def merge_stream_into_partitioned_table(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bwh = Warehouse(batch_df.sparkSession, str(wh.root))
+        bwh = Warehouse(batch_df.sparkSession, str(wh.root), wh.keep_versions)
         Loader(bwh, schema, table).load_incremental_partitioned(
             batch_df,
             unique_keys=keys,
@@ -222,7 +222,7 @@ def scd2_stream_into_table(
     def scd2_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        bwh = Warehouse(batch_df.sparkSession, str(wh.root))
+        bwh = Warehouse(batch_df.sparkSession, str(wh.root), wh.keep_versions)
         ts = batch_df.agg(F.max(ts_col)).first()[0]
         cmp_cols = compare_cols or [
             c
@@ -288,7 +288,7 @@ def drift_monitor_stream(
         if batch_df.isEmpty():
             return
         bspark = batch_df.sparkSession
-        bwh = Warehouse(bspark, str(wh.root))
+        bwh = Warehouse(bspark, str(wh.root), wh.keep_versions)
         ref = local_rows_df(bspark, 
             list(reference), "bucket bigint, n_ref bigint"
         )

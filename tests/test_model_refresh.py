@@ -88,6 +88,13 @@ def test_vacuum_keeps_only_grace_window(spark, tmp_path):
     assert reg.generations("m") == [4]
 
 
+def test_resolve_of_unpublished_model_names_it(spark, tmp_path):
+    reg = ModelRegistry(Warehouse(spark, str(tmp_path / "wh")))
+    with pytest.raises(FileNotFoundError, match="ghost"):
+        reg.resolve(spark, "ghost")
+    assert reg.current_generation(spark, "ghost") is None
+
+
 def test_publish_rejects_bad_names_and_empty_parts(spark, tmp_path):
     reg = ModelRegistry(Warehouse(spark, str(tmp_path / "wh")))
     with pytest.raises(ValueError):

@@ -919,8 +919,15 @@ def test_snapshot_rollback_recovers_bad_batch(spark, tmp_path):
     ld.load_incremental(rows_df(spark, [{"id": 1, "v": -999.0}]), ["id"])
     assert {r["id"]: r["v"] for r in wh.read("bitcoin", "snap").collect()}[1] == -999.0
 
+    before = wh.list_versions("bitcoin", "snap")
     restored = wh.rollback("bitcoin", "snap")
-    assert restored in wh.list_versions("bitcoin", "snap") or True
+    after = wh.list_versions("bitcoin", "snap")
+    # the restored version is live again, the rolled-away state is the
+    # newest snapshot
+    assert restored == before[-1] and restored not in after
+    assert after[-1] not in before
+    bad = wh.read_version("bitcoin", "snap", after[-1])
+    assert {r["id"]: r["v"] for r in bad.collect()}[1] == -999.0
     assert {r["id"]: r["v"] for r in wh.read("bitcoin", "snap").collect()} == good
 
     # old snapshots readable; vacuum reclaims them

@@ -623,8 +623,9 @@ def test_vector_kernels_live_only_in_functions_vectors():
 
 def test_physical_layout_lives_only_in_catalog():
     """pipeline/catalog.py is the one owner of the warehouse's physical
-    layout.  The dynamic partition-overwrite conf and the ``basePath``
-    partition read appear nowhere else in the package, and nothing
+    layout.  The dynamic partition-overwrite conf, the ``basePath``
+    partition read and the staging/snapshot directory names appear
+    nowhere else in the package, and nothing
     reaches for partition helpers in the loader, which holds merge
     semantics only.  One sanctioned exception: ZOrderedTable's own
     z-block reads (operators/ztable.py), whose block directories live
@@ -643,6 +644,9 @@ def test_physical_layout_lives_only_in_catalog():
             re.compile(r"option\(\s*[\"']basePath[\"']"),
             {owner, pkg / "operators" / "ztable.py"},
         ),
+        # staging and snapshot directory names: every directory replace
+        # is staged and published by the catalog
+        (re.compile(r"__tmp_|__v_"), {owner}),
     ]
     offenders = []
     for py in sorted(pkg.rglob("*.py")):
@@ -667,7 +671,8 @@ def test_physical_layout_lives_only_in_catalog():
     assert not offenders, (
         "physical-layout code outside pipeline/catalog.py (use "
         "Warehouse.read_partitions / overwrite_partitions / "
-        "dynamic_overwrite):\n" + "\n".join(offenders)
+        "dynamic_overwrite, catalog.staging_dir / swap_in):\n"
+        + "\n".join(offenders)
     )
     assert not moved & set(vars(loader)), "partition helpers back in loader"
 
