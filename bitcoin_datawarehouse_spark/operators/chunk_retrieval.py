@@ -64,9 +64,11 @@ from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark import registry as _registry
 from bitcoin_datawarehouse_spark.functions.vectors import (
-    dim_ordered_dot_sq,
+    SQL_COS,
+    cosine_grid,
     dim_ordered_norms,
     read_vectors,
+    sql_normed,
 )
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
     IVF_N_CENTROIDS,
@@ -241,13 +243,6 @@ def _chunk_retrieval_impl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _chunk_retrieval_serve(idx, queries)
 
 
-#: the cross-engine cosine fold (DuckDB side)
-_SQL_CHUNK_COS = (
-    "list_reduce(list_transform(list_zip({a}.e, {b}.e),"
-    " p -> p[1] * p[2]), (acc, x) -> acc + x) / ({a}.nrm * {b}.nrm)"
-)
-
-
 def _chunk_ivf_ctes() -> str:
     """The shared WITH-chain of the chunk gates: chunk CTE verbatim →
     token-hash TF vectors → IVF (rank-selected centroids, assignment,
@@ -261,7 +256,7 @@ def _chunk_ivf_ctes() -> str:
         "((instr('0123456789abcdef', substr(md5(t), 1, 1)) - 1) * 16"
         " + (instr('0123456789abcdef', substr(md5(t), 2, 1)) - 1))"
     )
-    cos = _SQL_CHUNK_COS
+    cos = SQL_COS
     return f"""chv AS (
       SELECT doc_id * {M} + chunk_ix AS vec_id, chunk_text
       FROM ({chunks_sql})
@@ -284,12 +279,7 @@ def _chunk_ivf_ctes() -> str:
       LEFT JOIN ccnt c ON c.vec_id = v.vec_id AND c.dim = d.dim
       GROUP BY v.vec_id
     ),
-    n AS (
-      SELECT vec_id, e,
-             sqrt(list_reduce(list_transform(e, x -> x * x),
-                              (acc, x) -> acc + x)) AS nrm
-      FROM cvec
-    ),
+    {sql_normed("n", "cvec")},
     cent AS (SELECT * FROM n ORDER BY vec_id LIMIT {IVF_N_CENTROIDS}),
     assign AS (
       SELECT vec_id, centroid_id FROM (
@@ -434,8 +424,7 @@ def similarity_chunk_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             cand = pdf["vec_id"].to_numpy(dtype=np.int64)
             cmat = read_vectors(pdf["e"])
-            dot, cn, _ = dim_ordered_dot_sq(cmat, qmat)
-            cos = dot / np.outer(np.sqrt(cn), qn)
+            cos, _ = cosine_grid(cmat, qmat, qn)
             cdoc = cand // CHUNK_VEC_MOD
             out_q, out_c, out_s = [], [], []
             for qi in range(len(qids)):
@@ -487,7 +476,7 @@ def _chunk_recall_oracle() -> str:
     )
 
     M = CHUNK_VEC_MOD
-    cos = _SQL_CHUNK_COS
+    cos = SQL_COS
     return f"""
     WITH {_chunk_ivf_ctes()},
     bf AS (

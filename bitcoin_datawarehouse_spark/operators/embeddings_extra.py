@@ -18,16 +18,18 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.vectors import (
+    SQL_COS,
+    SQL_NORMED,
+    cosine_col,
+    cosine_grid,
     cosine_row_blocks,
-    dim_ordered_dot_sq,
     dim_ordered_norms,
+    norm_col,
     read_vectors,
 )
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
-    dot_col,
-    norm_col,
 )
 from bitcoin_datawarehouse_spark.functions.scalars import scalar_cross
 from bitcoin_datawarehouse_spark.registry import query
@@ -40,22 +42,6 @@ from bitcoin_datawarehouse_spark.tables import load_table
 COSINE_DUP_THRESHOLD = 0.35
 IVF_N_CENTROIDS = 16
 IVF_NPROBE = 2
-
-_SQL_NORMED = """
-  v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-  n AS (
-    SELECT vec_id, e,
-           sqrt(list_reduce(list_transform(e, x -> x * x),
-                            (acc, x) -> acc + x)) AS nrm
-    FROM v
-  )
-"""
-
-_SQL_COS = (
-    "list_reduce(list_transform(list_zip({a}.e, {b}.e), p -> p[1] * p[2]),"
-    " (acc, x) -> acc + x) / ({a}.nrm * {b}.nrm)"
-)
-
 
 def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # no repartition here: every consumer shuffles immediately (block-
@@ -71,12 +57,12 @@ def _normed(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "dedup_embedding_cosine",
     oracle=f"""
-    WITH {_SQL_NORMED}
+    WITH {SQL_NORMED}
     SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
-           {_SQL_COS.format(a="a", b="b")} AS cosine
+           {SQL_COS.format(a="a", b="b")} AS cosine
     FROM n a
     JOIN n b ON a.vec_id < b.vec_id
-    WHERE {_SQL_COS.format(a="a", b="b")} >= {COSINE_DUP_THRESHOLD}
+    WHERE {SQL_COS.format(a="a", b="b")} >= {COSINE_DUP_THRESHOLD}
     """,
 )
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,12 +199,12 @@ def _lsh_dedup_oracle(bits: int = None, bits_expr: str = None) -> str:
       JOIN sigs b ON a.tbl = b.tbl AND a.bucket = b.bucket
                   AND a.vec_id < b.vec_id
     ),
-    {_SQL_NORMED.strip()}
-    SELECT c.vec_a, c.vec_b, {_SQL_COS.format(a="x", b="y")} AS cosine
+    {SQL_NORMED.strip()}
+    SELECT c.vec_a, c.vec_b, {SQL_COS.format(a="x", b="y")} AS cosine
     FROM cands c
     JOIN n x ON x.vec_id = c.vec_a
     JOIN n y ON y.vec_id = c.vec_b
-    WHERE {_SQL_COS.format(a="x", b="y")} >= {COSINE_DUP_THRESHOLD}
+    WHERE {SQL_COS.format(a="x", b="y")} >= {COSINE_DUP_THRESHOLD}
     """
 
 
@@ -460,14 +446,14 @@ def dedup_embedding_cosine_lsh_wide(
 
 
 _SQL_IVF_COMMON = f"""
-  {_SQL_NORMED},
+  {SQL_NORMED},
   cent AS (SELECT * FROM n WHERE vec_id < {IVF_N_CENTROIDS}),
   assign AS (
     SELECT vec_id, centroid_id FROM (
       SELECT x.vec_id, c.vec_id AS centroid_id,
              ROW_NUMBER() OVER (
                PARTITION BY x.vec_id
-               ORDER BY {_SQL_COS.format(a="x", b="c")} DESC, c.vec_id
+               ORDER BY {SQL_COS.format(a="x", b="c")} DESC, c.vec_id
              ) AS rn
       FROM n x CROSS JOIN cent c
     ) WHERE rn = 1
@@ -481,14 +467,15 @@ def nearest_centroid(emb: DataFrame, cent: DataFrame) -> DataFrame:
 
     Shared by the fixed-centroid IVF quantizer below and the trained
     k-means quantizer (operators/kmeans.py) — one place for any future
-    tie-break or NaN-handling change.
+    tie-break change.  The cosine itself, and what a zero-norm vector
+    scores, is ``functions.vectors.cosine_col``'s.
 
     The argmax is a ``min_by`` hash aggregate over the (-cos, id)
     struct: lexicographic min = max cosine with ties to the smallest
     id — map-side partial combine reduces K scored rows per vector to
     one BEFORE the shuffle (a window argmax would shuffle+sort all K).
     """
-    cos = dot_col(F.col("e"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
+    cos = cosine_col(F.col("e"), F.col("nrm"), F.col("ce"), F.col("cn"))
     return (
         scalar_cross(emb, cent)
         .select("vec_id", "centroid_id", cos.alias("cos"))
@@ -583,8 +570,7 @@ def probe_assignments(
             if pdf.empty:
                 continue
             qmat = read_vectors(pdf["qe"])
-            dot, c_sq, q_sq = dim_ordered_dot_sq(cmat, qmat)
-            cos = dot / np.outer(np.sqrt(c_sq), np.sqrt(q_sq))
+            cos, _ = cosine_grid(cmat, qmat)
             out_q, out_c, out_e = [], [], []
             qid_arr = pdf["query_id"].to_numpy(dtype=np.int64)
             for qi in range(len(qid_arr)):
@@ -636,8 +622,7 @@ def _nearest_centroid_kernel_impl(
             if pdf.empty:
                 continue
             emat = read_vectors(pdf["e"])
-            dot, e_sq, _ = dim_ordered_dot_sq(emat, cmat)
-            cos = dot / np.outer(np.sqrt(e_sq), cn)
+            cos, _ = cosine_grid(emat, cmat, cn)
             best = np.argmax(cos, axis=1)  # first max → smallest id
             out = {
                 "vec_id": pdf["vec_id"].to_numpy(dtype=np.int64),
@@ -694,7 +679,7 @@ def _ivf_topk_oracle(nprobe_expr: str, extra_ctes: str = "") -> str:
         SELECT q.vec_id AS query_id, c.vec_id AS centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_COS.format(a="q", b="c")} DESC, c.vec_id
+                 ORDER BY {SQL_COS.format(a="q", b="c")} DESC, c.vec_id
                ) AS rn
         FROM n q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES}
@@ -708,7 +693,7 @@ def _ivf_topk_oracle(nprobe_expr: str, extra_ctes: str = "") -> str:
     ),
     scored AS (
       SELECT cd.query_id, cd.cand_id,
-             {_SQL_COS.format(a="q", b="c")} AS cosine
+             {SQL_COS.format(a="q", b="c")} AS cosine
       FROM cands cd
       JOIN n q ON q.vec_id = cd.query_id
       JOIN n c ON c.vec_id = cd.cand_id
@@ -816,8 +801,7 @@ def _ivf_topk_impl(
         q = np.array(pdf["qe"].iloc[0], dtype=np.float64)
         cand_ids = pdf["cand_id"].to_numpy(dtype=np.int64)
         cmat = read_vectors(pdf["ce2"])
-        dot, cn, q_sq = dim_ordered_dot_sq(cmat, q[None, :])
-        cos = dot[:, 0] / (np.sqrt(q_sq[0]) * np.sqrt(cn))
+        cos = cosine_grid(cmat, q[None, :])[0][:, 0]
         order = np.lexsort((cand_ids, -cos))[:TOP_K]
         return pd.DataFrame(
             {
@@ -968,8 +952,7 @@ def probe_ranks(queries: DataFrame, cids, cmat) -> DataFrame:
             if pdf.empty:
                 continue
             qmat = read_vectors(pdf["qe"])
-            dot, c_sq, q_sq = dim_ordered_dot_sq(cmat, qmat)
-            cos = dot / np.outer(np.sqrt(c_sq), np.sqrt(q_sq))
+            cos, _ = cosine_grid(cmat, qmat)
             qid_arr = pdf["query_id"].to_numpy(dtype=np.int64)
             out_q, out_c, out_r = [], [], []
             for qi in range(len(qid_arr)):
@@ -1061,7 +1044,7 @@ def _auto_nprobe_oracle() -> str:
       SELECT q.vec_id AS query_id, c.vec_id AS centroid_id,
              ROW_NUMBER() OVER (
                PARTITION BY q.vec_id
-               ORDER BY {_SQL_COS.format(a="q", b="c")} DESC, c.vec_id
+               ORDER BY {SQL_COS.format(a="q", b="c")} DESC, c.vec_id
              ) AS prank
       FROM n q CROSS JOIN cent c
       WHERE q.vec_id < {N_QUERIES}
@@ -1245,11 +1228,11 @@ _registry.ORACLES["dedup_method_agreement"] = _method_agreement_oracle()
 @query(
     "decontam_semantic_overlap",
     oracle=f"""
-    WITH {_SQL_NORMED},
+    WITH {SQL_NORMED},
     ev AS (SELECT * FROM n WHERE vec_id % 97 = 0),
     c AS (SELECT * FROM n WHERE vec_id % 97 <> 0),
     pairs AS (
-      SELECT c.vec_id, {_SQL_COS.format(a="c", b="ev")} AS cos
+      SELECT c.vec_id, {SQL_COS.format(a="c", b="ev")} AS cos
       FROM c JOIN ev ON TRUE
     )
     SELECT vec_id,

@@ -51,7 +51,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.vectors import (
-    dim_ordered_dot_sq,
+    cosine_grid,
+    norm_col,
     read_vectors,
 )
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
@@ -66,7 +67,6 @@ from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
-    norm_col,
 )
 from bitcoin_datawarehouse_spark.pipeline.catalog import Warehouse
 from bitcoin_datawarehouse_spark.registry import query
@@ -545,9 +545,8 @@ class IvfIndex:
 
         spark = queries.sparkSession
         # cn (the stored JVM-fold norms) is not consumed here: the
-        # probe cosines recompute centroid norms inside the SAME
-        # dim_ordered_dot_sq pass as the dots, keeping every probe
-        # term on the one pinned accumulation order
+        # probe kernel recomputes the centroid norms in numpy, as
+        # similarity_ivf_topk's does, bit-equal by the vectors contract
         cids, cmat, _cn = self._codebook()
         probes = probe_assignments(queries, cids, cmat, self.nprobe)
         # model-sized collect (≤ n_centroids values), NOT batch-sized
@@ -613,8 +612,7 @@ class IvfIndex:
                     q = np.array(grp["qe"].iloc[0], dtype=np.float64)
                     cand = grp["cand_id"].to_numpy(dtype=np.int64)
                     gmat = read_vectors(grp["e"])
-                    gdot, g_sq, qq = dim_ordered_dot_sq(gmat, q[None, :])
-                    gcos = gdot[:, 0] / (np.sqrt(qq[0]) * np.sqrt(g_sq))
+                    gcos = cosine_grid(gmat, q[None, :])[0][:, 0]
                     order = np.lexsort((cand, -gcos))[:top_k]
                     out_q.extend([int(qid)] * len(order))
                     out_c.extend(cand[order])

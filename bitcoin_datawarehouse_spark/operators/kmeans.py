@@ -34,13 +34,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.numeric import SQL_STR_ROUND6, davg
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    SQL_COS,
+    SQL_NORMED,
+    norm_col,
+    sql_normed,
+)
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
     IVF_N_CENTROIDS,
-    _SQL_NORMED,
     _normed,
     nearest_centroid,
 )
-from bitcoin_datawarehouse_spark.operators.similarity import norm_col
 from bitcoin_datawarehouse_spark.registry import query
 
 EMB_DIM = 64
@@ -82,10 +86,7 @@ def kmeans_fit(
 
 def _sql_assign(name: str, cent: str) -> str:
     """Assignment CTE: every vector → nearest centroid of ``cent``."""
-    cos = (
-        "list_reduce(list_transform(list_zip(x.e, c.e), p -> p[1] * p[2]),"
-        " (acc, x) -> acc + x) / (x.nrm * c.nrm)"
-    )
+    cos = SQL_COS.format(a="x", b="c")
     return f"""{name} AS (
       SELECT vec_id, cid FROM (
         SELECT x.vec_id, c.cid,
@@ -117,12 +118,7 @@ def _sql_update(name: str, assign: str) -> str:
     {name}_e AS (
       SELECT cid, list(m ORDER BY i) AS e FROM {name}_u GROUP BY cid
     ),
-    {name} AS (
-      SELECT cid, e,
-             sqrt(list_reduce(list_transform(e, x -> x * x),
-                              (acc, x) -> acc + x)) AS nrm
-      FROM {name}_e
-    )"""
+    {sql_normed(name, name + "_e")}"""
 
 
 def _kmeans_oracle(k: int, iters: int) -> str:
@@ -141,7 +137,7 @@ def _kmeans_oracle(k: int, iters: int) -> str:
     parts.append(_sql_assign("afinal", f"c{iters}"))
     ctes = ",\n    ".join(parts)
     return f"""
-    WITH {_SQL_NORMED},
+    WITH {SQL_NORMED},
     {ctes}
     SELECT vec_id, cid AS centroid_id FROM afinal
     """

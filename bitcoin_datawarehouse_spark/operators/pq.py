@@ -39,7 +39,8 @@ from bitcoin_datawarehouse_spark.functions.numeric import (
     str_round6,
 )
 from bitcoin_datawarehouse_spark.functions.vectors import (
-    dim_ordered_dot_sq,
+    SQL_COS,
+    cosine_grid,
     read_vectors,
 )
 from bitcoin_datawarehouse_spark.operators.similarity import (
@@ -358,8 +359,7 @@ def _assign_and_encode(
             if pdf.empty:
                 continue
             emat = read_vectors(pdf["e"])
-            dot, e_sq, _ = dim_ordered_dot_sq(emat, cmat)
-            cos = dot / np.outer(np.sqrt(e_sq), cn)
+            cos, _ = cosine_grid(emat, cmat, cn)
             best = np.argmax(cos, axis=1)  # first max → smallest id
             packed = np.zeros(len(emat), dtype=np.int64)
             for m in range(PQ_M):
@@ -383,7 +383,6 @@ def _assign_and_encode(
 
 def _ivfpq_oracle() -> str:
     from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
-        _SQL_COS,
         _SQL_IVF_COMMON,
         IVF_NPROBE,
     )
@@ -396,7 +395,7 @@ def _ivfpq_oracle() -> str:
         SELECT q.vec_id AS query_id, c.vec_id AS centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY q.vec_id
-                 ORDER BY {_SQL_COS.format(a="q", b="c")} DESC, c.vec_id
+                 ORDER BY {SQL_COS.format(a="q", b="c")} DESC, c.vec_id
                ) AS rn
         FROM n q CROSS JOIN cent c
         WHERE q.vec_id < {N_QUERIES}

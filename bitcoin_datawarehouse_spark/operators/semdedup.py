@@ -38,13 +38,13 @@ from bitcoin_datawarehouse_spark.functions.numeric import (
     str_round6,
 )
 from bitcoin_datawarehouse_spark.functions.vectors import (
+    SQL_COS,
+    SQL_NORMED,
+    cosine_grid,
     cosine_row_blocks,
-    dim_ordered_dot_sq,
     read_vectors,
 )
 from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
-    _SQL_COS,
-    _SQL_NORMED,
     COSINE_DUP_THRESHOLD,
     IVF_N_CENTROIDS,
     _nearest_centroid_kernel_impl,
@@ -106,11 +106,9 @@ def _cluster_flags(
         ci = int(np.searchsorted(ids, cid))
         vids = pdf["vec_id"].to_numpy(dtype=np.int64)
         emat = read_vectors(pdf["e"])
-        # member → own-centroid cosine; e_sq is the dim-ordered sum of
-        # squares, so nrm is bit-equal to norm_col's fold
-        cdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[ci : ci + 1, :])
-        nrm = np.sqrt(e_sq)
-        cos_c = cdot[:, 0] / (nrm * cn[ci])
+        # member → own-centroid cosine; nrm feeds the pair grid too
+        ccos, nrm = cosine_grid(emat, cmat[ci : ci + 1], cn[ci : ci + 1])
+        cos_c = ccos[:, 0]
         return pd.DataFrame(
             {
                 "vec_id": vids,
@@ -158,21 +156,21 @@ def _semdedup_oracle(k_expr: str) -> str:
     follows the Spark side at ANY scale factor instead of pinning one
     fixture K)."""
     return f"""
-    WITH {_SQL_NORMED},
+    WITH {SQL_NORMED},
     cent AS (SELECT * FROM n WHERE vec_id < ({k_expr})),
     assign AS (
       SELECT vec_id, centroid_id FROM (
         SELECT x.vec_id, c.vec_id AS centroid_id,
                ROW_NUMBER() OVER (
                  PARTITION BY x.vec_id
-                 ORDER BY {_SQL_COS.format(a="x", b="c")} DESC, c.vec_id
+                 ORDER BY {SQL_COS.format(a="x", b="c")} DESC, c.vec_id
                ) AS rn
         FROM n x CROSS JOIN cent c
       ) WHERE rn = 1
     ),
     m AS (
       SELECT a.vec_id, a.centroid_id,
-             {_SQL_COS.format(a="x", b="c")} AS cos_c,
+             {SQL_COS.format(a="x", b="c")} AS cos_c,
              x.e, x.nrm
       FROM assign a
       JOIN n x ON x.vec_id = a.vec_id
@@ -186,7 +184,7 @@ def _semdedup_oracle(k_expr: str) -> str:
        AND i.vec_id <> j.vec_id
        AND (j.cos_c < i.cos_c
             OR (j.cos_c = i.cos_c AND j.vec_id < i.vec_id))
-       AND {_SQL_COS.format(a="i", b="j")} >= {COSINE_DUP_THRESHOLD}
+       AND {SQL_COS.format(a="i", b="j")} >= {COSINE_DUP_THRESHOLD}
     )
     SELECT m.vec_id, m.centroid_id,
            {SQL_STR_ROUND6("m.cos_c")} AS cos_centroid,
@@ -415,8 +413,7 @@ def _fine_to_coarse(cent: DataFrame, coarse: DataFrame, codebooks=None):
     else:
         ids, cmat, cn = collect_codebook(cent)
         cids, ccmat, ccn = collect_codebook(coarse)
-    fdot, _, _ = dim_ordered_dot_sq(cmat, ccmat)
-    fcos = fdot / np.outer(cn, ccn)
+    fcos, _ = cosine_grid(cmat, ccmat, ccn)
     fbest = np.argmax(fcos, axis=1)  # first max → smallest coarse id
     occupied = np.unique(fbest)  # ascending coarse column indices
     cell_fines = {
@@ -432,9 +429,7 @@ def _route_cells(e, occupied, occ_cc, occ_ccn):
     variants share, so their cells agree row for row."""
     import numpy as np
 
-    emat = read_vectors(e)
-    xdot, x_sq, _ = dim_ordered_dot_sq(emat, occ_cc)
-    xcos = xdot / np.outer(np.sqrt(x_sq), occ_ccn)
+    xcos, _ = cosine_grid(read_vectors(e), occ_cc, occ_ccn)
     return occupied[np.argmax(xcos, axis=1)]
 
 
@@ -509,8 +504,7 @@ def semdedup_flags_two_level_split(
     def fine_assign(pdf: pd.DataFrame) -> pd.DataFrame:
         fidx = cell_fines[int(pdf["cell_id"].iloc[0])]
         emat = read_vectors(pdf["e"])
-        fdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[fidx])
-        fcos = fdot / np.outer(np.sqrt(e_sq), cn[fidx])
+        fcos, _ = cosine_grid(emat, cmat[fidx], cn[fidx])
         fa = np.argmax(fcos, axis=1)  # first max → smallest fine id
         return pd.DataFrame(
             {
@@ -610,9 +604,7 @@ def semdedup_flags_two_level(
         vids = pdf["vec_id"].to_numpy(dtype=np.int64)
         emat = read_vectors(pdf["e"])
         # fine assignment: ONE (rows × cell fines) dim-ordered grid
-        fdot, e_sq, _ = dim_ordered_dot_sq(emat, cmat[fidx])
-        nrm = np.sqrt(e_sq)
-        fcos = fdot / np.outer(nrm, cn[fidx])
+        fcos, nrm = cosine_grid(emat, cmat[fidx], cn[fidx])
         fa = np.argmax(fcos, axis=1)  # first max → smallest fine id
         # member → own-centroid cosine, straight from the grid column
         cos_c = fcos[np.arange(len(vids)), fa]
@@ -651,11 +643,11 @@ def _two_level_oracle() -> str:
     integer-exact sizing scalars, fine→coarse routing, occupied-cell
     restriction, within-cell fine argmax, then the identical
     keep-farthest decision as the flat oracle."""
-    cos_fc = _SQL_COS.format(a="f", b="c")
-    cos_xc = _SQL_COS.format(a="x", b="c")
-    cos_xf = _SQL_COS.format(a="x", b="f")
+    cos_fc = SQL_COS.format(a="f", b="c")
+    cos_xc = SQL_COS.format(a="x", b="c")
+    cos_xf = SQL_COS.format(a="x", b="f")
     return f"""
-    WITH {_SQL_NORMED},
+    WITH {SQL_NORMED},
     {TWO_LEVEL_KK_SQL},
     ranked AS (
       SELECT vec_id, ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS rk
@@ -708,7 +700,7 @@ def _two_level_oracle() -> str:
     ),
     m AS (
       SELECT a.vec_id, a.centroid_id,
-             {_SQL_COS.format(a="x", b="c")} AS cos_c,
+             {SQL_COS.format(a="x", b="c")} AS cos_c,
              x.e, x.nrm
       FROM assign a
       JOIN n x ON x.vec_id = a.vec_id
@@ -722,7 +714,7 @@ def _two_level_oracle() -> str:
        AND i.vec_id <> j.vec_id
        AND (j.cos_c < i.cos_c
             OR (j.cos_c = i.cos_c AND j.vec_id < i.vec_id))
-       AND {_SQL_COS.format(a="i", b="j")} >= {COSINE_DUP_THRESHOLD}
+       AND {SQL_COS.format(a="i", b="j")} >= {COSINE_DUP_THRESHOLD}
     )
     SELECT m.vec_id, m.centroid_id,
            {SQL_STR_ROUND6("m.cos_c")} AS cos_centroid,

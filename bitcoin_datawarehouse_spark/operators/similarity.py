@@ -24,13 +24,17 @@ key join then rerank.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.vectors import (
+    SQL_COS,
+    SQL_NORMED,
+    cosine_col,
+    cosine_grid,
     dim_ordered_dot,
-    dim_ordered_dot_sq,
     dim_ordered_norms,
+    norm_col,
     read_vectors,
 )
 from bitcoin_datawarehouse_spark.registry import query
@@ -47,40 +51,16 @@ LSH_BITS_PER_TABLE = 5
 _DEC = "decimal(38,30)"
 
 
-def _fold_sum(arr: Column) -> Column:
-    """Left-to-right double fold — deterministic op sequence, mirrored
-    by DuckDB's list_reduce."""
-    return F.aggregate(arr, F.lit(0.0), lambda acc, x: acc + x)
-
-
-def dot_col(a: Column, b: Column) -> Column:
-    """Deterministic dot product of two double arrays."""
-    return _fold_sum(F.zip_with(a, b, lambda x, y: x * y))
-
-
-def norm_col(a: Column) -> Column:
-    return F.sqrt(_fold_sum(F.transform(a, lambda x: x * x)))
-
-
-#: named so the round-7 recall harness (embeddings_extra.
-#: similarity_ivf_recall) can embed the exact same semantics as a CTE
-BF_TOPK_ORACLE = f"""
-    WITH v AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-    ),
-    n AS (
-      SELECT vec_id, e,
-             sqrt(list_reduce(list_transform(e, x -> x * x),
-                              (acc, x) -> acc + x)) AS nrm
-      FROM v
-    ),
+def _topk_oracle(pairs: str, ctes: str = "") -> str:
+    """Exact cosine top-k oracle over the (query ``q``, candidate
+    ``c``) rows of the FROM clause ``pairs``, both rows of ``n``;
+    ``ctes`` are WITH items that ``pairs`` reads, ending in a comma."""
+    return f"""
+    WITH {ctes}{SQL_NORMED},
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
-             list_reduce(list_transform(list_zip(q.e, c.e), p -> p[1] * p[2]),
-                         (acc, x) -> acc + x) / (q.nrm * c.nrm) AS cosine
-      FROM n q
-      JOIN n c ON q.vec_id <> c.vec_id
-      WHERE q.vec_id < {N_QUERIES}
+             {SQL_COS.format(a="q", b="c")} AS cosine
+      FROM {pairs}
     ),
     ranked AS (
       SELECT query_id, cand_id, cosine,
@@ -92,6 +72,13 @@ BF_TOPK_ORACLE = f"""
     SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk
     FROM ranked WHERE rnk <= {TOP_K}
     """
+
+
+#: named so the round-7 recall harness (embeddings_extra.
+#: similarity_ivf_recall) can embed the exact same semantics as a CTE
+BF_TOPK_ORACLE = _topk_oracle(
+    f"n q JOIN n c ON q.vec_id <> c.vec_id WHERE q.vec_id < {N_QUERIES}"
+)
 
 
 @query("similarity_bruteforce_topk", oracle=BF_TOPK_ORACLE)
@@ -145,8 +132,7 @@ def similarity_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             cand = pdf["vec_id"].to_numpy(dtype=np.int64)
             cmat = read_vectors(pdf["e"])
-            dot, cn, _ = dim_ordered_dot_sq(cmat, qmat)
-            cos = dot / np.outer(np.sqrt(cn), qn)
+            cos, _ = cosine_grid(cmat, qmat, qn)
             out_q, out_c, out_s = [], [], []
             for qi in range(len(qids)):
                 keep = cand != qids[qi]
@@ -206,7 +192,7 @@ def sigs_sql(
     # exploded rows: the Spark side computes signatures per vector
     # inside an Arrow kernel whose accumulation order is the dimension
     # order, and an ordered IEEE fold is the cross-engine contract the
-    # whole cosine family already uses (dot_col / _SQL_COS).  A
+    # whole cosine family already uses (functions.vectors).  A
     # seedless list_reduce starts at the first element; the kernel
     # starts at 0.0 — identical, since 0.0 + x == x exactly.
     return f"""vsig AS (
@@ -239,6 +225,28 @@ def sigs_sql(
 
 
 _SQL_SIGS = sigs_sql()
+
+
+def _ann_oracle(probes: str = "qb", probe_ctes: str = "") -> str:
+    """LSH ANN oracle: the candidates of a query share a (table,
+    bucket) with one of its ``probes`` rows (query_id, tbl, bucket);
+    ``qb`` holds each query's own buckets and ``probe_ctes`` may
+    derive more from it.  Exact cosine reranks the candidates."""
+    return _topk_oracle(
+        "cands p JOIN n q ON q.vec_id = p.query_id"
+        " JOIN n c ON c.vec_id = p.cand_id",
+        ctes=f"""{_SQL_SIGS},
+    qb AS (
+      SELECT vec_id AS query_id, tbl, bucket FROM sigs
+      WHERE vec_id < {N_QUERIES}
+    ),{probe_ctes}
+    cands AS (
+      SELECT DISTINCT pr.query_id, s.vec_id AS cand_id
+      FROM {probes} pr JOIN sigs s ON s.tbl = pr.tbl AND s.bucket = pr.bucket
+      WHERE s.vec_id <> pr.query_id
+    ),
+""",
+    )
 
 
 @query(
@@ -353,46 +361,7 @@ def lsh_bucket_assignments(
     return emb.mapInPandas(gen, schema)
 
 
-@query(
-    "similarity_ann_lsh",
-    oracle=f"""
-    WITH {_SQL_SIGS},
-    qb AS (
-      SELECT vec_id AS query_id, tbl, bucket FROM sigs
-      WHERE vec_id < {N_QUERIES}
-    ),
-    cands AS (
-      SELECT DISTINCT qb.query_id, s.vec_id AS cand_id
-      FROM qb JOIN sigs s ON s.tbl = qb.tbl AND s.bucket = qb.bucket
-      WHERE s.vec_id <> qb.query_id
-    ),
-    n AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-             sqrt(list_reduce(
-               list_transform(CAST(embedding AS DOUBLE[]), x -> x * x),
-               (acc, x) -> acc + x)) AS nrm
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT c.query_id, c.cand_id,
-             list_reduce(list_transform(list_zip(q.e, d.e),
-                                        p -> p[1] * p[2]),
-                         (acc, x) -> acc + x) / (q.nrm * d.nrm) AS cosine
-      FROM cands c
-      JOIN n q ON q.vec_id = c.query_id
-      JOIN n d ON d.vec_id = c.cand_id
-    ),
-    ranked AS (
-      SELECT query_id, cand_id, cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, cand_id
-             ) AS rnk
-      FROM scored
-    )
-    SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= {TOP_K}
-    """,
-)
+@query("similarity_ann_lsh", oracle=_ann_oracle())
 def similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate NN: LSH-bucket candidate generation + exact rerank.
 
@@ -442,8 +411,8 @@ def _rerank_candidates(
         .select(
             "query_id",
             "cand_id",
-            (
-                dot_col(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
+            cosine_col(
+                F.col("qe"), F.col("qn"), F.col("ce"), F.col("cn")
             ).alias("cosine"),
         )
     )
@@ -459,50 +428,17 @@ def _rerank_candidates(
 
 @query(
     "similarity_ann_multiprobe",
-    oracle=f"""
-    WITH {_SQL_SIGS},
-    qb AS (
-      SELECT vec_id AS query_id, tbl, bucket FROM sigs
-      WHERE vec_id < {N_QUERIES}
-    ),
+    oracle=_ann_oracle(
+        probes="probes",
+        probe_ctes=f"""
     probes AS (
       SELECT qb.query_id, qb.tbl,
              CASE WHEN p.k < 0 THEN qb.bucket
                   ELSE xor(qb.bucket, CAST(1 << p.k AS BIGINT)) END AS bucket
       FROM qb CROSS JOIN (SELECT unnest(generate_series(-1,
                     {LSH_BITS_PER_TABLE - 1})) AS k) p
+    ),""",
     ),
-    cands AS (
-      SELECT DISTINCT pr.query_id, s.vec_id AS cand_id
-      FROM probes pr JOIN sigs s ON s.tbl = pr.tbl AND s.bucket = pr.bucket
-      WHERE s.vec_id <> pr.query_id
-    ),
-    n AS (
-      SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-             sqrt(list_reduce(
-               list_transform(CAST(embedding AS DOUBLE[]), x -> x * x),
-               (acc, x) -> acc + x)) AS nrm
-      FROM embeddings
-    ),
-    scored AS (
-      SELECT c.query_id, c.cand_id,
-             list_reduce(list_transform(list_zip(q.e, d.e),
-                                        p -> p[1] * p[2]),
-                         (acc, x) -> acc + x) / (q.nrm * d.nrm) AS cosine
-      FROM cands c
-      JOIN n q ON q.vec_id = c.query_id
-      JOIN n d ON d.vec_id = c.cand_id
-    ),
-    ranked AS (
-      SELECT query_id, cand_id, cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, cand_id
-             ) AS rnk
-      FROM scored
-    )
-    SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk
-    FROM ranked WHERE rnk <= {TOP_K}
-    """,
 )
 def similarity_ann_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiprobe ANN (public multi-probe LSH literature, Lv et al.

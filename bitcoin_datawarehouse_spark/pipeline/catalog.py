@@ -31,6 +31,7 @@ view semantics only.
 from __future__ import annotations
 
 import contextlib
+import fcntl
 import hashlib
 import os
 import shutil
@@ -497,35 +498,43 @@ class Warehouse:
 
     @contextlib.contextmanager
     def lock(self, name: str = "pipeline", timeout_s: float = 60.0):
-        """Advisory exclusive lock scoped to this warehouse (atomic
-        mkdir — works on POSIX and HDFS-style stores).
+        """Advisory exclusive lock scoped to this warehouse: an OS file
+        lock (``flock``) on ``{root}/.lock_{name}``.
 
         Guards read-modify-overwrite sections (the job-control table,
         merges of the same target) against a second pipeline process;
         the reference relied on Postgres transactions for this.  The
-        lock records its holder pid for post-mortems and raises
-        ``TimeoutError`` rather than queueing forever.
+        kernel drops the lock when its holder dies, so a run killed
+        while holding it never blocks the next one.  Every call opens
+        its own file description, so two threads of one process
+        exclude each other as well.  The lock records its holder pid
+        for post-mortems and raises ``TimeoutError`` rather than
+        queueing forever.
         """
-        lock_dir = self.root / f".lock_{name}"
+        path = self.root / f".lock_{name}"
+        if path.is_dir():  # left behind by the earlier mkdir-based lock
+            shutil.rmtree(path, ignore_errors=True)
         deadline = time.monotonic() + timeout_s
-        while True:
+        with open(path, "a+") as f:
+            while True:
+                try:
+                    fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                    break
+                except BlockingIOError:
+                    if time.monotonic() >= deadline:
+                        f.seek(0)
+                        holder = f.read() or "?"
+                        raise TimeoutError(
+                            f"warehouse lock {name!r} held by pid {holder}"
+                        ) from None
+                    time.sleep(0.1)
             try:
-                lock_dir.mkdir()
-                break
-            except FileExistsError:
-                if time.monotonic() >= deadline:
-                    holder = "?"
-                    with contextlib.suppress(OSError):
-                        holder = (lock_dir / "pid").read_text()
-                    raise TimeoutError(
-                        f"warehouse lock {name!r} held by pid {holder}"
-                    ) from None
-                time.sleep(0.1)
-        try:
-            (lock_dir / "pid").write_text(str(os.getpid()))
-            yield
-        finally:
-            shutil.rmtree(lock_dir, ignore_errors=True)
+                f.truncate(0)
+                f.write(str(os.getpid()))
+                f.flush()
+                yield
+            finally:
+                fcntl.flock(f, fcntl.LOCK_UN)
 
     def compact(
         self, schema: str, table: str, target_file_bytes: int = 128 * 1024 * 1024

@@ -63,7 +63,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.functions.cachereg import cache_tracked
-from bitcoin_datawarehouse_spark.functions.vectors import read_vectors
+from bitcoin_datawarehouse_spark.functions.vectors import (
+    cosine_row_blocks,
+    dim_ordered_norms,
+    norm_col,
+    read_vectors,
+)
 from bitcoin_datawarehouse_spark.operators.curation import (
     gopher_keep_col,
     gopher_metrics_frame,
@@ -327,9 +332,6 @@ def run_curation_stream(
         from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
             _nearest_centroid_kernel_impl,
         )
-        from bitcoin_datawarehouse_spark.operators.similarity import (
-            norm_col,
-        )
 
         bspark = surv.sparkSession
         embr = bspark.read.parquet(emb_path).select(
@@ -379,28 +381,24 @@ def run_curation_stream(
 
         def cell_kernel(pdf: pd.DataFrame) -> pd.DataFrame:
             emat = read_vectors(pdf["e"])
-            nrm = np.sqrt((emat * emat).sum(axis=1))
+            nrm = dim_ordered_norms(emat)
             is_st = pdf["_st"].to_numpy(dtype=bool)
             ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-            # loop-invariant index work hoisted (review-caught: a
-            # per-doc nonzero scan made the cell O(n²) in cell size)
             batch_rows = np.nonzero(~is_st)[0]
             order = batch_rows[np.argsort(ids[batch_rows], kind="stable")]
-            kept_rows = list(np.nonzero(is_st)[0])
+            # one (batch docs in arrival order × cell rows) cosine grid,
+            # in row blocks that arrive in that order; the greedy scan
+            # reads each doc's row against the reps kept so far
+            kept = is_st.copy()
             out_ids, out_keep = [], []
-            for row in order:
-                row = int(row)
-                dup = False
-                if kept_rows:
-                    kr = np.asarray(kept_rows)
-                    cos = (emat[kr] @ emat[row]) / (
-                        nrm[kr] * nrm[row]
-                    )
-                    dup = bool(np.any(cos >= tau))
-                out_ids.append(int(ids[row]))
-                out_keep.append(not dup)
-                if not dup:
-                    kept_rows.append(row)
+            for s, cos in cosine_row_blocks(
+                emat[order], nrm[order], emat, nrm
+            ):
+                for i, row in enumerate(order[s : s + len(cos)]):
+                    dup = bool(np.any(cos[i][kept] >= tau))
+                    out_ids.append(int(ids[row]))
+                    out_keep.append(not dup)
+                    kept[row] = not dup
             return pd.DataFrame(
                 {"doc_id": out_ids, "keep": out_keep}
             )

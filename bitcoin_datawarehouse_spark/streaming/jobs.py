@@ -136,7 +136,8 @@ def merge_stream_into_table(
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        Loader(wh, schema, table).load_incremental(
+        bwh = Warehouse(batch_df.sparkSession, str(wh.root), wh.keep_versions)
+        Loader(bwh, schema, table).load_incremental(
             batch_df, unique_keys=keys, order_col=order_col
         )
 

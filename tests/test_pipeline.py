@@ -675,6 +675,42 @@ def test_warehouse_lock_mutual_exclusion(spark, wh):
         pass
 
 
+def test_warehouse_lock_is_free_after_its_holder_dies(wh):
+    """A holder SIGKILLed inside the lock (no ``finally`` runs) and a
+    ``.lock_*`` directory left by the earlier mkdir-based lock both
+    leave the lock free: the next caller takes it at once instead of
+    waiting out its timeout."""
+    import signal
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    legacy = wh.root / ".lock_pipeline"
+    legacy.mkdir()
+    (legacy / "pid").write_text("999999")
+    t0 = time.monotonic()
+    with wh.lock("pipeline", timeout_s=1.0):
+        pass
+    assert time.monotonic() - t0 < 0.5
+
+    code = (
+        "import os, signal, sys\n"
+        "from bitcoin_datawarehouse_spark.pipeline.catalog import Warehouse\n"
+        "with Warehouse(None, sys.argv[1]).lock('pipeline'):\n"
+        "    os.kill(os.getpid(), signal.SIGKILL)\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-c", code, str(wh.root)],
+        cwd=Path(__file__).resolve().parents[1],
+        timeout=120,
+    )
+    assert proc.returncode == -signal.SIGKILL
+    t0 = time.monotonic()
+    with wh.lock("pipeline", timeout_s=1.0):
+        pass
+    assert time.monotonic() - t0 < 0.5
+
+
 def test_partitioned_merge_touches_only_batch_partitions(spark, wh):
     import os
 

@@ -594,19 +594,28 @@ def test_no_bare_crossjoin_outside_scalars():
 
 
 def test_vector_kernels_live_only_in_functions_vectors():
-    """Every oracle-bound numpy cosine is bit-equal to the SQL fold only
-    because it accumulates dimension by dimension, and
-    functions/vectors.py is the one owner of that loop and of the
-    vector-column reader.  A hand-rolled ``+= np.outer(`` fold or an
-    ``np.array(list(`` reader anywhere else in the package is a copy
-    that can drift from the contract (and, for pair grids, skip the
-    row-block memory cap)."""
+    """Cosine is bit-equal across numpy, the JVM and DuckDB only
+    because every engine accumulates dimension by dimension, and it
+    scores a zero-norm vector 0.0 only where the guard is written.
+    functions/vectors.py is the one owner of both, and of the
+    vector-column reader.  Anywhere else in the package each of these
+    is a copy that can drift from the contract (and, for pair grids,
+    skip the row-block memory cap): an ``np.array(list(`` reader, a
+    ``+= np.outer(`` fold, a ``/ np.outer(`` cosine division, a row sum
+    of a squared matrix, a ``dot_col(`` JVM cosine, and the oracle
+    SQL's ``p[1] * p[2]`` dot or ``x -> x * x`` norm fold."""
     import re
     from pathlib import Path
 
     pkg = Path(__file__).resolve().parents[1] / "bitcoin_datawarehouse_spark"
     owner = pkg / "functions" / "vectors.py"
-    pat = re.compile(r"np\.array\(list\(|\+=\s*np\.outer\(")
+    pat = re.compile(
+        r"np\.array\(list\("
+        r"|[+/]=?\s*np\.outer\("
+        r"|\((\w+)\s*\*\s*\1\)\.sum\(|\*\*\s*2\)\.sum\(|np\.sum\(\s*(\w+)\s*\*\s*\2\b"
+        r"|\bdot_col\("
+        r"|p\[1\]\s*\*\s*p\[2\]|x\s*->\s*x\s*\*\s*x"
+    )
     offenders = []
     for py in pkg.rglob("*.py"):
         if py == owner:
@@ -615,9 +624,9 @@ def test_vector_kernels_live_only_in_functions_vectors():
             if pat.search(line.split("#", 1)[0]):
                 offenders.append(f"{py.relative_to(pkg)}:{i}: {line.strip()}")
     assert not offenders, (
-        "vector reader / dim-ordered fold outside functions/vectors.py "
-        "(use read_vectors / dim_ordered_dot_sq / cosine_row_blocks):\n"
-        + "\n".join(offenders)
+        "vector reader / cosine or norm copy outside functions/vectors.py "
+        "(use read_vectors / cosine_grid / cosine_row_blocks / cosine_col "
+        "/ SQL_NORMED / sql_normed / SQL_COS):\n" + "\n".join(offenders)
     )
 
 

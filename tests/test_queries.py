@@ -167,7 +167,7 @@ def test_kmeans_improves_quantizer(spark):
         assign_to_centroids,
         kmeans_fit,
     )
-    from bitcoin_datawarehouse_spark.operators.similarity import dot_col
+    from bitcoin_datawarehouse_spark.functions.vectors import cosine_col
 
     emb = _normed(spark, SF_SMALL)
 
@@ -180,7 +180,7 @@ def test_kmeans_improves_quantizer(spark):
                 F.col("centroid_id") == F.col("cid"),
             )
         )
-        cos = dot_col(F.col("e"), F.col("ce")) / (F.col("nrm") * F.col("cn"))
+        cos = cosine_col(F.col("e"), F.col("nrm"), F.col("ce"), F.col("cn"))
         return joined.agg(F.avg(cos)).first()[0]
 
     seed = emb.filter(F.col("vec_id") < IVF_N_CENTROIDS).select(
@@ -338,7 +338,7 @@ def test_semdedup_planted_keep_rule(spark):
     from bitcoin_datawarehouse_spark.operators.semdedup import (
         semdedup_flags,
     )
-    from bitcoin_datawarehouse_spark.operators.similarity import norm_col
+    from bitcoin_datawarehouse_spark.functions.vectors import norm_col
 
     cent = spark.createDataFrame(
         [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
