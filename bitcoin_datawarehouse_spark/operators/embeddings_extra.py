@@ -30,6 +30,7 @@ from bitcoin_datawarehouse_spark.functions.vectors import (
 from bitcoin_datawarehouse_spark.operators.similarity import (
     N_QUERIES,
     TOP_K,
+    _topk_oracle,
 )
 from bitcoin_datawarehouse_spark.functions.scalars import scalar_cross
 from bitcoin_datawarehouse_spark.registry import query
@@ -672,8 +673,10 @@ def _ivf_topk_oracle(nprobe_expr: str, extra_ctes: str = "") -> str:
     ``extra_ctes`` for the runtime auto-nprobe rule (the AUTO_BITS_SQL
     pattern: the oracle recomputes the adaptive constant from the
     corpus it runs on)."""
-    return f"""
-    WITH {_SQL_IVF_COMMON},{extra_ctes}
+    return _topk_oracle(
+        "cands cd JOIN n q ON q.vec_id = cd.query_id"
+        " JOIN n c ON c.vec_id = cd.cand_id",
+        ctes=f"""{extra_ctes}
     probes AS (
       SELECT query_id, centroid_id FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS centroid_id,
@@ -690,22 +693,9 @@ def _ivf_topk_oracle(nprobe_expr: str, extra_ctes: str = "") -> str:
       FROM probes p
       JOIN assign a ON a.centroid_id = p.centroid_id
       WHERE a.vec_id <> p.query_id
-    ),
-    scored AS (
-      SELECT cd.query_id, cd.cand_id,
-             {SQL_COS.format(a="q", b="c")} AS cosine
-      FROM cands cd
-      JOIN n q ON q.vec_id = cd.query_id
-      JOIN n c ON c.vec_id = cd.cand_id
+    ),""",
+        head=_SQL_IVF_COMMON,
     )
-    SELECT query_id, cand_id, cosine, CAST(rnk AS INT) AS rnk FROM (
-      SELECT query_id, cand_id, cosine,
-             ROW_NUMBER() OVER (
-               PARTITION BY query_id ORDER BY cosine DESC, cand_id
-             ) AS rnk
-      FROM scored
-    ) WHERE rnk <= {TOP_K}
-    """
 
 
 #: shared by ``similarity_ivf_topk`` (plan recomputed per call) and
@@ -796,7 +786,7 @@ def _ivf_topk_impl(
         ]
     )
 
-    def rerank(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def rerank(key, pdf):
         qid = int(key[0])
         q = np.array(pdf["qe"].iloc[0], dtype=np.float64)
         cand_ids = pdf["cand_id"].to_numpy(dtype=np.int64)

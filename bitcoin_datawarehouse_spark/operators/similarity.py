@@ -51,12 +51,14 @@ LSH_BITS_PER_TABLE = 5
 _DEC = "decimal(38,30)"
 
 
-def _topk_oracle(pairs: str, ctes: str = "") -> str:
+def _topk_oracle(pairs: str, ctes: str = "", head: str = SQL_NORMED) -> str:
     """Exact cosine top-k oracle over the (query ``q``, candidate
-    ``c``) rows of the FROM clause ``pairs``, both rows of ``n``;
-    ``ctes`` are WITH items that ``pairs`` reads, ending in a comma."""
+    ``c``) rows of the FROM clause ``pairs``, both rows of ``n``.
+    ``head`` is the caller's leading WITH items, which define ``n``;
+    ``ctes`` are further WITH items that ``pairs`` reads, ending in a
+    comma."""
     return f"""
-    WITH {ctes}{SQL_NORMED},
+    WITH {head},{ctes}
     scored AS (
       SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
              {SQL_COS.format(a="q", b="c")} AS cosine

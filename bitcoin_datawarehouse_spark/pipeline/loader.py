@@ -27,9 +27,16 @@ here ``unionByName(allowMissingColumns=True)`` fills either side's
 missing columns with null (schema drift tolerated, documented).
 
 Scale notes: the merge reads the target once and writes it once —
-one shuffle on the merge keys for the anti-join (broadcast when the
-batch is small, which is the common incremental case — batches are
-"rows since last watermark").  No driver-side row handling anywhere.
+one shuffle on the merge keys for the anti-join, or none when the
+batch is broadcast, which is the common incremental case (batches are
+"rows since last watermark").  The broadcast decision comes from the
+planner's own size estimate of the deduped batch against the session's
+``spark.sql.autoBroadcastJoinThreshold``: exact for the driver-built
+batches a pipeline source ingests (a ``LocalRelation``), so those merge
+in one write action with no count and no cache.  Only a batch the
+planner cannot size (an RDD-backed frame, a filtered scan of a large
+table) is cached and counted, and broadcast when it holds at most
+``BROADCAST_BATCH_MAX_ROWS`` rows.  No driver-side row handling anywhere.
 
 This module holds merge semantics only.  Where rows physically land
 (partition directories, the clustered partition rewrite, the
@@ -104,11 +111,17 @@ class Loader:
         """
         if not unique_keys:
             return self.load_full_refresh(df, watermark_col)
-        # cache the deduped batch: it is read three times below (count
-        # probe, anti-join build side, union) and its upstream plan may
-        # be arbitrarily expensive — without the cache every merge
-        # recomputes it per consumer
-        batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
+        batch = _dedupe_batch(df, unique_keys, order_col)
+        # a batch under the broadcast threshold is evaluated by the two
+        # legs (anti-join build side, union) of the one write action —
+        # the pipeline's batches are driver rows, so that costs nothing.
+        # Any other batch is cached: _upsert counts it, then both legs
+        # read it, and its upstream plan may be arbitrarily expensive.
+        # (The partitioned merge below always caches: it also collects
+        # the batch's partition values.)
+        cached = not _fits_broadcast(batch)
+        if cached:
+            batch = cache_tracked(batch)
         try:
             if not self.wh.table_exists(self.schema, self.table):
                 return self._write_counted(batch, watermark_col)
@@ -123,7 +136,8 @@ class Loader:
                 _upsert(old, batch, unique_keys), watermark_col
             )
         finally:
-            batch.unpersist()
+            if cached:
+                batch.unpersist()
 
     def load_incremental_partitioned(
         self,
@@ -319,14 +333,23 @@ class Loader:
 
     def delete_by_condition(self, condition: str | Column) -> int:
         """DELETE WHERE (reference pg_loader.py:272-294) as a
-        filter-rewrite; returns rows deleted."""
-        old = self.wh.read(self.schema, self.table)
+        filter-rewrite; returns rows deleted.  One Spark action: the
+        row counts before and after the filter are observed on the
+        write."""
         pred = F.expr(condition) if isinstance(condition, str) else condition
-        keep = old.filter(~pred)
-        n_before = old.count()
-        n_after = keep.count()
-        self.wh.write_atomic(keep, self.schema, self.table)
-        return n_before - n_after
+        before = Observation()
+        # the keep flag is computed BELOW the observation: a predicate
+        # that folds to a constant would otherwise prune the observed
+        # scan out of the plan, and the count with it
+        flagged = (
+            self.wh.read(self.schema, self.table)
+            .withColumn("__keep", F.coalesce(~pred, F.lit(False)))
+            .observe(before, F.count(F.lit(1)).alias("rows"))
+        )
+        kept = self._write_counted(
+            flagged.filter("__keep").drop("__keep"), None
+        )
+        return before.get["rows"] - kept
 
     # -- probes ------------------------------------------------------------
     def get_max_value(self, column: str):
@@ -353,13 +376,25 @@ class Loader:
 def _upsert(old: DataFrame, batch: DataFrame, keys: list[str]) -> DataFrame:
     """Last write wins: the ``old`` rows whose key the batch does not
     carry, plus the whole batch (missing columns null-filled either
-    side).  The batch is broadcast into the anti-join unless it is
-    backfill-sized."""
-    if batch.count() <= BROADCAST_BATCH_MAX_ROWS:
+    side).  The batch is broadcast into the anti-join when the planner
+    sizes it under the broadcast threshold, or else when a count finds
+    it not backfill-sized."""
+    if _fits_broadcast(batch) or batch.count() <= BROADCAST_BATCH_MAX_ROWS:
         keep = old.join(F.broadcast(batch), keys, "left_anti")
     else:
         keep = old.join(batch, keys, "left_anti")
     return keep.unionByName(batch, allowMissingColumns=True)
+
+
+def _fits_broadcast(df: DataFrame) -> bool:
+    """Whether the planner's size estimate of ``df`` is within the
+    session's ``spark.sql.autoBroadcastJoinThreshold`` — the same test
+    Spark's join selection applies.  Runs no job.  A frame the planner
+    cannot size estimates at ``Long.MaxValue`` and never fits; a
+    threshold of -1 (broadcast off) fits nothing."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = df.sparkSession._jsparkSession.sessionState().conf()
+    return 0 <= size <= conf.autoBroadcastJoinThreshold()
 
 
 def _all_equal(cols: list[str]) -> Column:

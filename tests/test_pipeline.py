@@ -1139,25 +1139,70 @@ def test_tar_shard_export_roundtrip_and_determinism(spark, wh):
     assert digests_a == digests_b
 
 
+def _unsized_df(spark, rows):
+    """A batch the planner cannot size (RDD-backed: its estimate is
+    ``Long.MaxValue``), so the merge must count it."""
+    return spark.sparkContext.parallelize(
+        [(r["id"], r["v"]) for r in rows]
+    ).toDF("id long, v double")
+
+
 def test_incremental_large_batch_takes_shuffle_anti_join(spark, wh, monkeypatch):
     """Above BROADCAST_BATCH_MAX_ROWS the merge must NOT broadcast the
     batch (a 100 GB ingest batch force-broadcast would OOM executors):
-    force the threshold to 0 so the shuffle-anti-join branch runs, and
-    assert merge semantics are unchanged on that path."""
+    force the threshold to 0 and merge batches the planner cannot
+    size, so the count branch runs and picks the shuffle anti-join,
+    and assert merge semantics are unchanged on that path."""
     from bitcoin_datawarehouse_spark.pipeline import loader as loader_mod
 
     monkeypatch.setattr(loader_mod, "BROADCAST_BATCH_MAX_ROWS", 0)
     ld = Loader(wh, "bitcoin", "bigbatch")
     ld.load_incremental(
-        rows_df(spark, [{"id": 1, "v": 1.0}, {"id": 2, "v": 2.0}]),
+        _unsized_df(spark, [{"id": 1, "v": 1.0}, {"id": 2, "v": 2.0}]),
         unique_keys=["id"],
     )
-    ld.load_incremental(
-        rows_df(spark, [{"id": 2, "v": 22.0}, {"id": 3, "v": 3.0}]),
+    n = ld.load_incremental(
+        _unsized_df(spark, [{"id": 2, "v": 22.0}, {"id": 3, "v": 3.0},
+                            {"id": 3, "v": 3.0}]),
         unique_keys=["id"],
     )
     got = {r["id"]: r["v"] for r in wh.read("bitcoin", "bigbatch").collect()}
-    assert got == {1: 1.0, 2: 22.0, 3: 3.0}
+    assert got == {1: 1.0, 2: 22.0, 3: 3.0} and n == 3
+
+
+@pytest.mark.parametrize(
+    "batch_kind, max_rows, broadcast, counted",
+    [
+        ("driver", None, True, False),  # sized by the planner: no count
+        ("unsized", None, True, True),  # counted, small: broadcast
+        ("unsized", 0, False, True),  # counted, over the cap: shuffle
+    ],
+)
+def test_merge_plan_shape_by_batch_size_source(
+    spark, wh, monkeypatch, batch_kind, max_rows, broadcast, counted
+):
+    """The merge's anti-join plan for each branch of the broadcast
+    decision, and whether the decision runs a count job."""
+    import re
+
+    from bitcoin_datawarehouse_spark.pipeline import loader as loader_mod
+    from tests.test_sync_bookkeeping import _grouped_jobs
+
+    if max_rows is not None:
+        monkeypatch.setattr(loader_mod, "BROADCAST_BATCH_MAX_ROWS", max_rows)
+    ld = Loader(wh, "bitcoin", "shape")
+    ld.load_full_refresh(rows_df(spark, [{"id": i, "v": 1.0} for i in range(50)]))
+    rows = [{"id": 7, "v": 7.0}, {"id": 99, "v": 9.0}]
+    df = rows_df(spark, rows) if batch_kind == "driver" else _unsized_df(spark, rows)
+    batch = loader_mod._dedupe_batch(df, ["id"], None)
+    old = wh.read("bitcoin", "shape")
+    merged, jobs = _grouped_jobs(spark, lambda: loader_mod._upsert(old, batch, ["id"]))
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert bool(jobs) is counted, jobs
+    assert bool(re.search(r"BroadcastHashJoin .*LeftAnti", plan)) is broadcast, plan
+    assert ("BroadcastExchange" in plan) is broadcast, plan
+    got = {r["id"]: r["v"] for r in merged.collect()}
+    assert len(got) == 51 and got[7] == 7.0 and got[99] == 9.0
 
 
 # ---------------------------------------------------------------------------

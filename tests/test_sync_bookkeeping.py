@@ -4,7 +4,7 @@ observed on the load's own write, and the Arrow-built batch frame.
 Pins the ledger's timestamps as instants on a non-UTC driver, the
 verbatim error text of a failed job, the loader's returned count on
 every load path ``run_job`` takes, and the Spark-job budgets of a one-
-and a five-job incremental sync.
+and a five-job incremental sync and of a delete.
 """
 
 from __future__ import annotations
@@ -153,13 +153,19 @@ def test_load_full_refresh_empty_frame_returns_zero(spark, wh):
 
 
 #: Spark jobs of one incremental one-table Pipeline.run (merge path):
-#: measured 11 on Spark 4.1.2 local[8] (two ledger writes, watermark
-#: from the ledger); 14 with one ledger write per mark and a MAX probe
-#: per run, 19 with a ledger re-read per mark and a COUNT probe
-INCREMENTAL_SYNC_JOB_CAP = 11
-#: the same for a run of five jobs on five targets: measured 39; 62
-#: with one ledger write per mark and a MAX probe per job
-INCREMENTAL_SYNC_5_JOB_CAP = 39
+#: measured 9 on Spark 4.1.2 local[8] (a driver-built batch merges with
+#: no cache fill and no count); 11 with a cached and counted batch, 14
+#: with one ledger write per mark and a MAX probe per run, 19 with a
+#: ledger re-read per mark and a COUNT probe
+INCREMENTAL_SYNC_JOB_CAP = 9
+#: the same for a run of five jobs on five targets: measured 29; 39
+#: with a cached and counted batch per lane, 62 with one ledger write
+#: per mark and a MAX probe per job
+INCREMENTAL_SYNC_5_JOB_CAP = 29
+#: Spark jobs of ``Loader.delete_by_condition``: the target read's
+#: schema job and the rewrite; measured 6 with a count before and one
+#: after the filter (two jobs each under AQE)
+DELETE_JOBS = 2
 #: Spark jobs a run starts from the calling thread (the ledger read and
 #: its two writes); the budgets' lower bound: only jobs run in the lane
 #: threads can lift a count above it
@@ -191,14 +197,9 @@ def test_incremental_sync_job_budget(spark, wh):
     assert CALLER_THREAD_JOBS < len(jobs) <= INCREMENTAL_SYNC_JOB_CAP, jobs
 
 
-def test_five_job_incremental_sync_job_budget(spark, wh):
-    def rows(q):
-        # distinct per job: identical batches would share one cache
-        # entry across lanes, and the first unpersist would drop it
-        # under the others
-        out = [{"id": i, "v": float(i * 10 + q)} for i in range(20)]
-        return lambda p: out if p is None else out[-3:] + [{"id": 99, "v": q / 2}]
-
+def _five_lane_sync_jobs(spark, wh, rows):
+    """The Spark jobs of the second (incremental) run of five jobs on
+    five targets, job ``q`` fed by ``rows(q)``."""
     src = StaticSource({q: rows(q) for q in range(1, 6)})
     JobControl(spark, wh).seed([_job(f"j{q}", q, f"t{q}") for q in range(1, 6)])
     pipe = Pipeline(spark, wh, src)
@@ -207,4 +208,37 @@ def test_five_job_incremental_sync_job_budget(spark, wh):
     assert [(r.job_name, r.ok, r.rows_loaded) for r in res] == [
         (f"j{q}", True, 21) for q in range(1, 6)
     ]
+    return jobs
+
+
+def test_five_job_incremental_sync_job_budget(spark, wh):
+    def rows(q):
+        out = [{"id": i, "v": float(i * 10 + q)} for i in range(20)]
+        return lambda p: out if p is None else out[-3:] + [{"id": 99, "v": q / 2}]
+
+    jobs = _five_lane_sync_jobs(spark, wh, rows)
     assert CALLER_THREAD_JOBS < len(jobs) <= INCREMENTAL_SYNC_5_JOB_CAP, jobs
+
+
+def test_five_lanes_with_identical_batches_run_as_many_jobs(spark, wh):
+    """Lanes merging identical batches: cached batches would share one
+    CacheManager entry, and the first lane's unpersist would drop it
+    under the others (measured 35 jobs against 39 for distinct
+    batches).  Driver-built batches take no cache, so the job count is
+    the distinct-batch one."""
+    out = [{"id": i, "v": float(i)} for i in range(20)]
+    inc = out[-3:] + [{"id": 99, "v": 0.5}]
+    jobs = _five_lane_sync_jobs(spark, wh, lambda q: lambda p: out if p is None else inc)
+    assert len(jobs) == INCREMENTAL_SYNC_5_JOB_CAP, jobs
+
+
+def test_delete_by_condition_is_one_action(spark, wh):
+    """The before and after counts ride the rewrite, the one action, and
+    a predicate that folds to a constant still returns its count."""
+    ld = Loader(wh, "bitcoin", "del")
+    ld.load_full_refresh(rows_to_df(spark, [{"id": i, "v": float(i)} for i in range(10)]))
+    n, jobs = _grouped_jobs(spark, lambda: ld.delete_by_condition("v >= 7.0 OR v IS NULL"))
+    assert n == 3 and ld.get_record_count() == 7
+    assert len(jobs) == DELETE_JOBS, jobs
+    assert ld.delete_by_condition(F.col("id") < 0) == 0
+    assert ld.delete_by_condition("true") == 7 and ld.get_record_count() == 0
