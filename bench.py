@@ -3,7 +3,7 @@
 Runs the headline queries at ``$SPARK_GRAFT_SF_DIR`` (default
 /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]`` and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+"queries": {name: sec}, "sf": ..., "cpus": ...}.
 
 Each query is forced end-to-end with the noop sink (full computation,
 no driver-side collect), mirroring how a production job would write
@@ -14,15 +14,26 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent))
+ROOT = Path(__file__).resolve().parent
+sys.path.insert(0, str(ROOT))
 
-from bitcoin_datawarehouse_spark.registry import QUERIES, load_all_operators  # noqa: E402
-from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
+from bitcoin_datawarehouse_spark.registry import load_all_operators  # noqa: E402
+from tools.harness import (  # noqa: E402
+    append_history,
+    comparable_prev,
+    load_avg,
+    session,
+    sf_of,
+    shared_subset_vs_prev,
+    time_queries,
+    warm,
+)
+
+HISTORY = ROOT / "bench_history.jsonl"
 
 # Representative, scale-stressing subset: scans+filters, multi-way
 # joins, aggregation, windows, sessionization, as-of, JSON, dedup
@@ -210,84 +221,11 @@ HEADLINE = [
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+    sf = sf_of(sf_dir)
 
     load_all_operators()
-    # Fixed-small-SF execution profile (sf ≤ 0.1 ≈ 100 MB working set):
-    # every shuffle in the headline set is far below one
-    # maxPartitionBytes, so the run is bounded by per-task launch and
-    # per-stage scheduling, not data movement.  Two knobs follow:
-    # * 8 shuffle partitions (not 32) — each shuffled stage still
-    #   saturates memory bandwidth at this volume, and 3/4 of the task
-    #   launches disappear (measured 10.4s → 7.2s over the set);
-    # * AQE off — adaptive execution materializes every shuffle stage
-    #   and re-plans on the driver before scheduling the next; that
-    #   insurance premium (~2s over the set here) only pays when sizes
-    #   are unpredictable.  The production profile (session.cluster_conf)
-    #   keeps AQE ON with 3× core partitions — at 100 TB the premium is
-    #   noise and the re-planning (broadcast conversion, skew split) is
-    #   what keeps the same declarative plans efficient.
-    # SF-aware profile selection: the fixture profile must never leak
-    # into larger runs — at sf ≥ 1 the shuffles carry real volume, so
-    # the run uses the production-shaped profile (full core-count
-    # partitions, AQE ON for runtime broadcast conversion / skew
-    # splitting), matching session.cluster_conf's intent.
-    if sf is not None and sf >= 1:
-        spark = get_spark("bench", shuffle_partitions=32)
-    else:
-        spark = get_spark(
-            "bench",
-            shuffle_partitions=8,
-            extra_conf={"spark.sql.adaptive.enabled": "false"},
-        )
-
-    # warm the JVM + parquet footers once so per-query numbers measure
-    # the plan, not session startup
-    QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    # warm the Python worker pool too (pandas import + Arrow channel):
-    # several operators run vectorized mapInPandas stages, and the
-    # interpreter spawn would otherwise be billed to the first of them
-    import pandas as _pd  # noqa: F401 — ensure driver-side import cached
-
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    # Pin the relational tables hot (and correctly partitioned — the
-    # fixture parquet is one input split): see tables.cache_tables.
-    # documents/embeddings stay on parquet: their array / long-string
-    # payload columns cache as generic objects (no columnar encoding),
-    # and the Arrow kernels that consume them scan once per query —
-    # measured slower from the block-manager cache than from parquet.
-    from bitcoin_datawarehouse_spark.tables import cache_tables  # noqa: E402
-
-    cache_tables(
-        spark,
-        sf_dir,
-        ["region", "nation", "customer", "supplier", "part", "orders",
-         "lineitem", "events"],
-    )
-
-    # one untimed warm pass + best-of-3 per query: single local[32]
-    # runs carry ±50% JVM/GC noise on sub-2s queries, and the first
-    # execution of each distinct plan additionally pays whole-stage
-    # codegen compilation + C2 JIT (measured 2-4× on the join-heavy
-    # queries under Spark 4.1).  The warmed minimum is the reproducible
-    # cost of the PLAN (what a capacity model needs); the cold first
-    # run measures this JVM's compiler that minute
-    # Tracked kernel caches (packed shingle sets etc.) are released
-    # between queries: Spark's CacheManager dedups by logical plan, so two
-    # different queries sharing an identical intermediate would
-    # otherwise make per-query numbers order-dependent (the second one
-    # times a cache hit, not its plan) — measured at sf10:
-    # decontam_minhash_fuzzy 1.7 s riding dedup_minhash_lsh's shingle
-    # cache vs 17.0 s isolated.
-    from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
-        release_tracked_caches,
-    )
+    spark = session("bench", sf_dir)
+    warm(spark, sf_dir)
 
     # Large-SF escape hatches (recorded in the output line — skips are
     # never silent): SPARK_GRAFT_SKIP excludes named queries (used to
@@ -309,85 +247,40 @@ def main() -> None:
     skip &= set(HEADLINE)  # output's "skipped" lists EFFECTIVE skips only
     repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "3")))
 
-    # Adaptive repeats (round 11): best-of-N exists because sub-2s
-    # queries carry ±50% JVM/GC scheduling noise; queries whose WARM
-    # pass already runs ≥ ADAPTIVE_CUTOFF_S are plan-dominated (the
-    # noise floor is a small fraction of the wall) and every extra
-    # repeat costs what it measures — one timed run suffices.  This
-    # keeps the harness wall bounded as heavy composite gates joined
-    # the headline (measured: fixed best-of-3 pushed the sf0.1 wall
-    # to ~8 min before the DuckDB pair even ran).
-    ADAPTIVE_CUTOFF_S = 2.5
-    timings: dict[str, float] = {}
-    for name in HEADLINE:
-        if name in skip:
-            continue
-        fn = QUERIES[name]
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        warm_dt = time.time() - t0
-        release_tracked_caches()
-        reps = 1 if warm_dt >= ADAPTIVE_CUTOFF_S else repeats
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-            release_tracked_caches()
-        timings[name] = round(best, 3)
+    # 2.5 s cutoff (round 11): a fixed best-of-3 pushed the sf0.1 wall
+    # to ~8 min once heavy composite gates joined the headline
+    best = time_queries(
+        spark, sf_dir, [n for n in HEADLINE if n not in skip],
+        repeats=repeats, cutoff_s=2.5,
+    )
+    timings = {n: round(t, 3) for n, t in best.items()}
+    cpus = spark.sparkContext.defaultParallelism
 
     out = {
-                "metric": "headline_queries_total_wall",
-                "value": round(sum(timings.values()), 3),
-                "unit": "sec",
-                "queries": timings,
-                "sf": sf,
+        "metric": "headline_queries_total_wall",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": sf,
+        "cpus": cpus,
     }
     if skip:
         out["skipped"] = sorted(skip)
-
     # machine-state context (r11 VERDICT item 5): the DuckDB side of
     # the pair swings ±25% with concurrent load — record the 1/5/15-min
     # load averages so a reader can discount a noisy pair_ratio
-    try:
-        out["load_avg"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:  # pragma: no cover - non-POSIX
-        pass
+    out["load_avg"] = load_avg()
 
     # shared-subset round-over-round (r11 VERDICT item 5): pair_ratio
     # is a coin flip under comparator variance; the honest
     # round-over-round metric is this run's Spark sum vs the PREVIOUS
-    # recorded run over the queries both measured — emitted here so it
-    # never has to be hand-computed in SCALING.md again.  The driver's
-    # BENCH_r{N}.json stores only a truncated stdout tail (parsed=None
-    # on long lines), so bench keeps its OWN committed history:
-    # bench_history.jsonl, one full JSON line per run, compared
-    # same-sf only.
-    hist_path = Path(__file__).resolve().parent / "bench_history.jsonl"
-    prev = None
-    if hist_path.exists():
-        for line in hist_path.read_text().splitlines():
-            try:
-                cand = json.loads(line)
-            except json.JSONDecodeError:
-                continue
-            if cand.get("sf") == sf and cand.get("queries"):
-                prev = cand  # last same-sf entry wins
+    # comparable run over the queries both measured.  BENCH_r{N}.json
+    # keeps only a truncated stdout tail (parsed=None on long lines),
+    # so bench keeps its OWN committed history: bench_history.jsonl,
+    # one full JSON line per run.
+    prev = comparable_prev(HISTORY, sf, cpus)
     if prev is not None:
-        pq = prev["queries"]
-        shared = [n for n in timings if n in pq]
-        now_s = sum(timings[n] for n in shared)
-        prev_s = sum(pq[n] for n in shared)
-        out["shared_subset_vs_prev"] = {
-            "prev_ts": prev.get("ts"),
-            "n_shared": len(shared),
-            "spark_now_s": round(now_s, 3),
-            "spark_prev_s": round(prev_s, 3),
-            "ratio_vs_prev": (
-                round(now_s / prev_s, 3) if prev_s > 0 else None
-            ),
-        }
+        out["shared_subset_vs_prev"] = shared_subset_vs_prev(timings, prev)
 
     # Same-session DuckDB pair (r10 VERDICT item 7): the controlled
     # Spark-vs-DuckDB comparison must live IN the recorded JSON, not
@@ -406,11 +299,7 @@ def main() -> None:
             proc = subprocess.run(
                 [
                     sys.executable,
-                    str(
-                        Path(__file__).resolve().parent
-                        / "tools"
-                        / "bench_duckdb.py"
-                    ),
+                    str(ROOT / "tools" / "bench_duckdb.py"),
                     "--natural",
                 ],
                 capture_output=True,
@@ -448,18 +337,8 @@ def main() -> None:
 
     # append AFTER the pair so history carries the comparator numbers
     out["ts"] = int(time.time())
-    try:
-        with hist_path.open("a") as fh:
-            fh.write(json.dumps(out) + "\n")
-    except OSError:  # pragma: no cover - read-only checkout
-        pass
-
-    print(
-        json.dumps(
-            out
-        )
-    )
-
+    append_history(HISTORY, out)
+    print(json.dumps(out))
 
 if __name__ == "__main__":
     main()

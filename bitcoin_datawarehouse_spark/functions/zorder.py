@@ -7,8 +7,8 @@ dimension prunes nothing.  Interleaving the bits of two (or more)
 order-preserving bucket ids yields a sort key whose contiguous ranges
 are small HYPER-RECTANGLES in the original space, so row-group min/max
 stay tight on EVERY interleaved dimension at once and a 2-D range
-predicate skips most of the file (measured: tools/probe_zorder.py,
-SCALING.md).
+predicate skips most of the file (measured at sf10: SCALING.md
+"Round 6: z-order clustering").
 
 All pure integer arithmetic — bucketing is an exact monotone rescale
 ``(v · 2^bits) // (max+1)``, the interleave is the classic

@@ -96,7 +96,7 @@ from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
 
 #: merge rounds of the registered gate query (parametric in
 #: production — a real tokenizer runs tens of thousands; the
-#: 256-round decade probe lives in tools/probe_bpe_scale.py)
+#: 256-round decade probe is SCALING.md "Round 9: BPE production shape")
 BPE_MERGE_ROUNDS = 8
 
 #: merge-table row type: (merge_round, pair_a, pair_b, merged, count)

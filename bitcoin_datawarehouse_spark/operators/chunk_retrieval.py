@@ -196,8 +196,8 @@ def _build_chunk_index(spark: SparkSession, sf_dir: str):
 def _chunk_retrieval_serve(idx, queries: DataFrame) -> DataFrame:
     """The SERVE half — bucket-pruned search + the two-window doc
     reduction — over an already-BUILT index (production amortizes the
-    build across queries; tools/probe_chunk_serve.py times this half
-    in isolation, r9 VERDICT item 5)."""
+    build across queries; SCALING.md "Chunk-retrieval SERVE path"
+    times this half in isolation, r9 VERDICT item 5)."""
     hits = idx.search(
         queries,
         top_k=TOP_K,

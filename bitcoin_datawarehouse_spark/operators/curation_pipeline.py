@@ -62,6 +62,12 @@ from bitcoin_datawarehouse_spark.operators import curation as _cur
 from bitcoin_datawarehouse_spark.operators import dedup as _dd
 from bitcoin_datawarehouse_spark.operators import semdedup as _sd  # noqa: F401
 from bitcoin_datawarehouse_spark.operators import trainprep as _tp
+from bitcoin_datawarehouse_spark.operators.bpe import (
+    BPE_MERGE_ROUNDS,
+    bpe_apply_kernel,
+    bpe_train_auto,
+    bpe_word_table,
+)
 from bitcoin_datawarehouse_spark.operators.curation import (
     EVAL_MOD,
     decontam_ngram_overlap,
@@ -245,7 +251,8 @@ def _curation_stage_frames(
     shared-subgraph rule).
 
     ``quality_keep`` (a (doc_id) frame) overrides the stage-1 Gopher
-    gate — the probe hook tools/probe_curation_funnel.py uses to run
+    gate — the probe hook SCALING.md "Round 9: funnel-realistic
+    composite decades" uses to run
     the IDENTICAL downstream composition under a percentile-derived
     band that keeps a constant fraction of the corpus (the gates
     always run with the default)."""
@@ -523,13 +530,6 @@ def trainprep_tokenized_curation(
     Every Gopher survivor has ≥ 30 words, so the inner join to the
     encode frame drops nothing.  The split+pack tail is the shared
     :func:`_split_pack`."""
-    from bitcoin_datawarehouse_spark.operators.bpe import (
-        BPE_MERGE_ROUNDS,
-        bpe_apply_kernel,
-        bpe_train_auto,
-        bpe_word_table,
-    )
-
     s6 = _curation_stage_frames(spark, sf_dir)["mixture"]
     # r10: the production auto-regime trainer (routing change only —
     # pinned bit-equal to the distributed delta loop in pytest)

@@ -506,7 +506,8 @@ def fit_lm_parts(
     the cached exchange is reused.  Under an ADVERSARIAL head word
     (planted 50% of all bigram rows on one w1) the shared exchange
     funnels half the cache into one partition and inverts 3.2×
-    (9.6 s vs 3.0 s — tools/probe_skew_curation.py).  Real-corpus
+    (9.6 s vs 3.0 s — SCALING.md "Hot-key skew in the curation
+    composites").  Real-corpus
     Zipf heads ("the" ≈ 5-7% of tokens) stay far from the knee, so
     the shared exchange is the default; pass ``hot_head_safe=True``
     for corpora with a known degenerate head (log/boilerplate dumps)

@@ -39,11 +39,11 @@ hot-hash broadcast cap the substring family already implements
 broadcast semi-join); the window form is kept here because the
 per-hash aggregate is a single MIN — the partition is scanned once,
 not materialized quadratically.  MEASURED (r10 VERDICT item 4,
-tools/probe_skew_curation.py): with a planted hot paragraph in 50%
-of 500k docs (1M copies in one window partition) the window plan
-runs 3.9 s vs 4.4 s for a partial-agg+join rewrite — the linear
-single-pass scan is immune at any fixture we can generate; the
-broadcast-cap escalation stays the 10^8-copy contingency.
+SCALING.md "Hot-key skew in the curation composites"): with a
+planted hot paragraph in 50% of 500k docs (1M copies in one window
+partition) the window plan runs 3.9 s vs 4.4 s for a partial-agg+join
+rewrite — the linear single-pass scan is immune at any fixture we can
+generate; the broadcast-cap escalation stays the 10^8-copy contingency.
 
 First-occurrence key: fixed-width ``lpad(doc_id)||lpad(pos)`` string
 (the composite-key rule from the winnowed-substring oracle — never an

@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.scalars import scalar_cross
+from bitcoin_datawarehouse_spark.pipeline import loader
 from bitcoin_datawarehouse_spark.registry import query
 from bitcoin_datawarehouse_spark.tables import load_table
 
@@ -44,11 +45,12 @@ from bitcoin_datawarehouse_spark.tables import load_table
 def pipeline_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Staged-upsert dataflow: batch wins on key conflict, all non-key
     columns replaced; unmatched target rows kept; batch-only rows
-    inserted.
+    inserted.  Built by the loader's own merge expression
+    (``loader._upsert``), so the gate checks what the pipeline runs.
 
     Scale shape: one anti-join on the merge key (broadcast when the
-    batch is small — the loader broadcasts below a row threshold) +
-    union; the target is read and written exactly once.
+    planner sizes the batch under the broadcast threshold) + union;
+    the target is read and written exactly once.
     """
     orders = load_table(spark, sf_dir, "orders")
     target = orders.filter(F.col("o_orderkey") % 7 != 0).select(
@@ -59,9 +61,7 @@ def pipeline_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("M").alias("o_orderstatus"),
         "o_totalprice",
     )
-    return target.join(
-        F.broadcast(batch), "o_orderkey", "left_anti"
-    ).unionByName(batch)
+    return loader._upsert(target, batch, ["o_orderkey"])
 
 
 @query(

@@ -8,7 +8,7 @@ span the whole domain.  Z-ordering (bit-interleaving order-preserving
 bucket ids, functions/zorder.py) makes contiguous key ranges small
 hyper-rectangles, so row-group stats stay tight on BOTH interleaved
 dimensions and 2-D predicates prune most of the table
-(tools/probe_zorder.py measures the effect at sf10; SCALING.md).
+(measured at sf10: SCALING.md "Round 6: z-order clustering").
 
 The gate query exposes the z-cell map of `orders` over
 (customer, order-day): runtime-adaptive bucket scales (scalar MAX

@@ -419,8 +419,8 @@ def tpch_q17_small_quantity_revenue(
     threshold chain is deterministic end-to-end so the strict ``<``
     cannot disagree across engines on a boundary row.  On a lineitem
     table BUCKETED by l_partkey both fact passes read pre-hashed and
-    the plan carries ZERO exchanges (tools/probe_bucketed_q17.py
-    measures it at sf10).
+    the plan carries ZERO exchanges (measured at sf10: SCALING.md
+    "The q17 lever, actioned").
     """
     return q17_shape(
         load_table(spark, sf_dir, "lineitem"),

@@ -338,12 +338,14 @@ class Loader:
         write."""
         pred = F.expr(condition) if isinstance(condition, str) else condition
         before = Observation()
-        # the keep flag is computed BELOW the observation: a predicate
-        # that folds to a constant would otherwise prune the observed
-        # scan out of the plan, and the count with it
+        # only rows whose condition is TRUE go (SQL DELETE semantics: a
+        # NULL condition keeps the row).  The keep flag is computed
+        # BELOW the observation: a predicate that folds to a constant
+        # would otherwise prune the observed scan out of the plan, and
+        # the count with it
         flagged = (
             self.wh.read(self.schema, self.table)
-            .withColumn("__keep", F.coalesce(~pred, F.lit(False)))
+            .withColumn("__keep", ~F.coalesce(pred, F.lit(False)))
             .observe(before, F.count(F.lit(1)).alias("rows"))
         )
         kept = self._write_counted(

@@ -26,7 +26,8 @@ resolve/serve concurrently without refreshTable choreography.
 
 Scale shape: the corpus append is one anti-join against doc_ids; the
 profile compare is two ≤64-row collects; retraining cost is the
-family's build cost (probed in tools/probe_model_serve.py) and only
+family's build cost (SCALING.md "Serve economics split from build
+cost") and only
 paid when the policy fires — a stable stream pays the profile probe
 per trigger, nothing else.
 """

@@ -234,6 +234,13 @@ def test_delete_by_condition(spark, wh):
     assert deleted == 3
     assert ld.get_record_count() == 7
 
+    # DELETE WHERE removes only rows whose condition is TRUE: a NULL
+    # condition keeps the row (reference pg_loader.py:272-294)
+    ln = Loader(wh, "bitcoin", "dn")
+    ln.load_full_refresh(rows_df(spark, [{"id": 1, "v": 10}, {"id": 2, "v": None}, {"id": 3, "v": 1}]))
+    assert ln.delete_by_condition("v > 5") == 1
+    assert sorted(r["id"] for r in wh.read("bitcoin", "dn").collect()) == [2, 3]
+
 
 def test_watermark_probes(spark, wh):
     ld = Loader(wh, "bitcoin", "w")

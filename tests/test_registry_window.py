@@ -9,6 +9,10 @@ unnoticed.
 
 from __future__ import annotations
 
+import subprocess
+import sys
+from pathlib import Path
+
 import __spark_entry__ as entrymod
 from bitcoin_datawarehouse_spark.registry import (
     DRIVER_WINDOW,
@@ -118,3 +122,16 @@ def test_no_decimal_output_columns_anywhere():
     assert not offenders, (
         f"decimal/hugeint output columns exposed: {offenders}"
     )
+
+
+def test_curation_pipeline_imports_alone():
+    """A module that reads another module's registration at import
+    time must import that module itself, not rely on
+    ``load_all_operators``' order."""
+    proc = subprocess.run(
+        [sys.executable, "-c",
+         "import bitcoin_datawarehouse_spark.operators.curation_pipeline"],
+        cwd=Path(__file__).resolve().parents[1], capture_output=True,
+        text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 from pathlib import Path
@@ -66,9 +65,10 @@ def main() -> None:
         load_all_operators,
     )
     from bitcoin_datawarehouse_spark.tables import TABLES  # noqa: E402
+    from tools.harness import sf_of  # noqa: E402
+
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    m = re.search(r"sf([\d.]+)", sf_dir)
-    sf = float(m.group(1)) if m else None
+    sf = sf_of(sf_dir)
 
     load_all_operators()
     con = duckdb.connect()

@@ -8,9 +8,9 @@ BatchEvalPython nodes) are committed artifacts, not prose.
 Usage:
   python tools/dump_plans.py --out plans/r12 --suffix before [QUERY ...]
 
-With no QUERY args, dumps every bench HEADLINE query.  Uses the same
-session profile as bench.py (8 shuffle partitions, AQE off at sf<1)
-so the captured plan is the one the bench actually runs.
+With no QUERY args, dumps every bench HEADLINE query.  Plans in the
+bench's session (``tools/harness.py``), so the captured plan is the
+one the bench actually runs.
 """
 
 from __future__ import annotations
@@ -26,10 +26,10 @@ from bitcoin_datawarehouse_spark.registry import (  # noqa: E402
     QUERIES,
     load_all_operators,
 )
-from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
 from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
     release_tracked_caches,
 )
+from tools.harness import session  # noqa: E402
 
 
 def main() -> int:
@@ -52,19 +52,7 @@ def main() -> int:
     out_dir = Path(__file__).resolve().parent.parent / args.out
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    spark = get_spark(
-        "dump-plans",
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    from bitcoin_datawarehouse_spark.tables import cache_tables
-
-    cache_tables(
-        spark,
-        sf_dir,
-        ["region", "nation", "customer", "supplier", "part", "orders",
-         "lineitem", "events"],
-    )
+    spark = session("dump-plans", sf_dir)
     for name in names:
         df = QUERIES[name](spark, sf_dir)
         # DataFrame.explain prints; capture via the internal API

@@ -8,11 +8,15 @@ count / isEmpty / toPandas / localCheckpoint / noop-writes /
 saveAsTable — and prints one line per action with its wall seconds
 and the caller, then the total.
 
+Runs in the bench's session (``tools/harness.py``) over the fixture
+in ``$SPARK_GRAFT_SF_DIR`` (the bench's default when unset).
+
 Usage: python tools/probe_actions.py QUERY [QUERY ...]
 """
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 import traceback
@@ -25,14 +29,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql.classic.dataframe import DataFrame  # noqa: E402
 from pyspark.sql.readwriter import DataFrameWriter  # noqa: E402
 
+from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
+    release_tracked_caches,
+)
 from bitcoin_datawarehouse_spark.registry import (  # noqa: E402
     QUERIES,
     load_all_operators,
 )
-from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
-from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
-    release_tracked_caches,
-)
+from tools.harness import noop, session, warm  # noqa: E402
 
 LOG: list[tuple[str, float, str]] = []
 ENABLED = False
@@ -69,38 +73,20 @@ for m in ("save", "saveAsTable", "parquet"):
 def main() -> int:
     global ENABLED
     names = sys.argv[1:]
-    load_all_operators()
-    spark = get_spark(
-        "probe-actions",
-        shuffle_partitions=8,
-        extra_conf={"spark.sql.adaptive.enabled": "false"},
-    )
-    from bitcoin_datawarehouse_spark.tables import cache_tables
-
-    import os
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cache_tables(
-        spark,
-        sf_dir,
-        ["region", "nation", "customer", "supplier", "part", "orders",
-         "lineitem", "events"],
-    )
-    import pandas as _pd  # noqa: F401
-
-    spark.range(64).repartition(32).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    load_all_operators()
+    spark = session("probe-actions", sf_dir)
+    warm(spark, sf_dir)
 
     for name in names:
         fn = QUERIES[name]
         # untimed warm pass (bench methodology)
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        noop(fn(spark, sf_dir))
         release_tracked_caches()
         LOG.clear()
         ENABLED = True
         t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        noop(fn(spark, sf_dir))
         total = time.time() - t0
         ENABLED = False
         release_tracked_caches()

@@ -9,10 +9,11 @@ fixture ONCE per round, records the walls in a committed history
 previous recorded wall — the regression tripwire the fixture-scale
 bench cannot be.
 
-Decade-probe discipline (CLAUDE.md): one warmed session, noop sink,
-tracked caches released between runs, two timed runs (min) below the
-adaptive cutoff, one above — and numbers from a loaded machine are
-suspect, so the run records load_avg alongside.
+Decade-probe discipline (CLAUDE.md, ``tools/harness.py``): one warmed
+session, noop sink, tracked caches released between runs, two timed
+runs (min) below the adaptive cutoff, one above — and numbers from a
+loaded machine are suspect, so the run records load_avg alongside.
+Alerts compare only with the last run at the same sf and CPU count.
 
 Usage:
   python tools/probe_sf10_panel.py [SF10_DIR]        # default /tmp/sf10_panel
@@ -23,22 +24,25 @@ Usage:
 from __future__ import annotations
 
 import json
-import os
 import subprocess
 import sys
 import time
 from pathlib import Path
 
-sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
+REPO = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(REPO))
 
-from bitcoin_datawarehouse_spark.functions.cachereg import (  # noqa: E402
-    release_tracked_caches,
-)
-from bitcoin_datawarehouse_spark.registry import (  # noqa: E402
-    QUERIES,
-    load_all_operators,
-)
+from bitcoin_datawarehouse_spark.registry import load_all_operators  # noqa: E402
 from bitcoin_datawarehouse_spark.session import get_spark  # noqa: E402
+from tools.harness import (  # noqa: E402
+    append_history,
+    comparable_prev,
+    load_avg,
+    sf_of,
+    shared_subset_vs_prev,
+    time_queries,
+    warm,
+)
 
 #: Fixed panel — one per family, scale-stressing, NO O(N²) audit
 #: queries (the exact pair grids are quadratic by design at sf10;
@@ -74,8 +78,7 @@ PANEL = [
 ]
 
 ALERT_RATIO = 1.5
-ADAPTIVE_CUTOFF_S = 10.0
-HISTORY = Path(__file__).resolve().parent.parent / "sf10_panel_history.jsonl"
+HISTORY = REPO / "sf10_panel_history.jsonl"
 
 
 def _ensure_fixture(dst: str) -> None:
@@ -98,54 +101,17 @@ def _ensure_fixture(dst: str) -> None:
     )
 
 
-def _last_entry() -> dict | None:
-    if not HISTORY.exists():
-        return None
-    prev = None
-    for line in HISTORY.read_text().splitlines():
-        try:
-            cand = json.loads(line)
-        except json.JSONDecodeError:
-            continue
-        if cand.get("queries"):
-            prev = cand
-    return prev
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf10_panel"
     _ensure_fixture(sf_dir)
     load_all_operators()
     spark = get_spark("sf10-panel", shuffle_partitions=96)
+    warm(spark, sf_dir)
 
-    # warm JVM/codegen/Arrow once
-    QUERIES["pricing_summary"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    release_tracked_caches()
-
-    timings: dict[str, float] = {}
-    for name in PANEL:
-        fn = QUERIES[name]
-        # ALWAYS one untimed warm pass: it absorbs per-plan codegen/JIT
-        # AND the serve-only gates' one-time model build
-        # (ensure-if-missing) — without it the first panel run of a
-        # round records build cost as serving cost (measured:
-        # trainprep_dsir_serve_only 70 s cold vs sub-second serving)
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        warm = time.time() - t0
-        release_tracked_caches()
-        reps = 1 if warm >= ADAPTIVE_CUTOFF_S else 2
-        best = None
-        for _ in range(reps):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            best = dt if best is None or dt < best else best
-            release_tracked_caches()
-        timings[name] = round(best, 2)
-        print(f"{name}: {timings[name]}s (warm {warm:.2f}s)", file=sys.stderr)
+    best = time_queries(spark, sf_dir, PANEL, repeats=2, cutoff_s=10.0)
+    timings = {n: round(t, 2) for n, t in best.items()}
+    sf = sf_of(sf_dir)
+    cpus = spark.sparkContext.defaultParallelism
 
     out: dict = {
         "panel": "sf10",
@@ -153,34 +119,23 @@ def main() -> int:
         "value": round(sum(timings.values()), 2),
         "unit": "sec",
         "queries": timings,
+        "sf": sf,
+        "cpus": cpus,
         "ts": int(time.time()),
+        "load_avg": load_avg(),
     }
-    try:
-        out["load_avg"] = [round(x, 2) for x in os.getloadavg()]
-    except OSError:  # pragma: no cover
-        pass
 
-    prev = _last_entry()
+    prev = comparable_prev(HISTORY, sf, cpus)
     if prev is not None:
-        alerts = {}
-        for name, now_s in timings.items():
-            before = prev["queries"].get(name)
-            if before and now_s > ALERT_RATIO * before:
-                alerts[name] = {"prev_s": before, "now_s": now_s}
-        out["prev_ts"] = prev.get("ts")
-        out["alerts"] = alerts
-        shared = [n for n in timings if n in prev["queries"]]
-        prev_total = sum(prev["queries"][n] for n in shared)
-        now_total = sum(timings[n] for n in shared)
-        out["shared_total_ratio_vs_prev"] = (
-            round(now_total / prev_total, 3) if prev_total else None
-        )
+        out["alerts"] = {
+            name: {"prev_s": prev["queries"][name], "now_s": now_s}
+            for name, now_s in timings.items()
+            if prev["queries"].get(name)
+            and now_s > ALERT_RATIO * prev["queries"][name]
+        }
+        out["shared_subset_vs_prev"] = shared_subset_vs_prev(timings, prev)
 
-    try:
-        with HISTORY.open("a") as fh:
-            fh.write(json.dumps(out) + "\n")
-    except OSError:  # pragma: no cover
-        pass
+    append_history(HISTORY, out)
     print(json.dumps(out))
     return 1 if out.get("alerts") else 0
 
