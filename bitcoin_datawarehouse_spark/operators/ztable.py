@@ -34,7 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bitcoin_datawarehouse_spark.functions.zorder import bucketize, zorder2
-from bitcoin_datawarehouse_spark.pipeline.catalog import dynamic_overwrite
+from bitcoin_datawarehouse_spark.pipeline.catalog import (
+    dynamic_overwrite,
+    hive_dirs,
+)
 
 Z_TOTAL_BITS = 32  # two 16-bit interleaved dimensions
 
@@ -125,8 +128,12 @@ class ZOrderedTable:
         self._write(df, "append")
 
     # -- maintenance -------------------------------------------------------
-    def _block_dirs(self) -> list[pathlib.Path]:
-        return sorted((self.path / "data").glob("zblock=*"))
+    def _block_dirs(self) -> dict[int, pathlib.Path]:
+        """``{block id: directory}`` of the table's z-blocks."""
+        return {
+            int(v): pathlib.Path(d)
+            for v, d in hive_dirs(self.path / "data", "zblock").items()
+        }
 
     def compact(self) -> list[str]:
         """Rewrite every block whose parquet file count exceeds the
@@ -142,7 +149,7 @@ class ZOrderedTable:
         measured in SCALING.md.)  Returns rewritten block names."""
         over = [
             d
-            for d in self._block_dirs()
+            for _, d in sorted(self._block_dirs().items())
             if len(list(d.glob("*.parquet"))) > self.max_files_per_block
         ]
         if not over:
@@ -187,9 +194,7 @@ class ZOrderedTable:
     ) -> tuple[DataFrame, int, int]:
         """(frame, blocks_read, blocks_total) for a dict of
         ``col: (lo, hi)`` value ranges over the two z dimensions."""
-        dirs = {
-            int(d.name.split("=")[1]): d for d in self._block_dirs()
-        }
+        dirs = self._block_dirs()
         keep = [b for b in self._blocks_for(ranges) if b in dirs]
         pred = F.lit(True)
         for c, (lo, hi) in ranges.items():

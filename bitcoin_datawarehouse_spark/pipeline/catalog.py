@@ -21,11 +21,11 @@ is atomic; on object stores the swap degrades to copy-then-delete and a
 manifest-based table format (Delta/Iceberg) is the production answer.
 
 Physical layout is decided here and nowhere else: the Hive
-``col=value`` partition directories (:meth:`Warehouse.partition_dirs`,
-:meth:`Warehouse.read_partitions`), the clustered partition rewrite
-(:meth:`Warehouse.overwrite_partitions`) and the directory swap.  The
-loader and the materialized views call these; they hold merge and
-view semantics only.
+``col=value`` partition directories (:meth:`Warehouse.partition_cols`,
+:meth:`Warehouse.partition_dirs`, :meth:`Warehouse.read_partitions`),
+the clustered partition rewrite (:meth:`Warehouse.overwrite_partitions`)
+and the directory swap.  The loader and the materialized views call
+these; they hold merge and view semantics only.
 """
 
 from __future__ import annotations
@@ -107,6 +107,53 @@ def swap_in(tmp: Path, final: Path, keep: int | None = 0) -> None:
         raise
     if keep is not None:
         drop_snapshots(final, keep)
+
+
+def _layout(d: str | os.PathLike) -> list[str] | None:
+    """:meth:`Warehouse.partition_cols` of the table directory ``d``.
+    Spark's own read rules: names starting with ``.`` or ``_`` are not
+    data files, and a ``col=value`` directory is a partition.  The first
+    partition directory holding data decides the deeper levels."""
+    try:
+        with os.scandir(d) as it:
+            entries = list(it)
+    except FileNotFoundError:
+        return None
+    if any(
+        e.name.endswith(".parquet") and e.name[0] not in "._" and e.is_file()
+        for e in entries
+    ):
+        return []
+    for e in entries:
+        if "=" in e.name and e.name[0] != "." and e.is_dir():
+            deeper = _layout(e.path)
+            if deeper is not None:
+                return [e.name.split("=", 1)[0], *deeper]
+    return None
+
+
+def hive_dirs(root: str | os.PathLike, col: str) -> dict[str, str]:
+    """``{value: path}`` of the ``col=value`` directories directly
+    under ``root`` ({} when it does not exist).
+
+    A NAMES-ONLY scandir (no per-file stat, no Spark file index)
+    matched on the UNESCAPED directory name, never ``root /
+    f"{col}={v}"`` string building: Spark %XX-escapes special
+    characters in partition directory names (a ':' in a timestamp-like
+    value, a literal '%'), and a raw-value probe would treat such an
+    EXISTING partition as new — a dynamic overwrite then drops its
+    history.  Hive escaping is exactly %XX on the reserved set, so
+    ``unquote`` inverts it."""
+    prefix = f"{col}="
+    try:
+        with os.scandir(root) as entries:
+            return {
+                unquote(e.name[len(prefix):]): e.path
+                for e in entries
+                if e.is_dir() and e.name.startswith(prefix)
+            }
+    except FileNotFoundError:
+        return {}
 
 
 def restore_missing(final: Path) -> None:
@@ -258,17 +305,20 @@ class Warehouse:
         return self.root / schema / table
 
     def table_exists(self, schema: str, table: str) -> bool:
-        """Existence probe (reference pg_loader.py:107-124)."""
-        p = self.table_path(schema, table)
-        return p.exists() and any(p.glob("*.parquet"))
+        """Existence probe (reference pg_loader.py:107-124), for flat
+        and partitioned layouts alike."""
+        return self.partition_cols(schema, table) is not None
 
-    def table_exists_partitioned(self, schema: str, table: str) -> bool:
-        """Existence probe for Hive-partitioned layouts: data files live
-        at least one ``col=value`` directory level down (``*/**`` also
-        matches multi-level ``day=*/hour=*`` layouts, which compact()
-        relies on to avoid silently flattening them)."""
-        p = self.table_path(schema, table)
-        return p.exists() and any(p.glob("*/**/*.parquet"))
+    def partition_cols(self, schema: str, table: str) -> list[str] | None:
+        """The table's physical layout: None when it holds no data
+        files, ``[]`` for a flat table, else the Hive ``col=value``
+        directory columns, outermost first.
+
+        Directory names only — one ``scandir`` per level, no file stat
+        and no Spark job — so every load can afford it.  The layout on
+        disk is what the loader's merges, the view sync and compaction
+        follow; no caller names it."""
+        return _layout(self.table_path(schema, table))
 
     def file_token(self, schema: str, table: str) -> str | None:
         """Digest of the names of ``schema.table``'s data files, None
@@ -512,8 +562,6 @@ class Warehouse:
         queueing forever.
         """
         path = self.root / f".lock_{name}"
-        if path.is_dir():  # left behind by the earlier mkdir-based lock
-            shutil.rmtree(path, ignore_errors=True)
         deadline = time.monotonic() + timeout_s
         with open(path, "a+") as f:
             while True:
@@ -549,32 +597,17 @@ class Warehouse:
         files_after).
         """
         path = self.table_path(schema, table)
-        # recursive glob: partitioned tables keep data one level down in
-        # col=value dirs — a top-level glob would see 0 files and the
-        # rewrite would silently flatten the partition layout
+        # recursive glob: partitioned tables keep data in col=value dirs
         files = list(path.glob("**/*.parquet"))
         total = sum(f.stat().st_size for f in files)
         n_out = max(1, -(-total // target_file_bytes))
-        partition_cols = None
-        if self.table_exists_partitioned(schema, table):
-            # recover the layout from the col=value directory names so
-            # the compacted table keeps its pruning
-            partition_cols = []
-            probe = path
-            while True:
-                sub = [
-                    d for d in probe.iterdir() if d.is_dir() and "=" in d.name
-                ]
-                if not sub:
-                    break
-                partition_cols.append(sub[0].name.split("=", 1)[0])
-                probe = sub[0]
+        # the rewrite keeps the layout, and with it the table's pruning
         self.write_atomic(
             self.read(schema, table),
             schema,
             table,
             coalesce=int(n_out),
-            partition_by=partition_cols,
+            partition_by=self.partition_cols(schema, table),
         )
         after = len(
             list(self.table_path(schema, table).glob("**/*.parquet"))
@@ -587,27 +620,9 @@ class Warehouse:
     ) -> list[str]:
         """The existing ``col=value`` directories of ``schema.table``
         for ``values`` (sorted; values without a directory skipped).
-
-        A NAMES-ONLY scandir of the table root (no per-file stat, no
-        Spark file index) matched on the UNESCAPED directory name,
-        never ``path / f"{col}={v}"`` string building: Spark
-        %XX-escapes special characters in partition directory names
-        (a ':' in a timestamp-like value, a literal '%'), and a
-        raw-value probe would treat such an EXISTING partition as new
-        — a dynamic overwrite then drops its history.  Hive escaping
-        is exactly %XX on the reserved set, so ``unquote`` inverts
-        it; a value's key is its string form, NULL's is Hive's
-        sentinel."""
-        root = self.table_path(schema, table)
-        if not root.exists():
-            return []
-        prefix = f"{col}="
-        with os.scandir(root) as entries:
-            by_value = {
-                unquote(e.name[len(prefix):]): e.path
-                for e in entries
-                if e.is_dir() and e.name.startswith(prefix)
-            }
+        A value's key is its string form, NULL's is Hive's sentinel
+        (:func:`hive_dirs` resolves the escaped names)."""
+        by_value = hive_dirs(self.table_path(schema, table), col)
         keys = {_HIVE_NULL_PART if v is None else str(v) for v in values}
         return sorted(by_value[k] for k in keys if k in by_value)
 
@@ -640,41 +655,31 @@ class Warehouse:
         )
 
     def overwrite_partitions(
-        self,
-        df: DataFrame,
-        schema: str,
-        table: str,
-        col: str,
-        max_records_per_file: int | None = None,
+        self, df: DataFrame, schema: str, table: str, partition_by: list[str]
     ) -> None:
-        """Replace exactly the ``col=value`` directories present in
-        ``df`` (dynamic partition overwrite; every other partition's
-        files stay byte-untouched), creating the table if missing.
+        """Replace exactly the partition directories present in ``df``
+        (dynamic partition overwrite over the ``partition_by`` columns,
+        outermost first; every other partition's files stay
+        byte-untouched), creating the table if missing.
 
-        The partitionBy write is CLUSTERED on ``col`` first.  Without
-        the repartition every upstream task holds rows of ~every
-        partition value and opens one file per (task, value): a
-        2 499-day fact seeded through 32 tasks wrote ~80 000 files
+        The partitionBy write is CLUSTERED on the partition columns
+        first.  Without the repartition every upstream task holds rows
+        of ~every partition value and opens one file per (task, value):
+        a 2 499-day fact seeded through 32 tasks wrote ~80 000 files
         (measured — tools/probe_loader_scale.py; 169 s at 600 k rows,
         dominated by file creation, and every later reader pays the
         open/footer cost again).  Hash-clustering by the partition
         value writes ONE file per touched partition per non-empty
         shuffle partition — 2 499 files for the same seed, 21× faster
-        (8 s).
-
-        ``max_records_per_file`` is the hot-partition lever: one
-        cluster key means ONE task writes a whole partition, and at
-        100 TB a hot day can exceed a single comfortable file.  The
-        writer option rolls a task's output to a new file every N
-        records — no extra shuffle, and a salted repartition would be
-        undone by AQE coalescing anyway (measured: the salted variant
-        still wrote one file per day at fixture scale).
+        (8 s).  One cluster key means ONE task writes a whole
+        partition; Spark's ``spark.sql.files.maxRecordsPerFile`` rolls
+        a hot partition's output over several files without another
+        shuffle.
         """
         self.create_schema(schema)
-        writer = dynamic_overwrite(df.repartition(col).write)
-        if max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", max_records_per_file)
-        writer.partitionBy(col).parquet(str(self.table_path(schema, table)))
+        dynamic_overwrite(df.repartition(*partition_by).write).partitionBy(
+            *partition_by
+        ).parquet(str(self.table_path(schema, table)))
 
     # -- storage layout (the 100 TB levers) --------------------------------
     def write_zordered(

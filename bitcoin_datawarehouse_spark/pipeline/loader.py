@@ -26,7 +26,8 @@ batch with new/missing columns would fail the reference's INSERT —
 here ``unionByName(allowMissingColumns=True)`` fills either side's
 missing columns with null (schema drift tolerated, documented).
 
-Scale notes: the merge reads the target once and writes it once —
+Scale notes: the merge reads the target once and writes it once (a
+Hive-partitioned target: only the partitions the batch touches) —
 one shuffle on the merge keys for the anti-join, or none when the
 batch is broadcast, which is the common incremental case (batches are
 "rows since last watermark").  The broadcast decision comes from the
@@ -40,7 +41,8 @@ table) is cached and counted, and broadcast when it holds at most
 
 This module holds merge semantics only.  Where rows physically land
 (partition directories, the clustered partition rewrite, the
-tmp→live directory swap) is :class:`Warehouse`'s decision.
+tmp→live directory swap) is :class:`Warehouse`'s decision; every
+operation here keeps the layout it finds on disk.
 """
 
 from __future__ import annotations
@@ -71,19 +73,29 @@ class Loader:
     def load_full_refresh(
         self, df: DataFrame, watermark_col: str | None = None
     ) -> int:
-        """Atomic replace (reference truncate+insert, pg_loader.py:126-163);
-        returns the rows written."""
-        return self._write_counted(df, watermark_col)
+        """Atomic replace (reference truncate+insert, pg_loader.py:126-163)
+        in the target's current layout; returns the rows written."""
+        cols = self.wh.partition_cols(self.schema, self.table)
+        return self._write_counted(df, watermark_col, cols)
 
-    def _write_counted(self, df: DataFrame, watermark_col: str | None) -> int:
-        """Replace the target with ``df``; the row count and the MAX of
+    def _write_counted(
+        self,
+        df: DataFrame,
+        watermark_col: str | None,
+        partition_by: list[str] | None,
+    ) -> int:
+        """Replace the target with ``df``, Hive-partitioned by
+        ``partition_by`` when given; the row count and the MAX of
         ``watermark_col`` are observed on the write, so they cost no
         extra Spark job."""
         obs = Observation()
         aggs = [F.count(F.lit(1)).alias("rows")]
         if watermark_col in df.columns:
             aggs.append(F.max(watermark_col).alias("max"))
-        self.wh.write_atomic(df.observe(obs, *aggs), self.schema, self.table)
+        self.wh.write_atomic(
+            df.observe(obs, *aggs), self.schema, self.table,
+            partition_by=partition_by,
+        )
         got = obs.get
         self.written_max = got.get("max")
         return got["rows"]
@@ -95,78 +107,99 @@ class Loader:
         order_col: str | None = None,
         strict_schema: bool = False,
         watermark_col: str | None = None,
+        partition_col: str | None = None,
     ) -> int:
         """Merge ``df`` into the target on ``unique_keys``; returns the
-        target's row count after the merge (the rows written), and
-        leaves the merged table's MAX(``watermark_col``) in
-        :attr:`written_max`.
+        rows the merge wrote (the whole table, or the touched partitions
+        of a partitioned one) and leaves the merged table's
+        MAX(``watermark_col``) in :attr:`written_max` (None after a
+        touched-partition merge, which sees only a slice).
 
         Reference dispatch preserved (pg_loader.py:165-217): no keys →
-        full refresh; target missing → create+insert; else upsert.
+        full refresh; target missing → create+insert; else upsert.  The
+        target's layout on disk (:meth:`Warehouse.partition_cols`)
+        picks the upsert:
+
+        * flat — the whole-table merge: one anti-join against the
+          target, one rewrite of it (:func:`_upsert`);
+        * Hive-partitioned — the touched-partition merge, which costs
+          O(touched partitions), not O(history)
+          (:meth:`_merge_partitions`).
+
+        ``partition_col`` lays out a target this load creates; a value
+        that contradicts an existing layout raises ``ValueError``.
 
         ``strict_schema=True`` refuses a batch whose columns differ
         from the target (the reference's INSERT would have failed —
         a production control for catching upstream contract breaks);
         the default tolerates drift by null-filling either side.
         """
+        cols = self.wh.partition_cols(self.schema, self.table)
+        exists = cols is not None
+        if not exists:
+            cols = [partition_col] if partition_col else []
+        elif partition_col and cols != [partition_col]:
+            raise ValueError(
+                f"{self.schema}.{self.table} is partitioned by {cols} on "
+                f"disk; partition_col={partition_col!r} contradicts it"
+            )
         if not unique_keys:
-            return self.load_full_refresh(df, watermark_col)
+            return self._write_counted(df, watermark_col, cols)
         batch = _dedupe_batch(df, unique_keys, order_col)
+        if not exists:
+            return self._write_counted(batch, watermark_col, cols)
         # a batch under the broadcast threshold is evaluated by the two
         # legs (anti-join build side, union) of the one write action —
         # the pipeline's batches are driver rows, so that costs nothing.
         # Any other batch is cached: _upsert counts it, then both legs
         # read it, and its upstream plan may be arbitrarily expensive.
-        # (The partitioned merge below always caches: it also collects
-        # the batch's partition values.)
-        cached = not _fits_broadcast(batch)
+        # The partitioned merge always caches: it also collects the
+        # batch's partition values.
+        cached = bool(cols) or not _fits_broadcast(batch)
         if cached:
             batch = cache_tracked(batch)
         try:
-            if not self.wh.table_exists(self.schema, self.table):
-                return self._write_counted(batch, watermark_col)
-            old = self.wh.read(self.schema, self.table)
-            if strict_schema and set(batch.columns) != set(old.columns):
-                raise ValueError(
-                    f"{self.schema}.{self.table}: batch schema drift "
-                    f"(batch-only: {sorted(set(batch.columns) - set(old.columns))}, "
-                    f"target-only: {sorted(set(old.columns) - set(batch.columns))})"
+            if cols:
+                return self._merge_partitions(
+                    batch, unique_keys, cols, strict_schema
                 )
+            old = self.wh.read(self.schema, self.table)
+            if strict_schema:
+                self._refuse_drift(batch, old)
             return self._write_counted(
-                _upsert(old, batch, unique_keys), watermark_col
+                _upsert(old, batch, unique_keys), watermark_col, cols
             )
         finally:
             if cached:
                 batch.unpersist()
 
-    def load_incremental_partitioned(
+    def _merge_partitions(
         self,
-        df: DataFrame,
+        batch: DataFrame,
         unique_keys: list[str],
-        partition_col: str,
-        order_col: str | None = None,
-        max_records_per_file: int | None = None,
-    ) -> None:
-        """Partition-scoped merge: upsert ``df`` into a Hive-partitioned
-        target, rewriting ONLY the partitions the batch touches.
+        cols: list[str],
+        strict_schema: bool,
+    ) -> int:
+        """Partition-scoped upsert of the deduped ``batch`` into a target
+        Hive-partitioned by ``cols``, rewriting ONLY the partitions the
+        batch touches; returns the rows of those partitions.
 
-        This is the merge that survives 100 TB: ``load_incremental``
-        reads and rewrites the whole table per batch, which is fine
-        for dimension-sized tables and absurd for a date-partitioned
-        fact table — a daily batch should cost O(touched days), not
+        This is the merge that survives 100 TB: the whole-table merge
+        reads and rewrites the whole table per batch, which is fine for
+        dimension-sized tables and absurd for a date-partitioned fact
+        table — a daily batch should cost O(touched days), not
         O(history).  Mechanics:
 
-        1. the batch's distinct partition values prune the target read
-           to the touched directories (:meth:`Warehouse.read_partitions`);
-        2. the usual key-dedupe + anti-join + union on that slice;
+        1. the batch's distinct outermost partition values prune the
+           target read to the touched directories
+           (:meth:`Warehouse.read_partitions`);
+        2. the usual anti-join + union on that slice;
         3. :meth:`Warehouse.overwrite_partitions` replaces exactly the
            touched partition directories, leaving every other
            partition's files physically untouched.
 
-        A target that holds a FLAT table (files at its root) is refused
-        with a ``ValueError``: a dynamic partition overwrite would leave
-        those files orphaned beside the new ``col=value`` directories,
-        and reads would return only the batch.
+        The written rows are a slice, so their MAX is not the table's:
+        :attr:`written_max` is None and the pipeline's next run probes.
 
         The merge key set should include (or functionally determine)
         the partition column — a row whose partition value CHANGES
@@ -177,33 +210,35 @@ class Loader:
         footer; read such tables with ``mergeSchema`` or keep
         partitioned facts on ``strict_schema`` discipline.
         """
-        if self.wh.table_exists(self.schema, self.table):
+        missing = [c for c in cols if c not in batch.columns]
+        if missing:
             raise ValueError(
-                f"{self.schema}.{self.table} has a flat layout; "
-                "load_incremental_partitioned would orphan its rows — "
-                "merge it with load_incremental, or rewrite it "
-                "partitioned first"
+                f"{self.schema}.{self.table}: batch lacks partition "
+                f"column(s) {missing}"
             )
-        batch = cache_tracked(_dedupe_batch(df, unique_keys, order_col))
-        try:
-            merged = batch
-            if self.wh.table_exists_partitioned(self.schema, self.table):
-                touched = [
-                    r[0]
-                    for r in batch.select(partition_col).distinct().collect()
-                ]
-                old_slice = self.wh.read_partitions(
-                    self.schema, self.table, partition_col, touched,
-                    session=batch.sparkSession,
-                )
-                if old_slice is not None:
-                    merged = _upsert(old_slice, batch, unique_keys)
-            self.wh.overwrite_partitions(
-                merged, self.schema, self.table, partition_col,
-                max_records_per_file,
+        if strict_schema:
+            self._refuse_drift(batch, self.wh.read(self.schema, self.table))
+        touched = [r[0] for r in batch.select(cols[0]).distinct().collect()]
+        old = self.wh.read_partitions(
+            self.schema, self.table, cols[0], touched,
+            session=batch.sparkSession,
+        )
+        merged = batch if old is None else _upsert(old, batch, unique_keys)
+        obs = Observation()
+        self.wh.overwrite_partitions(
+            merged.observe(obs, F.count(F.lit(1)).alias("rows")),
+            self.schema, self.table, cols,
+        )
+        self.written_max = None
+        return obs.get["rows"]
+
+    def _refuse_drift(self, batch: DataFrame, old: DataFrame) -> None:
+        if set(batch.columns) != set(old.columns):
+            raise ValueError(
+                f"{self.schema}.{self.table}: batch schema drift "
+                f"(batch-only: {sorted(set(batch.columns) - set(old.columns))}, "
+                f"target-only: {sorted(set(old.columns) - set(batch.columns))})"
             )
-        finally:
-            batch.unpersist()
 
     def load_scd2(
         self,
@@ -238,10 +273,7 @@ class Loader:
         against the batch (batch broadcast when small) decides
         changed/new; history rows are a pass-through scan-and-rewrite
         — the same read-once/write-once contract as
-        :meth:`load_incremental`.  At fact scale, partition the
-        target by a date bucket of ``valid_from`` and this becomes
-        partition-scoped exactly like
-        :meth:`load_incremental_partitioned`.
+        :meth:`load_incremental`, in the target's current layout.
         """
         ts = F.lit(batch_ts).cast("timestamp")
         open_to = F.lit(None).cast("timestamp")
@@ -252,7 +284,8 @@ class Loader:
                 .withColumn("valid_to", open_to)
                 .withColumn("is_current", F.lit(True))
             )
-            if not self.wh.table_exists(self.schema, self.table):
+            cols = self.wh.partition_cols(self.schema, self.table)
+            if cols is None:
                 self.wh.write_atomic(stamped, self.schema, self.table)
                 return
             # the target feeds FIVE subtrees of this load (time-order
@@ -308,7 +341,9 @@ class Loader:
                 .unionByName(kept_cur)
                 .unionByName(opened)
             )
-            self.wh.write_atomic(merged, self.schema, self.table)
+            self.wh.write_atomic(
+                merged, self.schema, self.table, partition_by=cols
+            )
             changed_keys.unpersist()
             old.unpersist()
         finally:
@@ -333,9 +368,9 @@ class Loader:
 
     def delete_by_condition(self, condition: str | Column) -> int:
         """DELETE WHERE (reference pg_loader.py:272-294) as a
-        filter-rewrite; returns rows deleted.  One Spark action: the
-        row counts before and after the filter are observed on the
-        write."""
+        filter-rewrite in the target's layout; returns rows deleted.
+        One Spark action: the row counts before and after the filter
+        are observed on the write."""
         pred = F.expr(condition) if isinstance(condition, str) else condition
         before = Observation()
         # only rows whose condition is TRUE go (SQL DELETE semantics: a
@@ -349,7 +384,9 @@ class Loader:
             .observe(before, F.count(F.lit(1)).alias("rows"))
         )
         kept = self._write_counted(
-            flagged.filter("__keep").drop("__keep"), None
+            flagged.filter("__keep").drop("__keep"),
+            None,
+            self.wh.partition_cols(self.schema, self.table),
         )
         return before.get["rows"] - kept
 

@@ -36,11 +36,11 @@ on the view like any other table.  The PARTITIONED layouts
 partition-local rewrites through the catalog's partition verbs
 (``Warehouse.read_partitions`` / ``overwrite_partitions``, which
 also serve the partitioned-base reads) — the same contract as
-``Loader.load_incremental_partitioned``: a reader concurrent with
-maintenance can see bucket A post-batch and bucket B pre-batch, and
-there is no whole-view snapshot to roll back to.  Run partitioned
-maintenance under ``Warehouse.lock`` when readers need a consistent
-cross-partition view, or keep the flat layout.
+``Loader.load_incremental`` into a partitioned target: a reader
+concurrent with maintenance can see bucket A post-batch and bucket B
+pre-batch, and there is no whole-view snapshot to roll back to.  Run
+partitioned maintenance under ``Warehouse.lock`` when readers need a
+consistent cross-partition view, or keep the flat layout.
 
 Reference parity: the reference maintains no aggregates in-process —
 its rollups live in opaque Dune query_ids (etl_job.csv:2-6) re-run
@@ -447,7 +447,7 @@ class MaterializedAggView:
         """Replace exactly the bucket directories present in
         ``content``, byte-untouched elsewhere."""
         self.wh.overwrite_partitions(
-            content, self.schema, self.table, self._part
+            content, self.schema, self.table, [self._part]
         )
 
     def _touched_bucket_slice(
@@ -475,8 +475,6 @@ class MaterializedAggView:
             shutil.rmtree(d, ignore_errors=True)
 
     def exists(self) -> bool:
-        if self._part:
-            return self.wh.table_exists_partitioned(self.schema, self.table)
         return self.wh.table_exists(self.schema, self.table)
 
     def state(self) -> DataFrame:
@@ -622,104 +620,6 @@ class MaterializedAggView:
         rows' groups."""
         self.apply_changes(base_after, deleted_rows.select(*self.keys))
 
-    # -- partitioned-base maintenance ---------------------------------------
-    def apply_changes_partitioned(
-        self,
-        base_schema: str,
-        base_table: str,
-        base_partition_col: str,
-        touched_keys: DataFrame,
-    ) -> None:
-        """:meth:`apply_changes` with the post-change base READ pruned
-        to the touched groups' partition directories.
-
-        The plain entry point takes ``base_after`` as a frame and the
-        recompute is a full (filtered) base scan — correct, but at
-        100 TB the one maintenance path whose cost depended on caller
-        discipline (r11 verdict).  Here the view reads the base
-        itself from the warehouse: ``base_partition_col`` must be one
-        of the view's group keys and the base must be Hive-partitioned
-        by it (the ``load_incremental_partitioned`` layout), so every
-        row of a touched group lives inside a touched directory and
-        the recompute scans O(touched partitions), not O(base).
-
-        Bootstrap (view missing) still requires the whole base — a
-        pruned bootstrap would silently drop every other group — so
-        it full-refreshes from an unpruned partitioned read.
-        """
-        if base_partition_col not in self.keys:
-            raise ValueError(
-                f"base partition column {base_partition_col!r} must be "
-                f"one of the view's group keys {self.keys} — otherwise "
-                "a touched group's rows can live outside the touched "
-                "partitions and the pruned recompute would be wrong"
-            )
-        if not self.wh.table_exists_partitioned(base_schema, base_table):
-            raise ValueError(
-                f"{base_schema}.{base_table} is not Hive-partitioned — "
-                "use apply_changes(base_after, touched) for flat bases"
-            )
-        sess = self.wh.spark
-        tp = self.wh.table_path(base_schema, base_table)
-        if not self.exists():
-            self._write(
-                self._aggregate(sess.read.parquet(str(tp)))
-            )
-            return
-        touched = cache_tracked(touched_keys.select(*self.keys).distinct())
-        try:
-            touched.count()
-            vals = touched.select(base_partition_col).distinct().collect()
-            pruned = self.wh.read_partitions(
-                base_schema, base_table, base_partition_col,
-                [r[0] for r in vals],
-            )
-            if pruned is None:
-                # every touched partition vanished: recompute finds no
-                # rows, the splice just drops the touched groups (the
-                # root read carries the base schema; LIMIT 0 scans
-                # nothing)
-                pruned = sess.read.parquet(str(tp)).limit(0)
-            self.apply_changes(pruned, touched)
-        finally:
-            touched.unpersist()
-
-    def sync_upsert_partitioned(
-        self,
-        base_schema: str,
-        base_table: str,
-        base_partition_col: str,
-        batch: DataFrame,
-        unique_keys: list[str],
-    ) -> DataFrame:
-        """Pre-merge half of partitioned upsert maintenance: derive
-        the touched groups with a PRUNED pre-merge base read and pin
-        them (eager localCheckpoint — the merge is about to swap the
-        directories out from under the lineage).
-
-        Call BEFORE ``Loader.load_incremental_partitioned``, then
-        :meth:`apply_changes_partitioned` with the returned frame
-        after it (``sync_views_through_partitioned_merge`` is the
-        packaged wiring).  Sound under the partitioned merge's
-        documented contract — the merge keys include/determine the
-        partition column, so a replaced row lives in the batch's own
-        partitions and the pruned read sees it.
-        """
-        touched = batch.select(*self.keys)
-        before = None
-        if self.wh.table_exists_partitioned(base_schema, base_table):
-            vals = touched.select(base_partition_col).distinct().collect()
-            before = self.wh.read_partitions(
-                base_schema, base_table, base_partition_col,
-                [r[0] for r in vals],
-            )
-        if before is not None:
-            replaced = before.join(
-                batch.select(*unique_keys).distinct(), unique_keys, "leftsemi"
-            )
-            touched = touched.unionByName(replaced.select(*self.keys))
-        return touched.distinct().localCheckpoint()
-
     # -- read surface ------------------------------------------------------
     def read(self) -> DataFrame:
         """The exposed rollup (engine-neutral column types — no decimals)."""
@@ -732,62 +632,87 @@ def sync_views_through_merge(
     batch: DataFrame,
     unique_keys: list[str],
     order_col: str | None = None,
+    partition_col: str | None = None,
 ) -> None:
     """Run a ``Loader.load_incremental`` merge AND keep the given views
     consistent with it — the production wiring.
 
     The touched-group derivation needs the PRE-merge base (a replaced
-    row's OLD group must be recomputed too), but the merge atomically
-    replaces the base directory, so each view's touched set is pinned
-    with an eager ``localCheckpoint`` BEFORE the merge runs — the
-    frames survive the swap because their lineage is cut (checkpoint
-    blocks, not the about-to-vanish files; df.persist would lazily
-    re-read the dead path).  Touched sets are group-key-sized, so the
-    checkpoints are tiny.  First sync (no base yet) degrades to
-    batch-groups-only, which is exact: nothing could have been
-    replaced.
+    row's OLD group must be recomputed too), but the merge replaces the
+    base's files, so the replaced rows are pinned with an eager
+    ``localCheckpoint`` BEFORE the merge runs — the frames survive the
+    swap because their lineage is cut (checkpoint blocks, not the
+    about-to-vanish files; df.persist would lazily re-read the dead
+    path).  Touched sets are group-key-sized, so the checkpoints are
+    tiny.  First sync (no base yet) degrades to batch-groups-only,
+    which is exact: nothing could have been replaced.
+
+    The base's layout on disk (``Warehouse.partition_cols``; for a base
+    this merge creates, ``partition_col``, as in the loader) selects
+    the reads.  Over a Hive-partitioned base every base read is pruned
+    to partition directories — the batch's before the merge, the
+    touched groups' after it — so a sync costs O(touched partitions),
+    never a base scan.  That needs the outermost partition column to
+    be a group key of EVERY view (a touched group's rows then all live
+    in touched directories) and the loader's merge contract (merge
+    keys include/determine the partition column).
     """
-    sess = batch.sparkSession
-    had_base = loader.wh.table_exists(loader.schema, loader.table)
-    if not had_base and loader.wh.table_exists_partitioned(
-        loader.schema, loader.table
-    ):
-        # the base was seeded through the PARTITIONED loader path
-        # (col=value dirs) — the flat existence probe above would
-        # return False, the replaced-rows pass would be skipped, and
-        # replaced rows' OLD groups would silently go stale in every
-        # view (r11 ADVICE).  This wiring drives the flat
-        # load_incremental, so a partitioned base is a caller error;
-        # fail loudly instead of under-maintaining.
-        raise ValueError(
-            f"{loader.schema}.{loader.table} has a partitioned layout; "
-            "sync_views_through_merge wires the flat load_incremental — "
-            "maintain views over a partitioned base with "
-            "apply_changes/sync_upsert around your partitioned merge"
+    wh, sess = loader.wh, batch.sparkSession
+    cols = wh.partition_cols(loader.schema, loader.table)
+    had_base = cols is not None
+    if not had_base:
+        cols = [partition_col] if partition_col else []
+    part = cols[0] if cols else None
+    for v in views:
+        if part is not None and part not in v.keys:
+            raise ValueError(
+                f"view {v.schema}.{v.table}: partition column {part!r} "
+                f"of {loader.schema}.{loader.table} must be one of its "
+                f"group keys {v.keys} for pruned maintenance"
+            )
+
+    def read_base(rows: DataFrame) -> DataFrame | None:
+        """The base, pruned to the partitions of ``rows`` when it is
+        partitioned; None when none of them exists."""
+        if part is None:
+            return wh.read_with(sess, loader.schema, loader.table)
+        vals = [r[0] for r in rows.select(part).distinct().collect()]
+        return wh.read_partitions(
+            loader.schema, loader.table, part, vals, session=sess
         )
+
     replaced = None
-    if had_base:
+    before = read_base(batch) if had_base else None
+    if before is not None:
         # ONE pre-merge base pass shared by every view: the matched
         # rows are batch-sized, so the checkpoint is tiny and each
         # view's touched projection comes off it, not off the base
-        replaced = (
-            loader.wh.read_with(sess, loader.schema, loader.table)
-            .join(
-                batch.select(*unique_keys).distinct(),
-                unique_keys,
-                "leftsemi",
-            )
-            .localCheckpoint()
-        )
+        replaced = before.join(
+            batch.select(*unique_keys).distinct(), unique_keys, "leftsemi"
+        ).localCheckpoint()
     touched: list[DataFrame] = []
     for v in views:
         t = batch.select(*v.keys)
         if replaced is not None:
             t = t.unionByName(replaced.select(*v.keys))
         touched.append(t.distinct().localCheckpoint())
-    loader.load_incremental(batch, unique_keys, order_col=order_col)
-    base_after = loader.wh.read_with(sess, loader.schema, loader.table)
-    _apply_views_one_pass(base_after, base_after, views, touched)
+    loader.load_incremental(
+        batch, unique_keys, order_col=order_col, partition_col=partition_col
+    )
+    base_after = wh.read_with(sess, loader.schema, loader.table)
+    sliceable = base_after
+    if part is not None and touched:
+        # one pruned read covering every view's touched partitions
+        vals = touched[0].select(part)
+        for t in touched[1:]:
+            vals = vals.unionByName(t.select(part))
+        sliceable = read_base(vals)
+        if sliceable is None:
+            # every touched partition vanished: the recompute finds no
+            # rows and the splice just drops the touched groups (LIMIT
+            # 0 keeps the base schema and scans nothing)
+            sliceable = base_after.limit(0)
+    _apply_views_one_pass(sliceable, base_after, views, touched)
 
 
 def _apply_views_one_pass(
@@ -835,64 +760,6 @@ def _apply_views_one_pass(
             v.apply_changes(shared, t)
     finally:
         shared.unpersist()
-
-
-def sync_views_through_partitioned_merge(
-    loader,
-    views: list["MaterializedAggView"],
-    batch: DataFrame,
-    unique_keys: list[str],
-    partition_col: str,
-    order_col: str | None = None,
-) -> None:
-    """The partitioned-base production wiring: run a
-    ``Loader.load_incremental_partitioned`` merge and keep the views
-    consistent, with every base touch pruned to the batch's partition
-    directories.
-
-    Requires ``partition_col`` to be a group key of EVERY view (the
-    group-key-prefix layout): a touched group's rows then all live in
-    touched directories, so the pre-merge replaced-row derivation, the
-    post-merge recompute, and the shared cross-view slice each cost
-    O(touched partitions) — never a base scan.  The same merge-key
-    contract as the loader applies (merge keys include/determine the
-    partition column).
-    """
-    for v in views:
-        if partition_col not in v.keys:
-            raise ValueError(
-                f"view {v.schema}.{v.table}: partition column "
-                f"{partition_col!r} must be one of its group keys "
-                f"{v.keys} for pruned maintenance"
-            )
-    if not views:
-        loader.load_incremental_partitioned(
-            batch, unique_keys, partition_col, order_col=order_col
-        )
-        return
-    sess = batch.sparkSession
-    touched = [
-        v.sync_upsert_partitioned(
-            loader.schema, loader.table, partition_col, batch, unique_keys
-        )
-        for v in views
-    ]
-    loader.load_incremental_partitioned(
-        batch, unique_keys, partition_col, order_col=order_col
-    )
-    tp = loader.wh.table_path(loader.schema, loader.table)
-    full_base = sess.read.parquet(str(tp))
-    # one pruned read covering every view's touched partitions
-    vals = touched[0].select(partition_col)
-    for t in touched[1:]:
-        vals = vals.unionByName(t.select(partition_col))
-    pruned = loader.wh.read_partitions(
-        loader.schema, loader.table, partition_col,
-        [r[0] for r in vals.distinct().collect()], session=sess,
-    )
-    if pruned is None:
-        pruned = full_base.limit(0)
-    _apply_views_one_pass(pruned, full_base, views, touched)
 
 
 class StreamingMatView:

@@ -50,44 +50,21 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
 #: pins the 50-slot window explicitly so coverage is deliberate, not an
 #: accident of module import order.
 #:
-#: Rotation rule (round-5 addition, per r4 ADVICE): a query whose
-#: IMPLEMENTATION is materially rewritten counts as a NEW flagship —
-#: its old driver-green row proved the old code, so it re-enters the
-#: window for one round alongside genuinely new registrations.
+#: Rotation rule: a query whose IMPLEMENTATION is materially rewritten
+#: counts as a NEW flagship — its old driver-green row proved the old
+#: code, so it re-enters the window for one round alongside genuinely
+#: new registrations.
 #:
-#: Round-12 rotation (r11 VERDICT item 3): CORRECTNESS_r11 verified all
-#: 50 r11 seats, so unchanged r11 seats rotate out.  This window seats
-#: the canary, the round-12 NEW composition gate (matview algebra over
-#: the frozen-classifier keeps — r11 VERDICT item 4), the round-12
-#: REWRITES (the matview gates re-enter because pipeline/matview.py was
-#: materially extended this round — auto buckets, partitioned-base
-#: pruning, the shared post-merge pass; profile_key_skew and
-#: dedup_method_agreement re-enter because their scalar crossJoins
-#: gained the broadcast hint, a physical-plan change), then fills with
-#: the STALEST driver rows: the 20 remaining r7-vintage rows (promised
-#: in the r11 rotation note) and the alphabetically-first 22 of the r8
-#: vintage.  Every name here has a SQL oracle — zero rows-only checks
-#: in-window.
+#: Every name here has a SQL oracle — zero rows-only checks in-window.
 DRIVER_WINDOW: list[str] = [
-    # canary for the rounds-1/2 decimal→double fix (driver-green r3-r11)
     "pricing_summary",
-    # --- round-12 NEW: matview × model-registry composition (the view
-    # absorbs batches a frozen NB model gated; oracle embeds the
-    # registered classifier oracle verbatim) ---
     "pipeline_matview_classified_append",
-    # --- round-12 REWRITE: pipeline/matview.py materially extended
-    # (state_buckets='auto', partition-pruned recompute, one shared
-    # post-merge pass) — its gates re-enter per the standing rule ---
     "pipeline_matview_append_combine",
     "pipeline_matview_star_append",
     "pipeline_matview_update_recompute",
     "pipeline_matview_delete_groups",
-    # --- round-12 REWRITE: scalar-attach plans gained the broadcast
-    # hint (functions/scalars.scalar_cross) ---
     "profile_key_skew",
     "dedup_method_agreement",
-    # --- round-12 re-confirmation fill: the 20 remaining r7-vintage
-    # rows first ---
     "sessionize_events",
     "setop_except",
     "setop_intersect",
@@ -108,8 +85,6 @@ DRIVER_WINDOW: list[str] = [
     "window_lag_delta",
     "window_rank_dense",
     "window_topk_per_group",
-    # --- then the alphabetically-first 22 of the r8 vintage (the 22
-    # remaining r8 rows rotate in next round) ---
     "agg_string_concat",
     "cogroup_asof_alignment",
     "cohort_weekly_retention",

@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.operators.ivf_index import IvfIndex
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def run_ivf_ingest_stream(
@@ -71,9 +72,4 @@ def run_ivf_ingest_stream(
         if fresh.limit(1).count() > 0:
             index.ingest(fresh)
 
-    return (
-        vec_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(vec_stream, ingest, checkpoint_dir)

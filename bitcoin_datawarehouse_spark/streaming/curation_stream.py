@@ -83,6 +83,7 @@ from bitcoin_datawarehouse_spark.operators.embeddings_extra import (
 )
 from bitcoin_datawarehouse_spark.operators.lsh_index import LshDedupIndex
 from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def _py_round6(x: float) -> float:
@@ -536,9 +537,4 @@ def run_curation_stream(
         if fresh.limit(1).count() > 0:
             chunk_index.ingest(fresh)
 
-    return (
-        doc_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(doc_stream, ingest, checkpoint_dir)

@@ -59,6 +59,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.operators.dedup import shingle_sets_frame
 from bitcoin_datawarehouse_spark.operators.lsh_index import LshDedupIndex
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def run_lsh_dedup_stream(
@@ -139,9 +140,4 @@ def run_lsh_dedup_stream(
         finally:
             docsets.unpersist()
 
-    return (
-        doc_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(doc_stream, ingest, checkpoint_dir)

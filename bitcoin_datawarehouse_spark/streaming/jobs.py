@@ -24,6 +24,8 @@ Design notes for scale:
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -117,6 +119,25 @@ def dedup_within_watermark(
     )
 
 
+def start_available_now(
+    stream: DataFrame,
+    body: Callable[[DataFrame, int], None],
+    checkpoint_dir: str,
+) -> StreamingQuery:
+    """Start ``stream`` with ``body(batch_df, batch_id)`` as its
+    ``foreachBatch`` and an ``availableNow`` trigger: drain everything
+    the source holds, then stop (tests and backfills; the checkpoint in
+    ``checkpoint_dir`` carries the committed offsets across restarts).
+    Every stream in this package starts here, so the trigger policy
+    has one owner."""
+    return (
+        stream.writeStream.foreachBatch(body)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def merge_stream_into_table(
     events: DataFrame,
     wh: Warehouse,
@@ -125,12 +146,19 @@ def merge_stream_into_table(
     keys: list[str],
     checkpoint_dir: str,
     order_col: str | None = "ts",
+    partition_col: str | None = None,
 ) -> StreamingQuery:
     """Run the batch layer's incremental merge per micro-batch.
 
     Each micro-batch is deduped on ``keys`` and upserted into the
     parquet target — the reference's staged upsert (pg_loader.py:219-270)
-    as a continuous process.  Idempotent under micro-batch replay.
+    as a continuous process.  Idempotent under micro-batch replay:
+    replays upsert the same keys.  The merge follows the target's
+    layout (``Loader.load_incremental``): a Hive-partitioned target —
+    ``partition_col`` lays out one the first micro-batch creates —
+    rewrites only the partitions each micro-batch touches, so a steady
+    stream into a growing fact costs O(touched partitions) per trigger,
+    not O(history).
     """
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -138,57 +166,11 @@ def merge_stream_into_table(
             return
         bwh = Warehouse(batch_df.sparkSession, str(wh.root), wh.keep_versions)
         Loader(bwh, schema, table).load_incremental(
-            batch_df, unique_keys=keys, order_col=order_col
-        )
-
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def merge_stream_into_partitioned_table(
-    events: DataFrame,
-    wh: Warehouse,
-    schema: str,
-    table: str,
-    keys: list[str],
-    partition_col: str,
-    checkpoint_dir: str,
-    order_col: str | None = "ts",
-) -> StreamingQuery:
-    """The fact-scale streaming merge: each micro-batch upserts
-    through ``Loader.load_incremental_partitioned``, rewriting ONLY
-    the partitions the batch touches.
-
-    ``merge_stream_into_table`` rewrites the whole target per
-    micro-batch — right for dimension-sized targets, O(N·history) for
-    a long-running stream into a growing fact (measured: the sf10 row
-    in SCALING.md's streaming table).  Here a steady stream of
-    current-day events costs O(touched partitions) per trigger
-    forever.  Same idempotence story: replays upsert the same keys
-    into the same partitions.
-    """
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        bwh = Warehouse(batch_df.sparkSession, str(wh.root), wh.keep_versions)
-        Loader(bwh, schema, table).load_incremental_partitioned(
-            batch_df,
-            unique_keys=keys,
+            batch_df, unique_keys=keys, order_col=order_col,
             partition_col=partition_col,
-            order_col=order_col,
         )
 
-    return (
-        events.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, merge_batch, checkpoint_dir)
 
 
 def scd2_stream_into_table(
@@ -240,12 +222,7 @@ def scd2_stream_into_table(
             order_col=ts_col,
         )
 
-    return (
-        events.writeStream.foreachBatch(scd2_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, scd2_batch, checkpoint_dir)
 
 
 def drift_monitor_stream(
@@ -324,12 +301,7 @@ def drift_monitor_stream(
         )
         bwh.append(row.coalesce(1), schema, ledger_table)
 
-    return (
-        events.writeStream.foreachBatch(monitor_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(events, monitor_batch, checkpoint_dir)
 
 
 def run_stream_to_completion(query: StreamingQuery, timeout_s: float = 300.0) -> None:

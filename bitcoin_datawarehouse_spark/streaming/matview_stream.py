@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.pipeline.matview import StreamingMatView
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def run_matview_stream(
@@ -35,12 +36,7 @@ def run_matview_stream(
         # checkpoint needed; state reads go through the batch session
         view.absorb(batch_df, batch_id)
 
-    return (
-        fact_stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(fact_stream, absorb, checkpoint_dir)
 
 
 def run_delta_matview_stream(
@@ -65,9 +61,4 @@ def run_delta_matview_stream(
         if compact_every and view.pending_deltas(sess) >= compact_every:
             view.compact(sess)
 
-    return (
-        fact_stream.writeStream.foreachBatch(absorb)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(fact_stream, absorb, checkpoint_dir)

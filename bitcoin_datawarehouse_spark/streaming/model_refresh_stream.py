@@ -44,6 +44,7 @@ from bitcoin_datawarehouse_spark.pipeline.model_registry import (
     RefreshPolicy,
 )
 from bitcoin_datawarehouse_spark.functions.localframe import local_rows_df
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 #: where the accumulated corpus and the decision log live
 REFRESH_SCHEMA = "models_meta"
@@ -113,9 +114,4 @@ def run_model_refresh_stream(
             log_table,
         )
 
-    return (
-        doc_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(doc_stream, ingest, checkpoint_dir)

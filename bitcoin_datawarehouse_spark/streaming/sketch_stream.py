@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.operators.sketches import HllSketchTable
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def run_hll_sketch_stream(
@@ -39,9 +40,4 @@ def run_hll_sketch_stream(
         # collapses the batch to register rows in its first aggregate
         table.ingest(batch_df.select(*table.group_cols, "hkey"))
 
-    return (
-        keyed_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(keyed_stream, ingest, checkpoint_dir)

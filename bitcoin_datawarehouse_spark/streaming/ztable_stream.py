@@ -32,6 +32,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from bitcoin_datawarehouse_spark.functions.cachereg import cache_tracked
 from bitcoin_datawarehouse_spark.operators.ztable import ZOrderedTable
+from bitcoin_datawarehouse_spark.streaming.jobs import start_available_now
 
 
 def run_ztable_ingest_stream(
@@ -81,9 +82,4 @@ def run_ztable_ingest_stream(
         finally:
             fresh.unpersist()
 
-    return (
-        row_stream.writeStream.foreachBatch(ingest)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_available_now(row_stream, ingest, checkpoint_dir)

@@ -388,13 +388,14 @@ def test_streaming_vacuum_ignores_sibling_tables(spark, tmp_path):
     assert "live__graph" in wh.list_tables("mv")  # sibling untouched
 
 
-def test_sync_views_rejects_partitioned_base_layout(spark, tmp_warehouse):
-    """r11 ADVICE: a base seeded via the PARTITIONED loader path made
-    the flat existence probe return False, silently skipping the
-    replaced-rows pass — views went stale with no error.  The flat
-    wiring now fails loudly on the layout mismatch."""
-    import pytest
-
+def test_sync_views_through_merge_follows_partitioned_base(
+    spark, tmp_warehouse
+):
+    """r11 ADVICE: a base seeded Hive-partitioned made the flat
+    existence probe return False, silently skipping the replaced-rows
+    pass — views went stale with no error.  The sync now reads the
+    base's layout from disk and maintains the views through the
+    touched-partition merge."""
     from bitcoin_datawarehouse_spark.pipeline import Loader
     from bitcoin_datawarehouse_spark.pipeline.matview import (
         sync_views_through_merge,
@@ -402,14 +403,18 @@ def test_sync_views_rejects_partitioned_base_layout(spark, tmp_warehouse):
 
     wh = Warehouse(spark, tmp_warehouse)
     loader = Loader(wh, "facts", "t")
-    loader.load_incremental_partitioned(
-        _mk(spark, [("a", 1, 10.0), ("b", 2, 5.0)]), ["id"], "g"
+    loader.load_incremental(
+        _mk(spark, [("a", 1, 10.0), ("b", 2, 5.0)]), ["id"],
+        partition_col="g",
     )
     v = _view(wh, "rollup")
-    with pytest.raises(ValueError, match="partitioned layout"):
-        sync_views_through_merge(
-            loader, [v], _mk(spark, [("a", 3, 7.0)]), ["id"]
-        )
+    v.full_refresh(wh.read("facts", "t"))
+    sync_views_through_merge(
+        loader, [v], _mk(spark, [("a", 1, 7.0), ("a", 3, 2.0)]), ["id"]
+    )
+    assert wh.partition_cols("facts", "t") == ["g"]
+    assert wh.read("facts", "t").count() == 3
+    assert _snap(v) == _expected(wh, spark, wh.read("facts", "t"), "pbase")
 
 
 # --- round 12: auto-sized buckets, partition-pruned recompute, shared pass
@@ -492,61 +497,72 @@ def test_rebucket_resizes_after_growth(spark, tmp_warehouse):
     assert len(dirs) > 8
 
 
-def test_apply_changes_partitioned_prunes_and_matches(spark, tmp_warehouse):
+def test_sync_views_over_partitioned_base_prunes_and_matches(
+    spark, tmp_warehouse, monkeypatch
+):
     """The r11 'what's wrong #1' fix: against a group-key-partitioned
-    base, the recompute READS only the touched groups' partition
-    directories (inputFiles proves it) and the spliced view still
-    equals a from-scratch rebuild."""
+    base, every base read of the sync — the replaced rows before the
+    merge, the merge itself, the recompute after it — opens only the
+    touched groups' partition directories (inputFiles proves it) and
+    the spliced view still equals a from-scratch rebuild."""
     from bitcoin_datawarehouse_spark.pipeline import Loader
+    from bitcoin_datawarehouse_spark.pipeline.matview import (
+        sync_views_through_merge,
+    )
 
     wh = Warehouse(spark, tmp_warehouse)
     loader = Loader(wh, "facts", "pt")
     base = _mk(spark, [(f"g{i % 10}", i, float(i)) for i in range(200)])
-    loader.load_incremental_partitioned(base, ["id"], "g")
+    loader.load_incremental(base, ["id"], partition_col="g")
     v = _view(wh, "proll")
     v.full_refresh(wh.read("facts", "pt"))
 
+    opened: list[list[str]] = []
+    read_partitions = Warehouse.read_partitions
+
+    def spy(self, *args, **kwargs):
+        df = read_partitions(self, *args, **kwargs)
+        opened.append([] if df is None else df.inputFiles())
+        return df
+
+    monkeypatch.setattr(Warehouse, "read_partitions", spy)
     # in-place update of g3 + a brand-new id in g7 (no partition
     # migration — the partitioned merge contract forbids it)
     batch = _mk(spark, [("g3", 3, 999.0), ("g7", 1000, 1.0)])
-    touched = v.sync_upsert_partitioned("facts", "pt", "g", batch, ["id"])
-    loader.load_incremental_partitioned(batch, ["id"], "g")
-
-    vals = [r[0] for r in touched.select("g").distinct().collect()]
-    pruned = wh.read_partitions("facts", "pt", "g", vals)
-    files = pruned.inputFiles()
-    assert files
+    sync_views_through_merge(loader, [v], batch, ["id"])
+    assert len(opened) == 3 and all(opened), opened
+    files = [f for fs in opened for f in fs]
     assert all(("/g=g3/" in f) or ("/g=g7/" in f) for f in files), files
-
-    v.apply_changes_partitioned("facts", "pt", "g", touched)
     assert _snap(v) == _expected(wh, spark, wh.read("facts", "pt"), "pexp")
 
 
-def test_apply_changes_partitioned_rejects_non_key_partition(
-    spark, tmp_warehouse
-):
+def test_sync_views_rejects_non_key_partition(spark, tmp_warehouse):
     from bitcoin_datawarehouse_spark.pipeline import Loader
+    from bitcoin_datawarehouse_spark.pipeline.matview import (
+        sync_views_through_merge,
+    )
 
     wh = Warehouse(spark, tmp_warehouse)
-    Loader(wh, "facts", "pt2").load_incremental_partitioned(
-        _mk(spark, [("a", 1, 1.0)]), ["id"], "g"
+    loader = Loader(wh, "facts", "pt2")
+    loader.load_incremental(
+        _mk(spark, [("a", 1, 1.0)]), ["id"], partition_col="id"
     )
     v = _view(wh, "vx")
     with pytest.raises(ValueError, match="group keys"):
-        v.apply_changes_partitioned(
-            "facts", "pt2", "id", _mk(spark, [("a", 1, 1.0)]).select("g")
+        sync_views_through_merge(
+            loader, [v], _mk(spark, [("a", 1, 2.0)]), ["id"]
         )
 
 
-def test_sync_views_through_partitioned_merge_multi_view(
+def test_sync_views_through_merge_partitioned_multi_view(
     spark, tmp_warehouse
 ):
-    """The packaged partitioned wiring: two views stay consistent
-    through first-sync bootstrap, an update batch, and an insert-only
-    batch — each maintained from pruned reads and one shared slice."""
+    """The partitioned wiring: two views stay consistent through
+    first-sync bootstrap, an update batch, and an insert-only batch —
+    each maintained from pruned reads and one shared slice."""
     from bitcoin_datawarehouse_spark.pipeline import Loader
     from bitcoin_datawarehouse_spark.pipeline.matview import (
-        sync_views_through_partitioned_merge,
+        sync_views_through_merge,
     )
 
     wh = Warehouse(spark, tmp_warehouse)
@@ -557,12 +573,13 @@ def test_sync_views_through_partitioned_merge_multi_view(
                                        Measure("hi", "max", "v")]
     )
     b1 = _mk(spark, [(f"g{i % 5}", i, float(i)) for i in range(50)])
-    sync_views_through_partitioned_merge(loader, [v1, v2], b1, ["id"], "g")
+    sync_views_through_merge(loader, [v1, v2], b1, ["id"], partition_col="g")
+    assert wh.partition_cols("facts", "pw") == ["g"]
     base = wh.read("facts", "pw")
     assert _snap(v1) == _expected(wh, spark, base, "pw1")
 
     b2 = _mk(spark, [("g2", 2, -50.0), ("g4", 500, 99.0)])
-    sync_views_through_partitioned_merge(loader, [v1, v2], b2, ["id"], "g")
+    sync_views_through_merge(loader, [v1, v2], b2, ["id"])
     base = wh.read("facts", "pw")
     assert _snap(v1) == _expected(wh, spark, base, "pw2")
     lo_hi = {r[0]: (r[1], r[2]) for r in v2.read().collect()}

@@ -499,6 +499,41 @@ def test_pipeline_first_sync_then_incremental_watermark(spark, wh):
     assert status["status"] == 1 and status["end_ts"] is not None
 
 
+def test_pipeline_merges_into_partitioned_target(spark, wh):
+    """A job whose target was seeded Hive-partitioned: the watermark
+    probe reads the partitioned table, the delta merges into the
+    touched days only, and the target stays partitioned."""
+    batches = []
+
+    def source_fn(params):
+        batches.append(params)
+        return [
+            {"id": 2, "date": "2025-01-02", "v": 22.0},  # update
+            {"id": 3, "date": "2025-01-03", "v": 3.0},  # insert
+        ]
+
+    seed = [
+        {"id": 1, "date": "2025-01-01", "v": 1.0},
+        {"id": 2, "date": "2025-01-02", "v": 2.0},
+    ]
+    wh.create_schema("bitcoin")
+    root = wh.table_path("bitcoin", "tpart")
+    rows_df(spark, seed).write.partitionBy("date").parquet(str(root))
+    day1 = sorted(p.name for p in (root / "date=2025-01-01").iterdir())
+    _seed_jobs(spark, wh, [{
+        "job_name": "jp", "query_id": 7, "target_table": "tpart",
+        "p_key": "id", "status": 0, "active": 1,
+        "incremental_column": "date",
+    }])
+    results = Pipeline(spark, wh, StaticSource({7: source_fn})).run()
+    assert [r.ok for r in results] == [True], results
+    assert batches == ["2025-01-02"]  # a delta fetch, not a first sync
+    got = {r["id"]: r["v"] for r in wh.read("bitcoin", "tpart").collect()}
+    assert got == {1: 1.0, 2: 22.0, 3: 3.0}
+    assert wh.partition_cols("bitcoin", "tpart") == ["date"]
+    assert sorted(p.name for p in (root / "date=2025-01-01").iterdir()) == day1
+
+
 def test_pipeline_continue_on_error_and_ledger(spark, wh):
     def broken(params):
         raise ValueError("source exploded")
@@ -614,9 +649,9 @@ def test_compaction_preserves_partitioned_layout(spark, wh):
 
 
 def test_compaction_preserves_multilevel_partitioned_layout(spark, wh):
-    """Regression: table_exists_partitioned probed only ONE directory
-    level, so a day=*/hour=* table compacted to an unpartitioned flat
-    file — silently destroying two levels of pruning."""
+    """Regression: a layout probe that looked only ONE directory level
+    down compacted a day=*/hour=* table to an unpartitioned flat file —
+    silently destroying two levels of pruning."""
     rows = [
         {"id": d * 100 + h * 10 + i, "day": f"2025-02-0{d}", "hour": h,
          "v": float(i)}
@@ -629,7 +664,7 @@ def test_compaction_preserves_multilevel_partitioned_layout(spark, wh):
         rows_df(spark, chunk).write.mode("append").partitionBy(
             "day", "hour"
         ).parquet(str(wh.table_path("bitcoin", "mcmp")))
-    assert wh.table_exists_partitioned("bitcoin", "mcmp")
+    assert wh.partition_cols("bitcoin", "mcmp") == ["day", "hour"]
     wh.compact("bitcoin", "mcmp")
     p = wh.table_path("bitcoin", "mcmp")
     assert (p / "day=2025-02-01" / "hour=0").is_dir()
@@ -683,22 +718,13 @@ def test_warehouse_lock_mutual_exclusion(spark, wh):
 
 
 def test_warehouse_lock_is_free_after_its_holder_dies(wh):
-    """A holder SIGKILLed inside the lock (no ``finally`` runs) and a
-    ``.lock_*`` directory left by the earlier mkdir-based lock both
-    leave the lock free: the next caller takes it at once instead of
-    waiting out its timeout."""
+    """A holder SIGKILLed inside the lock (no ``finally`` runs) leaves
+    the lock free: the next caller takes it at once instead of waiting
+    out its timeout."""
     import signal
     import subprocess
     import sys
     from pathlib import Path
-
-    legacy = wh.root / ".lock_pipeline"
-    legacy.mkdir()
-    (legacy / "pid").write_text("999999")
-    t0 = time.monotonic()
-    with wh.lock("pipeline", timeout_s=1.0):
-        pass
-    assert time.monotonic() - t0 < 0.5
 
     code = (
         "import os, signal, sys\n"
@@ -724,7 +750,7 @@ def test_partitioned_merge_touches_only_batch_partitions(spark, wh):
     ld = Loader(wh, "bitcoin", "fact")
     day1 = [{"id": i, "day": "2025-01-01", "v": float(i)} for i in range(4)]
     day2 = [{"id": 10 + i, "day": "2025-01-02", "v": float(i)} for i in range(4)]
-    ld.load_incremental_partitioned(
+    ld.load_incremental(
         rows_df(spark, day1 + day2), ["id"], partition_col="day"
     )
     p1 = wh.table_path("bitcoin", "fact") / "day=2025-01-01"
@@ -736,9 +762,7 @@ def test_partitioned_merge_touches_only_batch_partitions(spark, wh):
         {"id": 10, "day": "2025-01-02", "v": 99.0},
         {"id": 20, "day": "2025-01-02", "v": 5.0},
     ]
-    ld.load_incremental_partitioned(
-        rows_df(spark, batch), ["id"], partition_col="day"
-    )
+    ld.load_incremental(rows_df(spark, batch), ["id"])
     files_after = {f: os.path.getmtime(p1 / f) for f in os.listdir(p1)
                    if f.endswith(".parquet")}
     assert files_before == files_after  # day-1 files physically untouched
@@ -750,6 +774,78 @@ def test_partitioned_merge_touches_only_batch_partitions(spark, wh):
     assert len(got) == 9  # 4 (day1) + 4 original day2 rows + 1 insert
 
 
+def test_loader_follows_partitioned_layout_on_disk(spark, wh):
+    """The layout on disk picks the merge, whoever wrote the table: a
+    30-row target Hive-partitioned by ``day`` keeps its history through
+    ``load_incremental``, the untouched days' files stay byte-identical,
+    the probes read it, and a delete or a full refresh keeps it
+    partitioned."""
+    import hashlib
+
+    seed = [
+        {"id": 10 * d + i, "day": f"2025-01-0{d}", "v": float(i)}
+        for d in (1, 2, 3)
+        for i in range(10)
+    ]
+    root = wh.table_path("bitcoin", "pfact")
+    wh.create_schema("bitcoin")
+    rows_df(spark, seed).write.partitionBy("day").parquet(str(root))
+    ld = Loader(wh, "bitcoin", "pfact")
+    assert ld.get_record_count() == 30
+    assert str(ld.get_max_value("day")) == "2025-01-03"
+    assert wh.partition_cols("bitcoin", "pfact") == ["day"]
+
+    def untouched():
+        return {
+            str(f.relative_to(root)): hashlib.md5(f.read_bytes()).hexdigest()
+            for f in root.rglob("*.parquet")
+            if f.parent.name != "day=2025-01-03"
+        }
+
+    before = untouched()
+    batch = [
+        {"id": 30, "day": "2025-01-03", "v": 99.0},  # update
+        {"id": 40, "day": "2025-01-03", "v": 7.0},  # insert
+    ]
+    assert ld.load_incremental(rows_df(spark, batch), ["id"]) == 11
+    assert untouched() == before
+    got = {r["id"]: r["v"] for r in wh.read("bitcoin", "pfact").collect()}
+    assert len(got) == 31 and got[30] == 99.0 and got[40] == 7.0
+    assert all(got[10 * d + i] == float(i) for d in (1, 2) for i in range(10))
+    assert ld.get_record_count() == 31
+
+    with pytest.raises(ValueError, match="contradicts"):
+        ld.load_incremental(rows_df(spark, batch), ["id"], partition_col="v")
+
+    assert ld.delete_by_condition("id = 10") == 1
+    assert wh.partition_cols("bitcoin", "pfact") == ["day"]
+    assert ld.get_record_count() == 30
+    ld.load_full_refresh(rows_df(spark, seed[:20]))
+    assert wh.partition_cols("bitcoin", "pfact") == ["day"]
+    assert ld.get_record_count() == 20
+    assert str(ld.get_max_value("day")) == "2025-01-02"
+
+
+def test_scd2_keeps_partitioned_layout(spark, wh):
+    """An SCD2 dimension laid out by region stays laid out by region
+    through a load that closes and opens versions."""
+    ld = Loader(wh, "dim", "pcust")
+    v1 = [
+        {"id": 1, "region": "eu", "bal": 1.0},
+        {"id": 2, "region": "us", "bal": 2.0},
+    ]
+    ld.load_scd2(rows_df(spark, v1), ["id"], batch_ts="2024-01-01")
+    wh.write_atomic(
+        wh.read("dim", "pcust"), "dim", "pcust", partition_by=["region"]
+    )
+    v2 = [{**v1[0], "bal": 5.0}, v1[1]]
+    ld.load_scd2(rows_df(spark, v2), ["id"], batch_ts="2024-02-01")
+    assert wh.partition_cols("dim", "pcust") == ["region"]
+    assert wh.read("dim", "pcust").count() == 3
+    cur = {r["id"]: r["bal"] for r in ld.current_of().collect()}
+    assert cur == {1: 5.0, 2: 2.0}
+
+
 def test_partitioned_merge_new_and_mixed_partition_batches(spark, wh):
     """The pruned touched-dir read (r6): a batch whose partition
     values have NO existing directory must merge as a pure insert
@@ -758,20 +854,16 @@ def test_partitioned_merge_new_and_mixed_partition_batches(spark, wh):
     the latter in a single call."""
     ld = Loader(wh, "bitcoin", "prune")
     day1 = [{"id": i, "day": "2025-01-01", "v": float(i)} for i in range(3)]
-    ld.load_incremental_partitioned(
-        rows_df(spark, day1), ["id"], partition_col="day"
-    )
+    ld.load_incremental(rows_df(spark, day1), ["id"], partition_col="day")
     # batch of ONLY a new day: no touched dir exists yet
-    ld.load_incremental_partitioned(
-        rows_df(spark, [{"id": 50, "day": "2025-01-05", "v": 5.0}]),
-        ["id"],
-        partition_col="day",
+    ld.load_incremental(
+        rows_df(spark, [{"id": 50, "day": "2025-01-05", "v": 5.0}]), ["id"]
     )
     got = {r["id"]: r for r in wh.read("bitcoin", "prune").collect()}
     assert len(got) == 4 and str(got[50]["day"]) == "2025-01-05"
 
     # mixed batch: update id=0 in day 1, insert a new day 2025-01-09
-    ld.load_incremental_partitioned(
+    ld.load_incremental(
         rows_df(
             spark,
             [
@@ -780,7 +872,6 @@ def test_partitioned_merge_new_and_mixed_partition_batches(spark, wh):
             ],
         ),
         ["id"],
-        partition_col="day",
     )
     got = {r["id"]: r for r in wh.read("bitcoin", "prune").collect()}
     assert len(got) == 5
@@ -790,16 +881,18 @@ def test_partitioned_merge_new_and_mixed_partition_batches(spark, wh):
 
 
 def test_partitioned_merge_refuses_flat_target(spark, wh):
-    """A partitioned merge into a FLAT table would orphan the flat files
-    beside its new ``col=value`` directories, and reads would return the
-    batch alone.  It must refuse and leave the table as it was."""
+    """A ``partition_col`` lays out only a table the load creates: one
+    that contradicts the FLAT layout on disk is refused, and the table
+    is left as it was."""
     ld = Loader(wh, "bitcoin", "flat")
     ld.load_full_refresh(spark.range(10))
-    with pytest.raises(ValueError, match="flat layout"):
-        ld.load_incremental_partitioned(
-            spark.range(5, 8).withColumn("d", F.col("id") % 2), ["id"], "d"
+    with pytest.raises(ValueError, match="contradicts"):
+        ld.load_incremental(
+            spark.range(5, 8).withColumn("d", F.col("id") % 2), ["id"],
+            partition_col="d",
         )
     assert ld.get_record_count() == 10
+    assert wh.partition_cols("bitcoin", "flat") == []
 
 
 def test_partitioned_merge_survives_hive_escaped_partition_values(
@@ -818,9 +911,7 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
         for i, p in enumerate(weird)
         for j in range(3)
     ]
-    ld.load_incremental_partitioned(
-        rows_df(spark, seed), ["id"], partition_col="part"
-    )
+    ld.load_incremental(rows_df(spark, seed), ["id"], partition_col="part")
     # dirs really are escaped on disk (the hazard exists)
     import os
 
@@ -832,9 +923,7 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
     for i, p in enumerate(weird):
         batch.append({"id": 10 * i, "part": p, "v": 99.0})      # update
         batch.append({"id": 10 * i + 7, "part": p, "v": 7.0})   # insert
-    ld.load_incremental_partitioned(
-        rows_df(spark, batch), ["id"], partition_col="part"
-    )
+    ld.load_incremental(rows_df(spark, batch), ["id"])
     got = {r["id"]: r for r in wh.read("bitcoin", "esc").collect()}
     assert len(got) == len(seed) + len(weird)  # nothing lost
     for i, p in enumerate(weird):
@@ -850,7 +939,7 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
     from bitcoin_datawarehouse_spark.pipeline.matview import (
         MaterializedAggView,
         Measure,
-        sync_views_through_partitioned_merge,
+        sync_views_through_merge,
     )
 
     view = MaterializedAggView(
@@ -860,8 +949,8 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
     )
     base = Loader(wh, "bitcoin", "esc_mv")
     for rows in (seed, batch):
-        sync_views_through_partitioned_merge(
-            base, [view], rows_df(spark, rows), ["id"], "part"
+        sync_views_through_merge(
+            base, [view], rows_df(spark, rows), ["id"], partition_col="part"
         )
     names = os.listdir(wh.table_path("mv", "esc_roll"))
     assert any("%3A" in n for n in names), names
@@ -870,27 +959,29 @@ def test_partitioned_merge_survives_hive_escaped_partition_values(
 
 
 def test_partitioned_write_hot_partition_split(spark, wh):
-    """max_records_per_file is the hot-day lever: with the default a
-    whole partition is one task's single file; with a record cap the
-    writer rolls files within the partition dir — results identical,
-    multiple files per hot partition."""
+    """Spark's ``spark.sql.files.maxRecordsPerFile`` is the hot-day
+    lever: with the default a merged partition is one task's single
+    file; with a record cap the writer rolls files within the partition
+    dir — results identical, multiple files per hot partition."""
     import os
 
     rows = [
         {"id": i, "day": "2025-02-0%d" % (1 + i % 2), "v": float(i)}
         for i in range(400)
     ]
-    ld1 = Loader(wh, "bitcoin", "hot1")
-    ld1.load_incremental_partitioned(
-        rows_df(spark, rows), ["id"], partition_col="day"
-    )
-    ld4 = Loader(wh, "bitcoin", "hot4")
-    ld4.load_incremental_partitioned(
-        rows_df(spark, rows),
-        ["id"],
-        partition_col="day",
-        max_records_per_file=50,
-    )
+    conf = "spark.sql.files.maxRecordsPerFile"
+    for table, cap in (("hot1", None), ("hot4", "50")):
+        ld = Loader(wh, "bitcoin", table)
+        # seed one row per day, then merge every row into both days
+        ld.load_incremental(
+            rows_df(spark, rows[:2]), ["id"], partition_col="day"
+        )
+        if cap:
+            spark.conf.set(conf, cap)
+        try:
+            ld.load_incremental(rows_df(spark, rows), ["id"])
+        finally:
+            spark.conf.unset(conf)
 
     def files_in(table, day):
         p = wh.table_path("bitcoin", table) / f"day={day}"
@@ -917,17 +1008,13 @@ def test_partitioned_merge_schema_evolution_behavior_and_read_path(
     column."""
     ld = Loader(wh, "bitcoin", "evo")
     day1 = [{"id": i, "day": "2025-01-01", "v": float(i)} for i in range(3)]
-    ld.load_incremental_partitioned(
-        rows_df(spark, day1), ["id"], partition_col="day"
-    )
+    ld.load_incremental(rows_df(spark, day1), ["id"], partition_col="day")
     # evolve: day-2 batch carries a NEW column
     day2 = [
         {"id": 10 + i, "day": "2025-01-02", "v": float(i), "src": "api"}
         for i in range(3)
     ]
-    ld.load_incremental_partitioned(
-        rows_df(spark, day2), ["id"], partition_col="day"
-    )
+    ld.load_incremental(rows_df(spark, day2), ["id"])
     path = str(wh.table_path("bitcoin", "evo"))
 
     # (a) failure shape, pinned: without mergeSchema Spark takes ONE

@@ -633,12 +633,14 @@ def test_vector_kernels_live_only_in_functions_vectors():
 def test_physical_layout_lives_only_in_catalog():
     """pipeline/catalog.py is the one owner of the warehouse's physical
     layout.  The dynamic partition-overwrite conf, the ``basePath``
-    partition read and the staging/snapshot directory names appear
-    nowhere else in the package, and nothing
+    partition read, the staging/snapshot directory names and the
+    parsing of ``col=value`` directory names appear nowhere else in
+    the package, and nothing
     reaches for partition helpers in the loader, which holds merge
     semantics only.  One sanctioned exception: ZOrderedTable's own
     z-block reads (operators/ztable.py), whose block directories live
-    under the z-table's path, not under a warehouse table."""
+    under the z-table's path, not under a warehouse table.  Callers
+    never name a layout: the per-layout entry points stay deleted."""
     import re
     from pathlib import Path
 
@@ -656,6 +658,15 @@ def test_physical_layout_lives_only_in_catalog():
         # staging and snapshot directory names: every directory replace
         # is staged and published by the catalog
         (re.compile(r"__tmp_|__v_"), {owner}),
+        # col=value directory names: split/partition on "=", an "="
+        # membership test, an f"{col}=" prefix or a "col=*" glob
+        (
+            re.compile(
+                r"""(split|partition|index|find)\(\s*["']=|["']=["']\s+in\b"""
+                r"""|\}=["']|=\*["']"""
+            ),
+            {owner},
+        ),
     ]
     offenders = []
     for py in sorted(pkg.rglob("*.py")):
@@ -684,6 +695,17 @@ def test_physical_layout_lives_only_in_catalog():
         + "\n".join(offenders)
     )
     assert not moved & set(vars(loader)), "partition helpers back in loader"
+    deleted = re.compile(
+        r"\b(load_incremental_partitioned|sync_views_through_partitioned_merge"
+        r"|apply_changes_partitioned|sync_upsert_partitioned"
+        r"|merge_stream_into_partitioned_table|table_exists_partitioned)\b"
+    )
+    back = [
+        f"{py.relative_to(root)}: {m.group()}"
+        for py in sorted(pkg.rglob("*.py"))
+        for m in deleted.finditer(py.read_text())
+    ]
+    assert not back, f"per-layout entry points are back: {back}"
 
 
 def test_pipeline_never_sets_session_conf():

@@ -110,14 +110,10 @@ def test_stream_merge_idempotent_and_exactly_once(spark, events_dir, tmp_path):
 
 
 def test_stream_merge_partitioned_matches_batch_and_replays(spark, tmp_path):
-    """The fact-scale streaming merge: micro-batched
-    load_incremental_partitioned ends bit-identical to one batch
-    partitioned load of the same rows, and a full fresh-checkpoint
-    replay is a no-op (key merge per partition)."""
-    from bitcoin_datawarehouse_spark.streaming.jobs import (
-        merge_stream_into_partitioned_table,
-    )
-
+    """The fact-scale streaming merge: micro-batched merges into a
+    day-partitioned target end bit-identical to one batch partitioned
+    load of the same rows, and a full fresh-checkpoint replay is a
+    no-op (key merge per partition)."""
     events = (
         load_table(spark, SF_SMALL, "events")
         .withColumn("day", F.to_date("ts"))
@@ -143,20 +139,21 @@ def test_stream_merge_partitioned_matches_batch_and_replays(spark, tmp_path):
 
     swh = Warehouse(spark, str(tmp_path / "swh"))
     run_stream_to_completion(
-        merge_stream_into_partitioned_table(
+        merge_stream_into_table(
             stream(), swh, "s", "events", keys=["event_id", "day"],
-            partition_col="day", checkpoint_dir=str(tmp_path / "ck1"),
+            checkpoint_dir=str(tmp_path / "ck1"), partition_col="day",
         )
     )
+    assert swh.partition_cols("s", "events") == ["day"]
     got = spark.read.option(
         "basePath", str(swh.table_path("s", "events"))
     ).parquet(str(swh.table_path("s", "events")))
     assert got.count() == n
 
     bwh = Warehouse(spark, str(tmp_path / "bwh"))
-    Loader(bwh, "s", "events").load_incremental_partitioned(
-        events, unique_keys=["event_id", "day"], partition_col="day",
-        order_col="ts",
+    Loader(bwh, "s", "events").load_incremental(
+        events, unique_keys=["event_id", "day"], order_col="ts",
+        partition_col="day",
     )
     want = spark.read.option(
         "basePath", str(bwh.table_path("s", "events"))
@@ -167,10 +164,11 @@ def test_stream_merge_partitioned_matches_batch_and_replays(spark, tmp_path):
     ) == sorted(map(tuple, want.select(*cols).collect()), key=repr)
 
     # fresh-checkpoint replay: same keys upsert into same partitions
+    # (the layout on disk picks the partitioned merge)
     run_stream_to_completion(
-        merge_stream_into_partitioned_table(
+        merge_stream_into_table(
             stream(), swh, "s", "events", keys=["event_id", "day"],
-            partition_col="day", checkpoint_dir=str(tmp_path / "ck2"),
+            checkpoint_dir=str(tmp_path / "ck2"),
         )
     )
     got2 = spark.read.option(

@@ -9,9 +9,10 @@ upsert, ``pg_loader.py:165-270``) — at a date-partitioned fact scale:
 * seed TWO targets with it: a Hive-partitioned-by-day table and a
   plain (unpartitioned) table;
 * merge the SAME 1-day batch (half updated rows, 10% new rows) into
-  both via ``Loader.load_incremental_partitioned`` vs
-  ``Loader.load_incremental`` and record wall clocks — the
-  O(touched-days) vs O(history) claim, measured;
+  both through ``Loader.load_incremental`` — each target's layout on
+  disk picks the touched-partition merge or the whole-table merge —
+  and record wall clocks: the O(touched-days) vs O(history) claim,
+  measured;
 * verify every UNTOUCHED partition's files are byte-identical after
   the partitioned merge (md5 of every parquet file), and that the
   touched day holds exactly the expected merged rows.
@@ -154,14 +155,14 @@ def main() -> int:
     # ---- partitioned target --------------------------------------------
     part_loader = Loader(wh, "probe", "fact_part")
     t0 = time.perf_counter()
-    part_loader.load_incremental_partitioned(fact, KEYS, PART_COL)
+    part_loader.load_incremental(fact, KEYS, partition_col=PART_COL)
     emit(step="seed_partitioned", sec=round(time.perf_counter() - t0, 1))
 
     part_path = Path(str(wh.table_path("probe", "fact_part")))
     before = md5_tree(part_path, skip_dir=f"{PART_COL}={target_day}")
 
     t0 = time.perf_counter()
-    part_loader.load_incremental_partitioned(batch, KEYS, PART_COL)
+    part_loader.load_incremental(batch, KEYS)
     t_part = time.perf_counter() - t0
     emit(step="merge_partitioned_1day", sec=round(t_part, 1))
 
